@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main (driver contract): runs every declared query on
   * SPARK_GRAFT_SF_DIR at local[32], forcing full materialization through
   * the noop sink (count() can short-circuit column reads; noop cannot),
@@ -14,26 +12,16 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    Graft.redirectTmpDir()
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    Graft.fastLocalDir().foreach(d => builder.config("spark.local.dir", d))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session(s"local[$cpus]", "graft-bench")
 
     // warm: footer reads + buffer cache + codegen of the scan paths
     // (events.ts is TIMESTAMP(NANOS) — needs the nanos-as-long legacy conf)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Tables.all.foreach(t => Tables.load(spark, sfDir, t).count())
     // pre-stage the streaming fixtures (sentinel files + kinesis shard
-    // logs) — one-time JVM-wide staging, not part of any query's timing
-    // — and the two memoized per-fixture tables (graph edge list, CC
-    // dedup labels) for the same reason: they model PERSISTED
+    // logs) — one-time staging, not part of any query's timing — and the
+    // memoized corpus-snapshot tables (Derived.stageAll lists every one)
+    // for the same reason: they model PERSISTED
     // corpus-snapshot tables (built once per corpus, read by every
     // consumer), so their one-time build is staging, not any single
     // query's time — previously whichever consumer ran first in the
@@ -44,17 +32,7 @@ object Bench {
     // reported as `staging_sec` in the artifact, so cross-round
     // comparisons of the consumer queries see where the build went.
     val stagingT0 = System.nanoTime()
-    streaming.RecordStream.eventsStreamWithSentinels(spark, sfDir)
-    streaming.RecordStream.kinesisFixture(spark, sfDir)
-    operators.GraphQueries.edges(spark, sfDir).count()
-    operators.DedupQueries.clusterLabels(spark, sfDir).count()
-    operators.DedupQueries.bandIndex(spark, sfDir)._1.count()
-    operators.DedupQueries.corpusClusterLabels(spark, sfDir).count()
-    // the persisted IVF index pair (r17): same maintained-table policy
-    operators.SimilarityQueries.ivfIndex(spark, sfDir)._1.count()
-    // the persisted sketch-partial tables: same maintained-pre-agg policy
-    operators.AggQueries.hllPartials(spark, sfDir).count()
-    operators.AggQueries.tdPartials(spark, sfDir).count()
+    Derived.stageAll(spark, sfDir)
     val stagingSec = (System.nanoTime() - stagingT0) / 1e9
 
     // Streaming throughput vs the reference's 2 rec/s producer ceiling

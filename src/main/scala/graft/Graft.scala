@@ -7,11 +7,11 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 /** Session factory for the engine.
   *
   * Settings are chosen for correctness parity with the DuckDB oracle (UTC
-  * session time zone) and for local[32] bench runs (32 shuffle partitions —
-  * matching core count, not the 200 default that over-schedules tiny
-  * shuffles). On a real cluster the same builder is used with
-  * `spark.sql.shuffle.partitions` sized to ~2-3× total cores and AQE left on
-  * to coalesce / skew-split at runtime.
+  * session time zone) and for local runs with one shuffle partition per
+  * core of the master (`local[N]` → N, `local[*]` → the host's cores), not
+  * the 200 default that over-schedules tiny shuffles. On a real cluster the
+  * same builder is used with `spark.sql.shuffle.partitions` sized to ~2-3×
+  * total cores and AQE left on to coalesce / skew-split at runtime.
   */
 object Graft {
   /** RAM-backed local scratch (optimization r17, guide §6 I/O layout):
@@ -56,8 +56,20 @@ object Graft {
       } catch { case _: Throwable => () }
     }
 
+  /** Cores a master runs tasks on: `local` → 1, `local[N]` / `local[N,F]`
+    * → N, `local[*]` and any other master → this host's processors.
+    */
+  private def masterCores(master: String): Int = {
+    val LocalN = """local\[(\d+)(?:,\d+)?\]""".r
+    master match {
+      case "local" => 1
+      case LocalN(n) => n.toInt
+      case _ => Runtime.getRuntime.availableProcessors
+    }
+  }
+
   def session(master: String = "local[*]", appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = masterCores(master).toString
     redirectTmpDir()
     val builder = SparkSession
       .builder()
@@ -110,31 +122,27 @@ object Tables {
   /** Relation memo (optimization r18, guide §6 listing cost): every
     * `spark.read.parquet` call re-lists the path and re-reads the footer
     * schema on the driver — ~20-60 ms of per-query ceremony that a real
-    * deployment pays ONCE per table via its catalog/metastore. Memoizing
-    * the resolved DataFrame per (session, dir, table) is exactly that
-    * catalog behavior: only the relation METADATA (schema + file index)
-    * is reused — execution still scans the parquet input every time, so
-    * no result or data caching is involved. Keyed on the session instance
-    * so a new session (fresh catalog state) re-resolves from scratch.
+    * deployment pays ONCE per table via its catalog/metastore. The resolved
+    * DataFrame is a [[Derived]] entry per (session, table file): only the
+    * relation METADATA (schema + file index) is reused — execution still
+    * scans the parquet input every time — and a table file rewritten in
+    * place re-resolves.
     */
-  private val relMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    relMemo.computeIfAbsent((spark, dir, name),
-      _ => spark.read.parquet(s"$dir/$name.parquet"))
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    Derived.get(spark, "table", Seq(path))(spark.read.parquet(path))
+  }
 
   /** Same relation memo for IMMUTABLE staging parquet paths (the
-    * memoized corpus-snapshot tables: graph edges, CC labels, band-index
-    * signatures, sketch partials — each written exactly once per fixture
-    * key and never overwritten). Mutable scratch dirs (e.g. the reused
-    * delta-closure output) must keep calling spark.read.parquet directly:
-    * a memoized relation would serve a stale file listing after an
-    * overwrite.
+    * corpus-snapshot tables: graph edges, CC labels, band-index
+    * signatures, sketch partials — each written exactly once per
+    * [[Derived]] entry and never overwritten). Mutable scratch dirs (e.g.
+    * the reused delta-closure output) must keep calling spark.read.parquet
+    * directly: a memoized relation would serve a stale file listing after
+    * an overwrite.
     */
   def loadPath(spark: SparkSession, path: String): DataFrame =
-    relMemo.computeIfAbsent((spark, path, "#path"),
-      _ => spark.read.parquet(path))
+    Derived.get(spark, "path", Nil, path)(spark.read.parquet(path))
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

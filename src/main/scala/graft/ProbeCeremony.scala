@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement tool (guide §1: measure first) — NOT part of the declared
   * query surface or the bench contract. Breaks a query's wall time into
   *   construct : DataFrame construction (table loads, any bounded collects)
@@ -16,28 +14,10 @@ object ProbeCeremony {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    Graft.redirectTmpDir()
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    Graft.fastLocalDir().foreach(d => builder.config("spark.local.dir", d))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session(s"local[$cpus]", "graft-probe-ceremony")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Tables.all.foreach(t => Tables.load(spark, sfDir, t).count())
-    streaming.RecordStream.eventsStreamWithSentinels(spark, sfDir)
-    streaming.RecordStream.kinesisFixture(spark, sfDir)
-    operators.GraphQueries.edges(spark, sfDir).count()
-    operators.DedupQueries.clusterLabels(spark, sfDir).count()
-    operators.DedupQueries.bandIndex(spark, sfDir)._1.count()
-    operators.DedupQueries.corpusClusterLabels(spark, sfDir).count()
-    operators.SimilarityQueries.ivfIndex(spark, sfDir)._1.count()
-    operators.AggQueries.hllPartials(spark, sfDir).count()
-    operators.AggQueries.tdPartials(spark, sfDir).count()
+    Derived.stageAll(spark, sfDir)
 
     val names =
       if (args.nonEmpty) args.toSeq

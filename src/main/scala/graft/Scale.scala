@@ -166,16 +166,7 @@ object BenchScale {
     // warm both corpora + pre-stage streaming fixtures outside any timing
     for (dir <- Seq(base, scaled)) {
       Tables.all.foreach(t => Tables.load(spark, dir, t).count())
-      streaming.RecordStream.eventsStreamWithSentinels(spark, dir)
-      streaming.RecordStream.kinesisFixture(spark, dir)
-      // pre-stage the memoized per-fixture tables (see Bench warmup)
-      operators.GraphQueries.edges(spark, dir).count()
-      operators.DedupQueries.clusterLabels(spark, dir).count()
-      operators.DedupQueries.bandIndex(spark, dir)._1.count()
-      operators.DedupQueries.corpusClusterLabels(spark, dir).count()
-      operators.SimilarityQueries.ivfIndex(spark, dir)._1.count()
-      operators.AggQueries.hllPartials(spark, dir).count()
-      operators.AggQueries.tdPartials(spark, dir).count()
+      Derived.stageAll(spark, dir)
     }
     // host-noise canary (same contract as Bench)
     val nEvents = Tables.events(spark, base).count()

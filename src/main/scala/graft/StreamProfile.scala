@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Instrumented solo profiler for the streaming ceremony-drift cluster
@@ -29,15 +28,7 @@ object StreamProfile {
       if (args.nonEmpty) args.toSeq
       else Seq("stream_dedup", "stream_dedup_within_watermark", "stream_sliding_counts")
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUNS", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session(s"local[$cpus]", "graft-stream-profile")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // same warm + staging protocol as Bench, so figures are comparable
     Tables.all.foreach(t => Tables.load(spark, sfDir, t).count())

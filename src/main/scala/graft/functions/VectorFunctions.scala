@@ -1,8 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain,
+  Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -143,58 +145,36 @@ case class L2Squared(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** SQL registration for the custom expressions: `cosine_sim(a, b)`,
-  * `dot_product(a, b)` become usable inside `expr(...)` strings and
-  * `spark.sql` once registered. Idempotent.
+/** The custom SQL functions, injected into every session at build time by
+  * [[graft.plans.GraftExtensions]] (so `expr(...)` strings and `spark.sql`
+  * resolve them with no per-query registration).
   */
 object GraftFunctions {
-  /** Once-per-session guard (optimization r18): queries call register()
-    * from their builders, so a 443-query sweep re-registered every
-    * function (and logged a "replaced a previously registered function"
-    * WARN for each) hundreds of times. Temp functions survive for the
-    * session lifetime — nothing drops them between queries — so the
-    * re-registration was pure per-query ceremony.
-    */
-  private val registered = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
+  type FunctionDescription = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  def register(spark: SparkSession): Unit = {
-    if (!registered.add(spark)) return
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "l2_sq", exprs => L2Squared(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinhashSignature(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash64", exprs => SimhashFingerprint(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "word_shingles", exprs => WordShingles(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction(
-      "char_ngrams", exprs => CharNgrams(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction(
-      "hyperplane_bucket", exprs => HyperplaneBucket(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction(
-      "max_token_count", exprs => MaxTokenMultiplicity(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "cdc_boundaries", exprs => CdcBoundaries(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "pair_combos", exprs => PairCombinations(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "sorted_floor", exprs => SortedFloor(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "sorted_ceil_strict",
-      exprs => SortedCeilStrict(exprs(0), exprs(1)), "built-in")
+  private def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression)
+      : FunctionDescription =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  private def intArg(e: Expression): Int = e.eval(null).asInstanceOf[Int]
+
+  val all: Seq[FunctionDescription] = Seq(
+    fn("cosine_sim", classOf[CosineSimilarity])(e => CosineSimilarity(e(0), e(1))),
+    fn("dot_product", classOf[DotProduct])(e => DotProduct(e(0), e(1))),
+    fn("l2_sq", classOf[L2Squared])(e => L2Squared(e(0), e(1))),
+    fn("minhash_sig", classOf[MinhashSignature])(e => MinhashSignature(e(0), intArg(e(1)))),
+    fn("simhash64", classOf[SimhashFingerprint])(e => SimhashFingerprint(e(0))),
+    fn("word_shingles", classOf[WordShingles])(e => WordShingles(e(0), intArg(e(1)))),
+    fn("char_ngrams", classOf[CharNgrams])(e => CharNgrams(e(0), intArg(e(1)))),
+    fn("hyperplane_bucket", classOf[HyperplaneBucket])(
+      e => HyperplaneBucket(e(0), intArg(e(1)))),
+    fn("max_token_count", classOf[MaxTokenMultiplicity])(e => MaxTokenMultiplicity(e(0))),
+    fn("cdc_boundaries", classOf[CdcBoundaries])(e => CdcBoundaries(e(0))),
+    fn("pair_combos", classOf[PairCombinations])(e => PairCombinations(e(0))),
+    fn("sorted_intersect_count", classOf[SortedIntersectCount])(
+      e => SortedIntersectCount(e(0), e(1))),
+    fn("sorted_floor", classOf[SortedFloor])(e => SortedFloor(e(0), e(1))),
+    fn("sorted_ceil_strict", classOf[SortedCeilStrict])(e => SortedCeilStrict(e(0), e(1))),
     // Spark's own runtime-filter expressions, surfaced by name: the
     // catalyst classes are public but not in the user-facing registry.
     // bloom_agg(col, estimatedItems, numBits) builds the sketch
@@ -203,13 +183,8 @@ object GraftFunctions {
     // its bloom side must be a literal/scalar subquery by the
     // expression's own input check, so the filter inlines as a constant
     // at execution with no broadcast-variable lifecycle to manage.
-    reg.createOrReplaceTempFunction(
-      "bloom_agg", exprs =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "bloom_might_contain", exprs =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), exprs(1)), "built-in")
-  }
+    fn("bloom_agg", classOf[BloomFilterAggregate])(
+      e => new BloomFilterAggregate(e(0), e(1), e(2))),
+    fn("bloom_might_contain", classOf[BloomFilterMightContain])(
+      e => BloomFilterMightContain(e(0), e(1))))
 }

@@ -755,20 +755,7 @@ object AggQueries extends QueryModule {
   // accuracy contract); the booleans assert the merged estimates land
   // inside the same tolerance contracts as the single-plan queries.
   // ------------------------------------------------------------------
-  private val hllPartialsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val tdPartialsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def ordersFixtureKey(dir: String): String = {
-    val fp = try {
-      val a = java.nio.file.Files.readAttributes(
-        java.nio.file.Paths.get(dir, "orders.parquet"),
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      s"${a.lastModifiedTime.toMillis}:${a.size}"
-    } catch { case _: Throwable => "absent" }
-    s"$dir@$fp"
-  }
+  private def ordersFile(dir: String): Seq[String] = Seq(s"$dir/orders.parquet")
 
   /** The persisted HLL partials table: one lgK=12 sketch per (nation,
     * order year). Built once per fixture and memoized — it models a
@@ -778,7 +765,7 @@ object AggQueries extends QueryModule {
     * it for the same reason).
     */
   private[graft] def hllPartials(s: SparkSession, dir: String): DataFrame = {
-    val path = hllPartialsMemo.computeIfAbsent(ordersFixtureKey(dir), _ => {
+    val path = graft.Derived.get(s, "agg.hllPartials", ordersFile(dir)) {
       val out = graft.Scratch.dir("graft-hll-partials")
       Tables.orders(s, dir)
         .join(broadcast(Tables.customer(s, dir).select("c_custkey", "c_nationkey")),
@@ -788,7 +775,7 @@ object AggQueries extends QueryModule {
         .agg(expr("hll_sketch_agg(o_custkey)").as("custkey_hll"))
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
     graft.Tables.loadPath(s, path)
   }
 
@@ -826,7 +813,7 @@ object AggQueries extends QueryModule {
     * per (order status, year), the quantile twin of [[hllPartials]].
     */
   private[graft] def tdPartials(s: SparkSession, dir: String): DataFrame = {
-    val path = tdPartialsMemo.computeIfAbsent(ordersFixtureKey(dir), _ => {
+    val path = graft.Derived.get(s, "agg.tdPartials", ordersFile(dir)) {
       val out = graft.Scratch.dir("graft-td-partials")
       val build = udaf(new graft.functions.TDigestBuild(100.0),
         org.apache.spark.sql.Encoders.scalaDouble)
@@ -835,7 +822,7 @@ object AggQueries extends QueryModule {
         .agg(build(col("o_totalprice")).as("price_td"))
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
     graft.Tables.loadPath(s, path)
   }
 

@@ -1729,7 +1729,6 @@ object AnalyticsQueries extends QueryModule {
   // ANN arm's top-1 output.
   // ------------------------------------------------------------------
   def reciprocalNn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir).filter(col("vec_id") < 200)
       .select(col("vec_id"), col("embedding"))
     val a = e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))

@@ -85,7 +85,6 @@ object CurationQueries extends QueryModule {
     * the corpus level). One hash shuffle on the shingle key.
     */
   def boilerplate(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val sh = Tables.documents(s, dir)
       .withColumn("tk", expr(toks))
       .filter(size(col("tk")) >= 4)
@@ -160,7 +159,6 @@ object CurationQueries extends QueryModule {
     * relative to the corpus), never a cross product.
     */
   def contamination(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     def shingles3(df: DataFrame): DataFrame = df
       .withColumn("tk", expr(toks))
       .filter(size(col("tk")) >= 3)
@@ -876,7 +874,6 @@ object CurationQueries extends QueryModule {
     * needed.
     */
   def ngramNovelty(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // first-seen census + probe side both read sh: one materialization
     // (optimization r17), size-gated (r18) — corpus-sized frame
     val sh = Materialize.gated(Tables.documents(s, dir),
@@ -1298,20 +1295,16 @@ object CurationQueries extends QueryModule {
     * snapshots the vocab curve reads. Each per-step frame is already
     * localCheckpointed by the loop, so memo hits are handles, not work.
     */
-  private val bpeTrainedMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, Seq[(Int, String, String, String, Long)], Map[Int, DataFrame])]()
-
   private[graft] def bpeTrained(s: SparkSession, dir: String)
       : (DataFrame, Seq[(Int, String, String, String, Long)], Map[Int, DataFrame]) =
-    bpeTrainedMemo.computeIfAbsent(
-      s"${System.identityHashCode(s)}:${curationFixtureKey(dir)}", _ => {
-        val init = Tables.documents(s, dir)
-          .select(explode(expr(toks)).as("word"))
-          .groupBy("word").agg(count(lit(1)).as("wc"))
-          .select(col("word"), col("wc"),
-            expr(s"concat('$Sep2', regexp_replace(word, '(.)', '$$1$Sep2'))").as("e"))
-        bpeTrainLoopCapturing(init, Set(0, 5, 10, 20))
-      })
+    graft.Derived.get(s, "curation.bpeTrained", DedupQueries.docsFile(dir)) {
+      val init = Tables.documents(s, dir)
+        .select(explode(expr(toks)).as("word"))
+        .groupBy("word").agg(count(lit(1)).as("wc"))
+        .select(col("word"), col("wc"),
+          expr(s"concat('$Sep2', regexp_replace(word, '(.)', '$$1$Sep2'))").as("e"))
+      bpeTrainLoopCapturing(init, Set(0, 5, 10, 20))
+    }
 
   /** The DuckDB twin replays the identical loop as 20 UNROLLED chained
     * CTE stages (enc0 → m1 → enc1 → … → m20), each MATERIALIZED — the
@@ -1590,7 +1583,6 @@ object CurationQueries extends QueryModule {
     * an empty result.
     */
   def contaminationMulti(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val ns = Seq(3, 8, 13)
     val docs = Tables.documents(s, dir).withColumn("tk", expr(toks))
@@ -2083,16 +2075,12 @@ object CurationQueries extends QueryModule {
     * Exposed so InvariantSpec can replay the likelihood-monotonicity laws
     * on the actual states.
     */
-  private val unigramMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(Map[String, Long], DataFrame)], DataFrame, Long)]()
-
   private[graft] def unigramEmTrace(s: SparkSession, dir: String)
       : (Seq[(Map[String, Long], DataFrame)], DataFrame, Long) =
     // memoized per (session, fixture) like [[bpeTrained]] — unigram_train,
     // tokenizer_compare and the InvariantSpec laws all read one EM run
-    unigramMemo.computeIfAbsent(
-      s"${System.identityHashCode(s)}:${curationFixtureKey(dir)}", _ =>
-        unigramEmTraceUncached(s, dir))
+    graft.Derived.get(s, "curation.unigramEmTrace", DedupQueries.docsFile(dir))(
+      unigramEmTraceUncached(s, dir))
 
   private def unigramEmTraceUncached(s: SparkSession, dir: String)
       : (Seq[(Map[String, Long], DataFrame)], DataFrame, Long) = {
@@ -2415,14 +2403,9 @@ object CurationQueries extends QueryModule {
     * applied by every downstream gate), and both declared queries plus the
     * InvariantSpec laws read the same trajectory.
     */
-  private val clfMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, Seq[Map[Int, Long]])]()
-  private val clfFeatsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def clfFeatsMemoized(s: SparkSession, dir: String): DataFrame =
-    clfFeatsMemo.computeIfAbsent(
-      s"${System.identityHashCode(s)}:${curationFixtureKey(dir)}", _ => clfFeats(s, dir))
+    graft.Derived.get(s, "curation.clfFeats", DedupQueries.docsFile(dir))(
+      clfFeats(s, dir))
 
   private[graft] def clfTrain(s: SparkSession, dir: String): (DataFrame, Seq[Map[Int, Long]]) =
     clfTrainOn(s, dir, "full", identity)
@@ -2435,42 +2418,27 @@ object CurationQueries extends QueryModule {
     */
   private[graft] def clfTrainOn(s: SparkSession, dir: String, tag: String,
       trainSlice: DataFrame => DataFrame): (DataFrame, Seq[Map[Int, Long]]) =
-    clfMemo.computeIfAbsent(
-      s"${System.identityHashCode(s)}:${curationFixtureKey(dir)}#$tag", _ => {
-        val feats = clfFeatsMemoized(s, dir)
-        val train = trainSlice(feats)
-        val nDiv = train.count().toDouble * ClfLrDiv
-        var w = Map.empty[Int, Long]
-        val trace = scala.collection.mutable.ArrayBuffer(w)
-        for (_ <- 1 to ClfSteps) {
-          val g = clfScored(train, w)
-            .select(col("y"), col("p"), explode(col("fx")).as("f"))
-            .groupBy(col("f.b").as("b"))
-            .agg(sum((col("y") * lit(1000000L) - col("p")) * col("f.x")).as("g"))
-            .collect() // bucket-bounded: ≤ 257 rows
-          w = g.map { r =>
-            val b = r.getInt(0)
-            b -> (w.getOrElse(b, 0L) +
-              math.floor(r.getLong(1) / nDiv).toLong)
-          }.toMap
-          trace += w
-        }
-        (feats, trace.toSeq)
-      })
-
-  /** Memo key twin of DedupQueries.docsFixtureKey: dir + documents.parquet
-    * (mtime, size) so an in-place fixture regeneration invalidates the
-    * trained model instead of serving the previous corpus's weights.
-    */
-  private def curationFixtureKey(dir: String): String = {
-    val fp = try {
-      val a = java.nio.file.Files.readAttributes(
-        java.nio.file.Paths.get(dir, "documents.parquet"),
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      s"${a.lastModifiedTime.toMillis}:${a.size}"
-    } catch { case _: Throwable => "absent" }
-    s"$dir@$fp"
-  }
+    graft.Derived.get(s, "curation.clfTrain", DedupQueries.docsFile(dir), tag) {
+      val feats = clfFeatsMemoized(s, dir)
+      val train = trainSlice(feats)
+      val nDiv = train.count().toDouble * ClfLrDiv
+      var w = Map.empty[Int, Long]
+      val trace = scala.collection.mutable.ArrayBuffer(w)
+      for (_ <- 1 to ClfSteps) {
+        val g = clfScored(train, w)
+          .select(col("y"), col("p"), explode(col("fx")).as("f"))
+          .groupBy(col("f.b").as("b"))
+          .agg(sum((col("y") * lit(1000000L) - col("p")) * col("f.x")).as("g"))
+          .collect() // bucket-bounded: ≤ 257 rows
+        w = g.map { r =>
+          val b = r.getInt(0)
+          b -> (w.getOrElse(b, 0L) +
+            math.floor(r.getLong(1) / nDiv).toLong)
+        }.toMap
+        trace += w
+      }
+      (feats, trace.toSeq)
+    }
 
   /** Calibration report of the trained gate: decile-bucket the final
     * scores (total order (p, doc_id) — the qualityCalibration NTile closed

@@ -41,7 +41,6 @@ object DedupQueries extends QueryModule {
     * (native codegen'd kernel — functions.ShingleOps).
     */
   private def shingleFrame(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, dir)
       .withColumn("tk", expr(toks))
       .filter(size(col("tk")) >= 4)
@@ -301,7 +300,6 @@ object DedupQueries extends QueryModule {
     // pipeline the DuckDB oracle replays, which stays interpreted in
     // Spark and cost ~8× more at sf0.1 (the dedup_simhash family's whole
     // base cost was this fingerprint)
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, dir)
       .withColumn("simhash", expr(s"simhash64($toks)"))
       .select(col("doc_id"), col("simhash"))
@@ -427,7 +425,6 @@ object DedupQueries extends QueryModule {
   // would checkpoint (16 longs + shingle set/doc). Same plan in both
   // callers → one shared cache entry.
   private def lshDocs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, dir)
       .withColumn("tk", expr(toks))
       .filter(size(col("tk")) >= 4)
@@ -623,7 +620,6 @@ object DedupQueries extends QueryModule {
     * too so the neighborhood ORDER is portable, not just associative.
     */
   def embeddingNearDup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
       .withColumn("bucket", expr("hyperplane_bucket(embedding, 4)"))
       // explicit left-fold over doubles — same association order as the
@@ -701,23 +697,22 @@ object DedupQueries extends QueryModule {
         (col("doc_id") === col("label")).as("is_survivor"))
       .orderBy("doc_id")
 
-  /** Converged connected-component labels (doc_id, label) over the LSH
-    * candidate graph — the shared closure behind [[dedupClusters]] and the
-    * quality-based survivor selection in CurationQueries. Only docs that
-    * appear in at least one candidate pair carry a label, so every labeled
-    * component has ≥ 2 members by construction.
-    *
-    * The converged labels are MATERIALIZED once per fixture dir to a
-    * scratch parquet and every consumer reads that table: the closure is
-    * an iterative multi-job computation, so recomputing it per consumer
-    * query doubles-to-triples its cost (measured 2.4× on the r5 sweep
-    * after the per-query cache-release fix), and at 100 TB the cluster
-    * assignment IS a persisted table (built once per corpus snapshot, read
-    * by every downstream curation job), not a per-query lineage. Disk, not
-    * executor cache — nothing outlives a query in memory, and the JVM-exit
-    * sweeper reclaims the directory.
+  /** The corpus-side shingle/signature lineage (the ONE pass that may
+    * legally scan the corpus complement `doc_id % 10 != batchMod`) —
+    * exposed so PlanSpec's no-corpus-re-shingle guards have a POSITIVE
+    * control (ADVICE r14 #3): this frame's plan DOES carry the
+    * NOT-batch filter the absence-regex hunts for, proving the regex can
+    * detect the regression it guards against.
     */
-  private val ccLabelsMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def corpusSigsFrame(s: SparkSession, dir: String, batchMod: Int = 9): DataFrame = {
+    Tables.documents(s, dir)
+      .filter(col("doc_id") % 10 =!= batchMod)
+      .withColumn("tk", expr(toks))
+      .filter(size(col("tk")) >= 4)
+      .withColumn("shingles", expr("word_shingles(tk, 4)"))
+      .withColumn("sig", expr("minhash_sig(shingles, 16)"))
+      .select("doc_id", "sig")
+  }
 
   /** The persisted MinHash band index over the STANDING corpus (doc_id %
     * 10 != batchMod — the same corpus/batch split as [[incrementalDedup]]):
@@ -738,71 +733,22 @@ object DedupQueries extends QueryModule {
     * incremental maintenance under alternative splits to pin that the
     * incremental ≡ from-scratch equivalence is split-independent.
     */
-  private val bandIndexMemo = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  private[operators] def dropManagedTable(s: SparkSession, tbl: String): Unit = {
-    // a managed table of the same name can survive from a PREVIOUS JVM in
-    // the cwd warehouse; drop both catalog entry and stale location before
-    // (re)writing — same hygiene as SourceQueries.dropManaged
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    try {
-      val wh = java.nio.file.Paths.get(
-        new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath)
-      val loc = wh.resolve(tbl)
-      if (java.nio.file.Files.exists(loc)) {
-        val walk = java.nio.file.Files.walk(loc)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    } catch { case _: Throwable => () }
-  }
-
-  /** The corpus-side shingle/signature lineage (the ONE pass that may
-    * legally scan the corpus complement `doc_id % 10 != batchMod`) —
-    * exposed so PlanSpec's no-corpus-re-shingle guards have a POSITIVE
-    * control (ADVICE r14 #3): this frame's plan DOES carry the
-    * NOT-batch filter the absence-regex hunts for, proving the regex can
-    * detect the regression it guards against.
-    */
-  private[graft] def corpusSigsFrame(s: SparkSession, dir: String, batchMod: Int = 9): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    Tables.documents(s, dir)
-      .filter(col("doc_id") % 10 =!= batchMod)
-      .withColumn("tk", expr(toks))
-      .filter(size(col("tk")) >= 4)
-      .withColumn("shingles", expr("word_shingles(tk, 4)"))
-      .withColumn("sig", expr("minhash_sig(shingles, 16)"))
-      .select("doc_id", "sig")
-  }
-
   private[graft] def bandIndex(s: SparkSession, dir: String, batchMod: Int = 9)
       : (DataFrame, DataFrame) = {
-    // session-keyed like batchSigsMemo (ADVICE r15 #2): the memo stores a
-    // catalog table name, and the in-memory catalog dies with the session
-    // that created it — a session recreated in the same JVM must rebuild,
-    // not resolve a stale name. The table name is derived from the
-    // SANITIZED fixture key (not its hashCode), so two fixtures can never
-    // collide into serving each other's postings.
-    val (tbl, sigsPath) = bandIndexMemo.computeIfAbsent(
-      s"${System.identityHashCode(s)}:${docsFixtureKey(dir)}#m$batchMod", _ => {
-        val out = graft.Scratch.dir("graft-band-index")
-        // the session identity is part of the NAME, not just the memo key
-        // (ADVICE r16 #3): two live sessions in one JVM share a warehouse
-        // dir, so a session-independent name would let the second session's
-        // overwrite replace files the first session's catalog entry points
-        // at mid-read; a per-session suffix makes the two tables disjoint
-        val tblName = ("graft_band_postings_" +
-          s"${docsFixtureKey(dir)}_m${batchMod}_s${System.identityHashCode(s)}")
-          .replaceAll("[^A-Za-z0-9]", "_")
-        val corpus = corpusSigsFrame(s, dir, batchMod).cache()
-        dropManagedTable(s, tblName)
-        mhBanded(corpus).write.mode("overwrite")
-          .bucketBy(8, "band", "bhash").saveAsTable(tblName)
-        corpus.write.mode("overwrite").parquet(s"$out/sigs")
-        corpus.unpersist()
-        (tblName, s"$out/sigs")
-      })
+    // a per-session entry (ADVICE r15 #2): the memo stores a catalog table
+    // name, and the catalog and warehouse dir are shared by every session
+    // of the context — the name is unique per build, so two live sessions
+    // never overwrite each other's files mid-read (ADVICE r16 #3)
+    val (tbl, sigsPath) = graft.Derived.get(s, "dedup.bandIndex", docsFile(dir), batchMod) {
+      val out = graft.Scratch.dir("graft-band-index")
+      val tblName = graft.Derived.tableName("graft_band_postings")
+      val corpus = corpusSigsFrame(s, dir, batchMod).cache()
+      mhBanded(corpus).write.mode("overwrite")
+        .bucketBy(8, "band", "bhash").saveAsTable(tblName)
+      corpus.write.mode("overwrite").parquet(s"$out/sigs")
+      corpus.unpersist()
+      (tblName, s"$out/sigs")
+    }
     (s.table(tbl), graft.Tables.loadPath(s, sigsPath))
   }
 
@@ -823,18 +769,16 @@ object DedupQueries extends QueryModule {
     * filter over the ONLY documents scan) stays visible in consumer plans
     * — PlanSpec pins it.
     */
-  private val batchSigsMemo = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def batchSigs(s: SparkSession, dir: String, batchMod: Int = 9): DataFrame = {
-    val frame = batchSigsMemo.computeIfAbsent(
-      s"${System.identityHashCode(s)}:${docsFixtureKey(dir)}#m$batchMod", _ =>
-        Tables.documents(s, dir)
-          .filter(col("doc_id") % 10 === batchMod)
-          .withColumn("tk", expr(toks))
-          .filter(size(col("tk")) >= 4)
-          .withColumn("shingles", expr("word_shingles(tk, 4)"))
-          .withColumn("sig", expr("minhash_sig(shingles, 16)"))
-          .select("doc_id", "sig"))
+    val frame = graft.Derived.get(s, "dedup.batchSigs", docsFile(dir), batchMod) {
+      Tables.documents(s, dir)
+        .filter(col("doc_id") % 10 === batchMod)
+        .withColumn("tk", expr(toks))
+        .filter(size(col("tk")) >= 4)
+        .withColumn("shingles", expr("word_shingles(tk, 4)"))
+        .withColumn("sig", expr("minhash_sig(shingles, 16)"))
+        .select("doc_id", "sig")
+    }
     // re-arm after any external clearCache(); storageLevel asks the
     // CacheManager, so this is a no-op while the entry is still live
     if (frame.storageLevel == org.apache.spark.storage.StorageLevel.NONE) frame.cache()
@@ -855,7 +799,6 @@ object DedupQueries extends QueryModule {
     * persisted-index ≡ from-scratch semantics.
     */
   def indexMaintenance(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val (idx, corpusSigs) = bandIndex(s, dir)
     // the new batch — the ONLY documents scan in this query's plan
     val batch = batchSigs(s, dir)
@@ -891,20 +834,13 @@ object DedupQueries extends QueryModule {
     * postings: anchor pairing needs only (doc_id, band, bhash), so the
     * corpus text is never re-shingled to maintain the clusters.
     */
-  private val corpusCcMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Reusable per-(fixture, split) scratch dir for the per-batch delta
-    * closure in [[incrementalClusters]] — overwritten, never re-allocated.
-    */
-  private val deltaCcMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def corpusClusterLabels(s: SparkSession, dir: String, batchMod: Int = 9): DataFrame = {
-    val path = corpusCcMemo.computeIfAbsent(s"${docsFixtureKey(dir)}#m$batchMod", _ => {
+    val path = graft.Derived.get(s, "dedup.corpusClusterLabels", docsFile(dir), batchMod) {
       val out = graft.Scratch.dir("graft-corpus-cc-labels")
       val pairs = starEdges(bandIndex(s, dir, batchMod)._1).cache()
       try convergeLabels(s, pairs, out) finally pairs.unpersist()
       out
-    })
+    }
     graft.Tables.loadPath(s, path)
   }
 
@@ -935,7 +871,6 @@ object DedupQueries extends QueryModule {
     */
   private[graft] def incrementalClusterDelta(s: SparkSession, dir: String, batchMod: Int = 9)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val (idx, _) = bandIndex(s, dir, batchMod)
     val base = corpusClusterLabels(s, dir, batchMod)
     // plain lineage over the memoized cached batch — the old per-call
@@ -970,15 +905,14 @@ object DedupQueries extends QueryModule {
   }
 
   def incrementalClusters(s: SparkSession, dir: String, batchMod: Int = 9): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val base = corpusClusterLabels(s, dir, batchMod)
     val contracted = incrementalClusterDelta(s, dir, batchMod).localCheckpoint()
     // the delta-closure scratch dir is REUSED per (fixture, split) —
     // convergeLabels writes mode-overwrite, so repeated invocations (bench
     // best-of-N) recycle one directory instead of allocating a fresh one
     // per call (ADVICE r14 #5)
-    val compOut = deltaCcMemo.computeIfAbsent(
-      s"${docsFixtureKey(dir)}#m$batchMod", _ => graft.Scratch.dir("graft-delta-cc"))
+    val compOut = graft.Derived.get(s, "dedup.deltaCcDir", docsFile(dir), batchMod)(
+      graft.Scratch.dir("graft-delta-cc"))
     convergeLabels(s, contracted, compOut)
     val comp = s.read.parquet(compOut)
       .withColumnRenamed("doc_id", "node").withColumnRenamed("label", "comp")
@@ -1013,7 +947,6 @@ object DedupQueries extends QueryModule {
     * cross joins are 1-row scalar combines.
     */
   def indexMaintenanceCensus(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val (idx, _) = bandIndex(s, dir)
     // batch-sized, consumed three times below — derived from the shared
     // memoized cached batch frame (one cheap explode per consumer)
@@ -1077,26 +1010,34 @@ object DedupQueries extends QueryModule {
        |JOIN sigs sb ON s.anchor_id = sb.doc_id
        |ORDER BY s.doc_id""".stripMargin
 
-  /** Memo key: dir + documents.parquet (mtime, size) — an in-place fixture
-    * regeneration mid-JVM must invalidate the materialized labels, not
-    * serve the previous corpus's clusters.
+  /** The source file of every corpus entry (here and in CurationQueries):
+    * an in-place fixture regeneration must rebuild the materialized labels,
+    * indexes and trained models, not serve the previous corpus's.
     */
-  private def docsFixtureKey(dir: String): String = {
-    val fp = try {
-      val a = java.nio.file.Files.readAttributes(
-        java.nio.file.Paths.get(dir, "documents.parquet"),
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      s"${a.lastModifiedTime.toMillis}:${a.size}"
-    } catch { case _: Throwable => "absent" }
-    s"$dir@$fp"
-  }
+  private[operators] def docsFile(dir: String): Seq[String] = Seq(s"$dir/documents.parquet")
 
+  /** Converged connected-component labels (doc_id, label) over the LSH
+    * candidate graph — the shared closure behind [[dedupClusters]] and the
+    * quality-based survivor selection in CurationQueries. Only docs that
+    * appear in at least one candidate pair carry a label, so every labeled
+    * component has ≥ 2 members by construction.
+    *
+    * The converged labels are MATERIALIZED once per fixture to a
+    * scratch parquet and every consumer reads that table: the closure is
+    * an iterative multi-job computation, so recomputing it per consumer
+    * query doubles-to-triples its cost (measured 2.4× on the r5 sweep
+    * after the per-query cache-release fix), and at 100 TB the cluster
+    * assignment IS a persisted table (built once per corpus snapshot, read
+    * by every downstream curation job), not a per-query lineage. Disk, not
+    * executor cache — nothing outlives a query in memory, and the JVM-exit
+    * sweeper reclaims the directory.
+    */
   private[graft] def clusterLabels(s: SparkSession, dir: String): DataFrame = {
-    val path = ccLabelsMemo.computeIfAbsent(docsFixtureKey(dir), _ => {
+    val path = graft.Derived.get(s, "dedup.clusterLabels", docsFile(dir)) {
       val out = graft.Scratch.dir("graft-cc-labels")
       computeClusterLabels(s, dir, out)
       out
-    })
+    }
     graft.Tables.loadPath(s, path)
   }
 
@@ -1210,7 +1151,6 @@ object DedupQueries extends QueryModule {
     * PlanSpec pins the join shape.
     */
   def sortedNeighborhood(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // the shingled corpus feeds BOTH passes and, inside each pass, the
     // bucket census, the ranked frame, and both sides of the neighbor
     // self-join — materialize it once (optimization r17) instead of
@@ -1382,7 +1322,6 @@ object DedupQueries extends QueryModule {
     */
   def semanticDedup(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    graft.functions.GraftFunctions.register(s)
     val centroidUdaf = udaf(new graft.functions.VectorCentroid, ExpressionEncoder[Seq[Float]]())
     val e = Tables.embeddings(s, dir)
     val centroids = e.groupBy("label")
@@ -1584,7 +1523,6 @@ object DedupQueries extends QueryModule {
   // shuffle.
   // ------------------------------------------------------------------
   def cdcChunks(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, dir)
       .filter(length(col("text")) >= 8)
       .withColumn("n", length(col("text")))
@@ -1898,7 +1836,6 @@ object DedupQueries extends QueryModule {
     * join (the dup-pair graph is corpus-density-bounded), one source agg.
     */
   def dedupImpact(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"),
         size(expr(toks)).cast("long").as("n_tokens"))
@@ -1958,7 +1895,6 @@ object DedupQueries extends QueryModule {
     * from one keyed join on the block key.
     */
   def contrastivePairs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"), col("n_chars"),
         (col("n_chars") / 16).cast("long").as("len_bucket"))
@@ -2129,7 +2065,6 @@ object DedupQueries extends QueryModule {
     * cannot shingle and are exempt (always kept) in BOTH engines.
     */
   private[graft] def paragraphNearDupPerDoc(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val paras = Tables.documents(s, dir)
       .withColumn("tk0", expr(toks))
       .filter(size(col("tk0")) >= 1)

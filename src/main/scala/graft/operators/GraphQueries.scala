@@ -35,27 +35,15 @@ object GraphQueries extends QueryModule {
     * IS a persisted table built once per corpus snapshot — every graph
     * job reads it, none re-derives it. Disk, not executor cache: nothing
     * outlives a query in memory, the JVM-exit sweeper reclaims the
-    * directory, and the memo key carries the lineitem file fingerprint so
-    * an in-place fixture regeneration invalidates.
+    * directory, and the [[graft.Derived]] entry declares lineitem as its
+    * source so an in-place fixture regeneration rebuilds it.
     */
-  private val edgesMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def edgesFixtureKey(dir: String): String = {
-    val fp = try {
-      val a = java.nio.file.Files.readAttributes(
-        java.nio.file.Paths.get(dir, "lineitem.parquet"),
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      s"${a.lastModifiedTime.toMillis}:${a.size}"
-    } catch { case _: Throwable => "absent" }
-    s"$dir@$fp"
-  }
-
   private[graft] def edges(s: SparkSession, dir: String): DataFrame = {
-    val path = edgesMemo.computeIfAbsent(edgesFixtureKey(dir), _ => {
+    val path = graft.Derived.get(s, "graph.edges", Seq(s"$dir/lineitem.parquet")) {
       val out = graft.Scratch.dir("graft-graph-edges")
       buildEdges(s, dir).write.mode("overwrite").parquet(out)
       out
-    })
+    }
     // immutable staging parquet: memoized relation (r18, Tables.loadPath)
     graft.Tables.loadPath(s, path)
   }
@@ -68,7 +56,6 @@ object GraphQueries extends QueryModule {
     * the order key computes the same thing with an extra exchange + sort.
     */
   private[graft] def buildEdges(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.lineitem(s, dir)
       .filter(col("l_orderkey") % 2 === 0)
       .groupBy(col("l_orderkey"))
@@ -264,7 +251,6 @@ object GraphQueries extends QueryModule {
   private[graft] def triangleStatsPlan(
       s: SparkSession, pairs: DataFrame, deg: DataFrame,
       nEdges: Long): (DataFrame, Seq[DataFrame]) = {
-    graft.functions.GraftFunctions.register(s)
     val cap = broadcastMaxBytes(s)
     def gate(df: DataFrame, bytes: Long): DataFrame =
       if (bytes <= cap) broadcast(df) else df
@@ -396,7 +382,6 @@ object GraphQueries extends QueryModule {
     * build adjacency.
     */
   def linkPrediction(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = edges(s, dir)
     val und = e.union(e.select(col("v").as("u"), col("u").as("v")))
     val adj = und.groupBy("u")
@@ -445,7 +430,6 @@ object GraphQueries extends QueryModule {
     * one (u,v)-keyed hash-agg over the wedge stream.
     */
   def adamicAdar(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = edges(s, dir)
     val und = e.union(e.select(col("v").as("u"), col("u").as("v")))
     val adj = und.groupBy("u")
@@ -612,7 +596,6 @@ object GraphQueries extends QueryModule {
     * top-20 cut is a TakeOrdered with (degree, id) total order.
     */
   def clusteringCoeff(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cached = scala.collection.mutable.Buffer[DataFrame]()
     try {
       val pairs = edges(s, dir).cache()
@@ -785,27 +768,34 @@ object GraphQueries extends QueryModule {
     */
   def labelPropagation(s: SparkSession, dir: String): DataFrame = {
     val pairs = edges(s, dir)
-    val nodes = pairs.select(col("u").as("n"))
-      .union(pairs.select(col("v"))).distinct()
-    def step(lbl: DataFrame): DataFrame =
-      lbl.select("n", "lbl")
-        .union(pairs.join(lbl, col("u") === col("n"))
-          .select(col("v").as("n"), col("lbl")))
-        .union(pairs.join(lbl, col("v") === col("n"))
-          .select(col("u").as("n"), col("lbl")))
-        .groupBy("n").agg(min("lbl").as("lbl"))
     // round-1 labels feed THREE subtrees of round 2 (the identity leg +
     // both join orientations): materialize once (optimization r18,
     // size-gated — the label table is |V|-sized) so round 2 plans over a
     // leaf instead of triplicating the round-1 join pyramid
-    val l1 = Materialize.gated(edges(s, dir),
-      step(nodes.withColumn("lbl", col("n"))), "lprop-l1")
-    val l2 = step(l1)
+    val l1 = Materialize.gated(pairs, labelRound(pairs, labelSeed(pairs)), "lprop-l1")
+    val l2 = labelRound(pairs, l1)
     l2.groupBy(col("lbl").as("label"))
       .agg(count(lit(1)).as("n_members"))
       .orderBy(desc("n_members"), asc("label"))
       .limit(50)
   }
+
+  /** Round-0 labels: every node of the edge list labeled with itself. */
+  private[graft] def labelSeed(pairs: DataFrame): DataFrame =
+    pairs.select(col("u").as("n")).union(pairs.select(col("v"))).distinct()
+      .withColumn("lbl", col("n"))
+
+  /** One synchronous round of [[labelPropagation]], lazy (PlanSpec pins
+    * each round's own plan): each node takes the minimum label over its
+    * closed neighborhood.
+    */
+  private[graft] def labelRound(pairs: DataFrame, lbl: DataFrame): DataFrame =
+    lbl.select("n", "lbl")
+      .union(pairs.join(lbl, col("u") === col("n"))
+        .select(col("v").as("n"), col("lbl")))
+      .union(pairs.join(lbl, col("v") === col("n"))
+        .select(col("u").as("n"), col("lbl")))
+      .groupBy("n").agg(min("lbl").as("lbl"))
 
   private val labelPropagationSql =
     s"""WITH $edgesCte,

@@ -267,7 +267,6 @@ object JoinQueries extends QueryModule {
     * customer owning 10% of orders) costs M·log K, not M·K in one task.
     */
   def asofLastOrder(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.events(s, dir)
     val od = Tables.orders(s, dir)
       .groupBy(col("o_custkey"))
@@ -297,7 +296,6 @@ object JoinQueries extends QueryModule {
     * (`sorted_floor` / `sorted_ceil_strict`) — hot-key-safe.
     */
   def asofNearestOrder(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.events(s, dir)
     val od = Tables.orders(s, dir)
       .groupBy(col("o_custkey"))
@@ -428,7 +426,6 @@ object JoinQueries extends QueryModule {
     * in a query hot path).
     */
   private[graft] def bloomPrefilterPlan(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.orders(s, dir)
       .join(broadcast(Tables.customer(s, dir)
         .filter(col("c_mktsegment") === "MACHINERY")
@@ -634,7 +631,6 @@ object JoinQueries extends QueryModule {
     * (`sorted_floor`), non-expanding probe side.
     */
   def asofTolerance(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.events(s, dir)
     val od = Tables.orders(s, dir)
       .groupBy(col("o_custkey"))

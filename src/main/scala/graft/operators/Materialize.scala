@@ -34,13 +34,15 @@ object Materialize {
   /** Materialize `frame` for multi-consumer reuse, gated on `input`'s
     * estimated bytes (pass the base corpus relation the frame derives
     * from). Below the gate: `localCheckpoint()`. Above: one scratch-
-    * parquet round-trip.
+    * parquet round-trip. Fails closed: an input whose stats cannot be
+    * computed counts as above the gate.
     */
   def gated(input: DataFrame, frame: DataFrame, tag: String): DataFrame = {
-    val inputBytes =
-      try input.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case _: Throwable => BigInt(0) }
-    if (inputBytes <= BigInt(localMaxInputBytes(frame))) frame.localCheckpoint()
+    val belowGate =
+      try input.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        BigInt(localMaxInputBytes(frame))
+      catch { case _: Throwable => false }
+    if (belowGate) frame.localCheckpoint()
     else {
       val p = graft.Scratch.dir(s"graft-mat-$tag")
       frame.write.mode("overwrite").parquet(p)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.functions.{expr, round}
 
 /** Cross-engine parity expressions shared by the operator modules. Each
   * Spark expression has a DuckDB twin whose value is bit-identical on the
@@ -12,6 +12,16 @@ object SharedExprs {
   /** Integer-micros line revenue: exact under any aggregation order. */
   def revMicros: Column =
     expr("CAST(round(l_extendedprice * (1 - l_discount) * 1e6) AS BIGINT)")
+
+  /** Cents rounding in the oracle's form, for a double derived from an
+    * exact integer sum (`sum(micros) / 1e6`). DuckDB's round(DOUBLE, 2) is
+    * `std::round(x * 100) / 100` on the binary value; Spark's round(x, 2)
+    * rounds the shortest decimal string half-up, so the two part on ties
+    * such as 1.005 (binary 1.00499…): DuckDB gives 1.0, Spark 1.01. At
+    * scale 0 the decimal string is half-up exactly where std::round is, so
+    * `round(x * 100) / 100` computes the oracle's value.
+    */
+  def roundCents(x: Column): Column = round(x * 100) / 100
 
   /** Whitespace tokenizer (Spark side): codegen'd split + empty-drop. */
   val toks = "array_remove(split(text, ' ', -1), '')"

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
-import graft.functions.{GraftFunctions, VectorCentroid}
+import graft.functions.VectorCentroid
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Window
@@ -26,7 +26,6 @@ object SimilarityQueries extends QueryModule {
 
   /** Brute-force exact top-5 neighbors for each of 10 query vectors. */
   def bruteTopK(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -66,7 +65,6 @@ object SimilarityQueries extends QueryModule {
     * determinism discipline.
     */
   def diverseTopK(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -184,7 +182,6 @@ object SimilarityQueries extends QueryModule {
     * high-norm seed set is the only extra state — 32 rows, broadcast.
     */
   def mipsTopK(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
       .withColumn("norm", sqrt(expr("dot_product(embedding, embedding)")))
     val q = e.filter(col("vec_id") < 10)
@@ -250,7 +247,6 @@ object SimilarityQueries extends QueryModule {
     * (query, label)-keyed hash-agg over ≤ 5·|queries| rows.
     */
   def knnClassify(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -306,7 +302,6 @@ object SimilarityQueries extends QueryModule {
     * the recall join is (query, candidate)-keyed over two top-5 lists.
     */
   def matryoshkaPrefix(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -366,7 +361,6 @@ object SimilarityQueries extends QueryModule {
     * list. Returns top-3 within the probed list.
     */
   def ivfTopK(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val centroidUdaf = udaf(new VectorCentroid, ExpressionEncoder[Seq[Float]]())
     val e = Tables.embeddings(s, dir)
     val centroids = e.groupBy("label")
@@ -440,7 +434,6 @@ object SimilarityQueries extends QueryModule {
     * cast on both engines, and inertia sums exact integer micros.
     */
   def kmeansLloyd(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val seeds = e.orderBy("vec_id").limit(8)
       .select(col("vec_id").as("cid"), col("embedding").as("cemb"))
@@ -546,7 +539,6 @@ object SimilarityQueries extends QueryModule {
     * SimilaritySpec.
     */
   def lshTopK(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     // native codegen'd bucket (functions.HyperplaneOps): the md5-parity
     // sign matrix is computed once per shape, each row costs 4×64 fused
     // multiply-adds — bit-identical to the HOF/oracle arithmetic, and
@@ -663,7 +655,6 @@ object SimilarityQueries extends QueryModule {
     * codegen'd HOFs; parity is exact because both sides quantize in double.
     */
   def quantizeInt8(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     Tables.embeddings(s, dir)
       .withColumn("scale", expr(
         "aggregate(embedding, 0D, (a, x) -> greatest(a, abs(CAST(x AS DOUBLE)))) / 127D"))
@@ -713,7 +704,6 @@ object SimilarityQueries extends QueryModule {
     * centroid cast collapses engine ulp drift exactly as in [[ivfTopK]].
     */
   def pqAdcTopK(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val centroidUdaf = udaf(new VectorCentroid, ExpressionEncoder[Seq[Float]]())
     val e = Tables.embeddings(s, dir)
     // codebook: per-label 64-dim centroid (float), sliced into 8 codewords
@@ -960,7 +950,6 @@ object SimilarityQueries extends QueryModule {
     * candidate id.
     */
   def hybridRrf(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     // dense arm — cosine rank over the rounded score (float-ordering rule)
     val e = Tables.embeddings(s, dir)
     val q = e.filter(col("vec_id") < 10)
@@ -1059,7 +1048,6 @@ object SimilarityQueries extends QueryModule {
     * compare is engine-stable.
     */
   def rangeSearch(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -1183,7 +1171,6 @@ object SimilarityQueries extends QueryModule {
   // per-label means are exact integer sums over those grid values.
   // ------------------------------------------------------------------
   def silhouetteSimplified(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val cents = e.select(col("label"), posexplode(col("embedding")))
       .groupBy(col("label").as("c_label"), col("pos"))
@@ -1255,7 +1242,6 @@ object SimilarityQueries extends QueryModule {
   // through one double division before the exact-integer panel mean.
   // ------------------------------------------------------------------
   def rankingMetrics(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val disc = "array(1000000L, 630930L, 500000L, 430677L, 386853L, 356207L, 333333L, 315465L, 301030L, 289065L)"
     val pref = "array(1000000L, 1630930L, 2130930L, 2561607L, 2948460L, 3304667L, 3638000L, 3953465L, 4254495L, 4543560L)"
     val e = Tables.embeddings(s, dir)
@@ -1674,22 +1660,6 @@ object SimilarityQueries extends QueryModule {
   // tie-break and rounds at output (the bruteTopK rule).
   // ------------------------------------------------------------------
 
-  private val ivfIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  /** Memo key: dir + embeddings.parquet (mtime, size) — an in-place
-    * fixture regeneration must invalidate the persisted index.
-    */
-  private def embFixtureKey(dir: String): String = {
-    val fp = try {
-      val a = java.nio.file.Files.readAttributes(
-        java.nio.file.Paths.get(dir, "embeddings.parquet"),
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      s"${a.lastModifiedTime.toMillis}:${a.size}"
-    } catch { case _: Throwable => "absent" }
-    s"$dir@$fp"
-  }
-
   /** Coarse quantizer: per-label centroid vectors over `corpus`, keyed as
     * list ids (double avg per dim → FLOAT, the cross-engine-stable form).
     */
@@ -1721,7 +1691,6 @@ object SimilarityQueries extends QueryModule {
     * DOES carry the NOT-batch filter the absence-regex hunts for.
     */
   private[graft] def corpusAssignFrame(s: SparkSession, dir: String, batchMod: Int = 9): DataFrame = {
-    GraftFunctions.register(s)
     val corpus = Tables.embeddings(s, dir)
       .filter(col("vec_id") % 10 =!= batchMod)
     ivfAssign(corpus, ivfCentroids(corpus))
@@ -1729,31 +1698,27 @@ object SimilarityQueries extends QueryModule {
 
   /** The persisted index pair: (assignments table bucketed(8) on list_id,
     * centroids parquet). Written ONCE per (session, fixture, split) from a
-    * single corpus pass and memoized — session identity in both the memo
-    * key AND the table name (the band-index rule: the in-memory catalog
-    * dies with its session, and two live sessions sharing a warehouse must
-    * not overwrite each other's files).
+    * single corpus pass and memoized, under a table name unique per build
+    * (the band-index rule: two live sessions share the context's catalog
+    * and warehouse, and must not overwrite each other's files). An
+    * in-place rewrite of embeddings.parquet rebuilds the index.
     */
   private[graft] def ivfIndex(s: SparkSession, dir: String, batchMod: Int = 9)
       : (DataFrame, DataFrame) = {
-    GraftFunctions.register(s)
-    val (tbl, centsPath) = ivfIndexMemo.computeIfAbsent(
-      s"${System.identityHashCode(s)}:${embFixtureKey(dir)}#m$batchMod", _ => {
-        val out = graft.Scratch.dir("graft-ivf-index")
-        val tblName = ("graft_ivf_assign_" +
-          s"${embFixtureKey(dir)}_m${batchMod}_s${System.identityHashCode(s)}")
-          .replaceAll("[^A-Za-z0-9]", "_")
-        val corpus = Tables.embeddings(s, dir)
-          .filter(col("vec_id") % 10 =!= batchMod).cache()
-        val cents = ivfCentroids(corpus).cache()
-        cents.write.mode("overwrite").parquet(s"$out/centroids")
-        DedupQueries.dropManagedTable(s, tblName)
-        ivfAssign(corpus, cents).write.mode("overwrite")
-          .bucketBy(8, "list_id").saveAsTable(tblName)
-        cents.unpersist()
-        corpus.unpersist()
-        (tblName, s"$out/centroids")
-      })
+    val (tbl, centsPath) = graft.Derived.get(s, "similarity.ivfIndex",
+        Seq(s"$dir/embeddings.parquet"), batchMod) {
+      val out = graft.Scratch.dir("graft-ivf-index")
+      val tblName = graft.Derived.tableName("graft_ivf_assign")
+      val corpus = Tables.embeddings(s, dir)
+        .filter(col("vec_id") % 10 =!= batchMod).cache()
+      val cents = ivfCentroids(corpus).cache()
+      cents.write.mode("overwrite").parquet(s"$out/centroids")
+      ivfAssign(corpus, cents).write.mode("overwrite")
+        .bucketBy(8, "list_id").saveAsTable(tblName)
+      cents.unpersist()
+      corpus.unpersist()
+      (tblName, s"$out/centroids")
+    }
     (s.table(tbl), graft.Tables.loadPath(s, centsPath))
   }
 
@@ -1776,7 +1741,6 @@ object SimilarityQueries extends QueryModule {
     * bucketing). Top-3 within the probed list, self excluded.
     */
   def indexMaintenanceAnn(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val (idx, _) = ivfIndex(s, dir)
     val delta = ivfDelta(s, dir)
     val q = delta.filter(col("vec_id") < 100)
@@ -1866,7 +1830,6 @@ object SimilarityQueries extends QueryModule {
     * serving path; the approximate arm IS [[indexMaintenanceAnn]]'s probe.
     */
   def indexProbeRecall(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val approx = indexMaintenanceAnn(s, dir)
       .select(col("q_id").as("a_q"), col("c_id").as("a_c"))
     val q = ivfDelta(s, dir).filter(col("vec_id") < 100)
@@ -1927,7 +1890,6 @@ object SimilarityQueries extends QueryModule {
     * exact members to the approximate top-3.
     */
   def indexProbe2Recall(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val (idx, cents) = ivfIndex(s, dir)
     val delta = ivfDelta(s, dir)
     val q = Tables.embeddings(s, dir)

@@ -228,7 +228,6 @@ object TextQueries extends QueryModule {
     * (mean word length 3–10, stopword presence, low repetition).
     */
   def qualityFlags(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, dir)
       .withColumn("tk", expr(toks))
       .withColumn("n_tokens", expr("size(tk)"))
@@ -330,7 +329,6 @@ object TextQueries extends QueryModule {
     * DISTINCT shingle set; total count is positional).
     */
   def repetition(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, dir)
       .withColumn("tk", expr(toks))
       .select(
@@ -653,7 +651,6 @@ object TextQueries extends QueryModule {
     * under GraftExtensions.
     */
   def ngramProfile(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val w = Window.partitionBy("lang").orderBy(desc("cnt"), asc("tri"))
     Tables.documents(s, dir)
       .filter(length(col("text")) >= 3)

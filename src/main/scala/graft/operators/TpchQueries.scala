@@ -40,6 +40,7 @@ object TpchQueries extends QueryModule {
 
   /** Integer-micros revenue term: exact under any aggregation order. */
   private def revMicros = SharedExprs.revMicros
+  private def roundCents(x: org.apache.spark.sql.Column) = SharedExprs.roundCents(x)
 
   // --------------------------------------------------------------------
   // Q2 — min-cost supplier: for each PROMO part, the ASIA supplier(s)
@@ -134,8 +135,8 @@ object TpchQueries extends QueryModule {
       .filter(col("l_shipdate") >= ts("1997-01-01") &&
         col("l_shipdate") < ts("1998-01-01") &&
         col("l_discount").between(0.04, 0.06) && col("l_quantity") < 24)
-      .agg(round(sum(
-        expr("CAST(round(l_extendedprice * l_discount * 1e6) AS BIGINT)")) / 1e6, 2)
+      .agg(roundCents(sum(
+        expr("CAST(round(l_extendedprice * l_discount * 1e6) AS BIGINT)")) / 1e6)
         .as("revenue"))
 
   private val q06ForecastRevenueSql =
@@ -176,7 +177,7 @@ object TpchQueries extends QueryModule {
         (col("supp_region") === "EUROPE" && col("cust_region") === "ASIA"))
       .groupBy(col("supp_region"), col("cust_region"),
         year(col("l_shipdate")).as("l_year"))
-      .agg(round(sum(revMicros) / 1e6, 2).as("revenue"))
+      .agg(roundCents(sum(revMicros) / 1e6).as("revenue"))
       .orderBy("supp_region", "cust_region", "l_year")
   }
 
@@ -221,7 +222,7 @@ object TpchQueries extends QueryModule {
       .orderBy(desc("rev_m"), col("c_custkey"))
       .limit(20)
       .select(col("c_custkey"), col("c_name"),
-        round(col("rev_m") / 1e6, 2).as("revenue"),
+        roundCents(col("rev_m") / 1e6).as("revenue"),
         col("c_acctbal"), col("n_name"))
   }
 
@@ -269,7 +270,7 @@ object TpchQueries extends QueryModule {
     vals
       .withColumn("total_m", sum("value_m").over(Window.partitionBy()))
       .filter(col("value_m") * 2000 > col("total_m"))
-      .select(col("l_partkey"), round(col("value_m") / 1e6, 2).as("value"))
+      .select(col("l_partkey"), roundCents(col("value_m") / 1e6).as("value"))
       .orderBy(desc("value"), col("l_partkey"))
   }
 
@@ -375,7 +376,7 @@ object TpchQueries extends QueryModule {
       .join(broadcast(Tables.supplier(s, dir).select("s_suppkey", "s_name")),
         col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"),
-        round(col("rev_m") / 1e6, 2).as("total_revenue"))
+        roundCents(col("rev_m") / 1e6).as("total_revenue"))
       .orderBy("s_suppkey")
   }
 
@@ -474,7 +475,7 @@ object TpchQueries extends QueryModule {
           col("l_quantity").between(10, 30)) ||
         (col("p_brand") === "Brand#3" && col("p_size").between(1, 30) &&
           col("l_quantity").between(20, 40)))
-      .agg(round(sum(revMicros) / 1e6, 2).as("revenue"))
+      .agg(roundCents(sum(revMicros) / 1e6).as("revenue"))
   }
 
   private val q19DiscountedRevenueSql =
@@ -608,7 +609,7 @@ object TpchQueries extends QueryModule {
         col("c_nationkey") === col("n_nationkey"))
       .groupBy("n_name")
       .agg(count(lit(1)).as("numcust"),
-        round(sum("bal_c") / 100.0, 2).as("totacctbal"))
+        roundCents(sum("bal_c") / 100.0).as("totacctbal"))
       .orderBy("n_name")
   }
 

@@ -2,7 +2,7 @@ package graft.plans
 
 import graft.functions.{CosineSimilarity, DotProduct}
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, If, Literal}
+import org.apache.spark.sql.catalyst.expressions.{If, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.DoubleType
@@ -26,22 +26,15 @@ object SimplifySelfCosine extends Rule[LogicalPlan] {
     }
 }
 
-/** Session extension wiring (SURVEY.md §4): registers the custom vector
-  * expressions as permanent session functions and injects the optimizer
-  * rule. Usable two ways:
+/** Session extension wiring (SURVEY.md §4): registers the custom
+  * expressions ([[graft.functions.GraftFunctions]]) as session functions and
+  * injects the optimizer rules and planner strategy. Usable two ways:
   *   SparkSession.builder().withExtensions(new GraftExtensions)
   *   --conf spark.sql.extensions=graft.plans.GraftExtensions
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
+    graft.functions.GraftFunctions.all.foreach(e.injectFunction)
     e.injectOptimizerRule(_ => SimplifySelfCosine)
     e.injectOptimizerRule(_ => RewriteWindowTopK)
     e.injectOptimizerRule(_ => RewriteBandJoin)

@@ -90,34 +90,22 @@ object RecordStream {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
+  /** The fixture file every staged/derived events entry declares as its
+    * source: a fixture dir can be regenerated in place, sometimes with a
+    * different parquet vintage, so a rewrite must rebuild the schema probe
+    * and the staged sentinels/shard logs.
+    */
+  private def eventsFile(dir: String): Seq[String] = Seq(s"$dir/events.parquet")
+
   /** On-disk type of the fixture's ts column under the legacy-nanos conf:
     * LongType for TIMESTAMP(NANOS) vintages, TIMESTAMP_NTZ for µs ones.
-    * One parquet-footer read per fixture dir, memoized.
+    * One parquet-footer read per fixture, memoized.
     */
-  private val tsDiskTypes = new java.util.concurrent.ConcurrentHashMap[String, DataType]()
-
-  /** Memo key: directory + the events file's (mtime, size) fingerprint —
-    * NOT the bare directory. The driver regenerates fixture dirs in place
-    * between rounds, sometimes with a different parquet vintage; a
-    * JVM-lifetime dir-keyed memo would then serve a stale schema (and
-    * stale staged sentinels) for the new data. A changed fingerprint
-    * simply computes a fresh entry; stale ones are harmless garbage.
-    */
-  private def fixtureKey(dir: String): String = {
-    val fp = try {
-      val a = java.nio.file.Files.readAttributes(
-        java.nio.file.Paths.get(dir, "events.parquet"),
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      s"${a.lastModifiedTime.toMillis}:${a.size}"
-    } catch { case _: Throwable => "absent" }
-    s"$dir@$fp"
-  }
-
   private def tsDiskType(spark: SparkSession, dir: String): DataType =
-    tsDiskTypes.computeIfAbsent(fixtureKey(dir), _ => {
+    graft.Derived.get(spark, "stream.tsDiskType", eventsFile(dir)) {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
-    })
+    }
 
   private def normalizeTs(df: DataFrame, tsType: DataType): DataFrame = tsType match {
     case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -146,17 +134,15 @@ object RecordStream {
     * are never emitted. This is the deterministic replacement for
     * wall-clock waits (SURVEY.md §7 hard-point 3).
     */
-  /** Staged sentinel dirs, one per fixture dir: staging costs three small
-    * Spark write jobs, so it runs once per JVM and is reused — bench
-    * timings then measure the stream, not driver-side file staging.
-    */
-  private val stagedDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def eventsStreamWithSentinels(spark: SparkSession, dir: String,
       filesPerTrigger: Int = 1): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType = tsDiskType(spark, dir)
-    val stage = stagedDirs.computeIfAbsent(fixtureKey(dir), _ => stageSentinels(spark, dir))
+    // staging costs three small Spark write jobs, so it runs once per
+    // fixture and session — bench timings then measure the stream, not
+    // driver-side file staging
+    val stage = graft.Derived.get(spark, "stream.sentinels", eventsFile(dir))(
+      stageSentinels(spark, dir))
     normalizeTs(
       spark.readStream
         .schema(eventsSchema(tsType))
@@ -223,11 +209,6 @@ object RecordStream {
     */
   val StreamShufflePartitions = "8"
 
-  /** Staged Kinesis-like shard logs, one per fixture dir (memoized like
-    * the sentinel staging — runs once per JVM, outside any timed path).
-    */
-  private val kinesisStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Stage the events fixture in the reference's stream shape: [[NumShards]]
     * shard logs [REF A1], records routed by partition key (user_id) mod
     * shard count, ordered by (ts, event_id) within each shard, payload in
@@ -236,13 +217,14 @@ object RecordStream {
     * fixture *creation* — the reference producer is likewise a single
     * driver loop (AmazonKinesisRecordProducerSample.java:122-137) — not a
     * query path; queries read the staged logs through the distributed
-    * [[graft.streaming.source.KinesisLikeProvider]].
+    * [[graft.streaming.source.KinesisLikeProvider]]. Memoized like the
+    * sentinel staging — once per fixture and session, outside any timed
+    * path.
     */
   def kinesisFixture(spark: SparkSession, dir: String): String =
-    kinesisStaged.computeIfAbsent(fixtureKey(dir), _ => {
-      val d = dir
+    graft.Derived.get(spark, "stream.kinesisFixture", eventsFile(dir)) {
       val stage = graft.Scratch.dir("graft_kinesis_")
-      val rows = graft.Tables.events(spark, d)
+      val rows = graft.Tables.events(spark, dir)
         .select(
           pmod(col("user_id"), lit(NumShards)).cast("int").as("shard"),
           (expr("unix_micros(ts)") * 1000L).as("ts_nanos"),
@@ -261,10 +243,7 @@ object RecordStream {
         writers(r.getInt(0)).print(s"${r.getLong(1)}\t${r.getString(2)}\t${r.getString(3)}\n")
       } finally writers.values.foreach(_.close())
       stage
-    })
-
-  private val kinesisReshardStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** The events fixture staged MID-RESHARD [REF A14]: shard 0 was split at
     * 2024-01-15 — records before the split live in the (now closed) parent
@@ -275,12 +254,11 @@ object RecordStream {
     * independently.
     */
   def kinesisReshardFixture(spark: SparkSession, dir: String): String =
-    kinesisReshardStaged.computeIfAbsent(fixtureKey(dir), _ => {
-      val d = dir
+    graft.Derived.get(spark, "stream.kinesisReshardFixture", eventsFile(dir)) {
       val stage = graft.Scratch.dir("graft_kinesis_rs_")
       val splitNanos = java.time.Instant.parse("2024-01-15T00:00:00Z")
         .getEpochSecond * 1000000000L
-      val rows = graft.Tables.events(spark, d)
+      val rows = graft.Tables.events(spark, dir)
         .select(
           when(pmod(col("user_id"), lit(NumShards)) =!= 0, "keep")
             .otherwise(when(expr("unix_micros(ts)") * 1000L < splitNanos,
@@ -310,7 +288,7 @@ object RecordStream {
       try topo.print("shardId-000000000100\tshardId-000000000000\n")
       finally topo.close()
       stage
-    })
+    }
 
   /** The events fixture replayed through the native shard-ordered
     * DataSourceV2 source — the engine's own "Kinesis consumer" surface.

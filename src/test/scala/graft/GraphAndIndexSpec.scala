@@ -32,7 +32,6 @@ class GraphAndIndexSpec extends SparkSuite {
   }
 
   test("graph kernels reject containsNull arrays at analysis, not silently as zeros") {
-    graft.functions.GraftFunctions.register(spark)
     // array() of a nullable expression carries containsNull=true; getLong
     // on a null slot would read 0, so the kernel must refuse at analysis
     val nullable = spark.range(1).selectExpr(

@@ -23,12 +23,36 @@ class MaterializeGateSpec extends AnyFunSuite with SparkSuite {
       assert(above.queryExecution.optimizedPlan.collectLeaves().exists(
         _.isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation]),
         "above-gate materialization should read back from scratch parquet")
+      // below the gate the frame is a checkpoint: pinned blocks, no scan
       assert(below.queryExecution.optimizedPlan.isInstanceOf[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan])
+        org.apache.spark.sql.execution.LogicalRDD],
+        "below-gate materialization should be a local checkpoint")
       val a = above.orderBy("doc_id").collect().toSeq
       val b = below.orderBy("doc_id").collect().toSeq
       assert(a == b, "gated paths must return identical rows")
     } finally spark.conf.unset("graft.materialize.localMaxInputBytes")
+  }
+
+  test("Materialize.gated fails closed: an input without stats takes the parquet path") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val noStats = new org.apache.spark.sql.sources.BaseRelation
+        with org.apache.spark.sql.sources.TableScan {
+      override def sqlContext = spark.sqlContext
+      override def schema = StructType(Seq(StructField("x", LongType)))
+      override def sizeInBytes: Long = throw new IllegalStateException("stats unavailable")
+      override def buildScan() = spark.sparkContext.parallelize(Seq(Row(1L)))
+    }
+    val input = spark.baseRelationToDataFrame(noStats)
+    intercept[IllegalStateException](input.queryExecution.optimizedPlan.stats)
+    val frame = Tables.documents(spark, dir).selectExpr("doc_id", "length(text) AS n")
+    val gated = operators.Materialize.gated(input, frame, "spec-nostats")
+    val plan = gated.queryExecution.optimizedPlan
+    assert(plan.collectLeaves().exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation]),
+      "an input without stats must take the scratch-parquet path:\n" + plan)
+    assert(!plan.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD], plan)
+    assert(gated.orderBy("doc_id").collect().toSeq == frame.orderBy("doc_id").collect().toSeq)
   }
 
   test("harmonic centrality: shuffle-join fallback above the mask gate matches") {

@@ -437,12 +437,24 @@ class PlanSpec extends SparkSuite {
   }
 
   test("label propagation: every round is keyed joins + keyed min, no pair expansion") {
-    val p = plan("graph_label_propagation")
-    assert(!p.contains("CartesianProduct"), p)
-    assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    // pinned on the lazy round lineage: the declared query checkpoints
+    // round 1 at construction, so its final plan only shows round 2
+    import operators.GraphQueries.{edges, labelRound, labelSeed}
+    val equi = "SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin".r
+    def keyedOnly(df: org.apache.spark.sql.DataFrame): Int = {
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("CartesianProduct"), p)
+      assert(!p.contains("BroadcastNestedLoopJoin"), p)
+      equi.findAllIn(p).size
+    }
+    val pairs = edges(spark, Sf)
+    val r1 = labelRound(pairs, labelSeed(pairs))
+    // one round = two endpoint orientations = exactly 2 equi joins
+    assert(keyedOnly(r1) == 2)
     // two rounds × two endpoint orientations = at least 4 equi joins
-    assert("SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin".r
-      .findAllIn(p).size >= 4, p)
+    assert(keyedOnly(labelRound(pairs, r1)) >= 4)
+    // the declared query: round 2's two joins over the round-1 checkpoint
+    assert(keyedOnly(SparkEntry.queries("graph_label_propagation")(spark, Sf)) >= 2)
   }
 
   test("q04: EXISTS plans as one semi join, no correlated re-scan") {
@@ -899,7 +911,6 @@ class PlanSpec extends SparkSuite {
     // parquet scan with no shuffle — a regression back to the interpreted
     // O(8)-per-position HOF fold shows up as `aggregate(sequence(...` in
     // the projection
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions.{col, length}
     val scanSide = Tables.documents(spark, Sf)
       .filter(length(col("text")) >= 8)

@@ -118,7 +118,6 @@ class PropertySpec extends SparkSuite {
 
   test("cosine_sim matches a plain-Scala reference") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val vecGen = Gen.listOfN(16, Gen.chooseNum(-10, 10).map(_.toFloat))
     forAll2(vecGen, vecGen) { (a: List[Float], b: List[Float]) =>
       val df = Seq((a, b)).toDF("a", "b")
@@ -291,7 +290,6 @@ class PropertySpec extends SparkSuite {
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(got.nonEmpty, "fixture contains near-dups the neighborhood must find")
     // brute-force all-pairs shingle Jaccard (reference model, corpus is small here)
-    graft.functions.GraftFunctions.register(spark)
     val sh = Tables.documents(spark, dir)
       .withColumn("tk", expr("array_remove(split(text, ' ', -1), '')"))
       .filter(size(col("tk")) >= 4)
@@ -690,7 +688,6 @@ class PropertySpec extends SparkSuite {
     // PPJoin's exactness claim: joining only on rarest-prefix shingles
     // must lose NO pair above the threshold — compare against the
     // all-shingle inverted index (no prefix cut) on the same fixture
-    functions.GraftFunctions.register(spark)
     val sh = Tables.documents(spark, Sf)
       .withColumn("tk", expr("array_remove(split(text, ' ', -1), '')"))
       .filter(size(col("tk")) >= 4)

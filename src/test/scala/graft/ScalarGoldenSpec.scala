@@ -24,6 +24,24 @@ class ScalarGoldenSpec extends SparkSuite {
     assert(one("CAST(bround(2.675, 2) AS DOUBLE)") == 2.68) // decimal literal: half → even last digit
   }
 
+  test("roundCents: the oracle's std::round(x * 100) / 100 on ties, not round(x, 2)") {
+    import org.apache.spark.sql.functions.lit
+    def cents(x: Double): Double =
+      spark.range(1).select(operators.SharedExprs.roundCents(lit(x))).head().getDouble(0)
+    // x * 100 lands below the tie (100.4999…, 28.4999…): round(x, 2)
+    // rounds the decimal string "1.005" half-up, the oracle the binary value
+    assert(one("round(CAST(1.005 AS DOUBLE), 2)") == 1.01)
+    assert(cents(1.005) == 1.0)
+    assert(cents(0.285) == 0.28)
+    // …and above it (834.5000…01): both round up
+    assert(cents(8.345) == 8.35)
+    // exact binary ties round half away from zero, like std::round
+    assert(cents(0.125) == 0.13)
+    assert(cents(-0.125) == -0.13)
+    assert(cents(5785924.195) == 5785924.2)
+    assert(cents(1234.5) == 1234.5)
+  }
+
   test("json_tuple and schema_of_json") {
     val r = spark.sql(
       """SELECT json_tuple('{"a": 1, "b": "x"}', 'a', 'b')""").head()

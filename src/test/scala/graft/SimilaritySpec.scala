@@ -53,7 +53,6 @@ class SimilaritySpec extends SparkSuite {
 
   test("mips norm-bound prune is exact: equals the unpruned dot top-5") {
     import org.apache.spark.sql.expressions.Window
-    functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, Sf)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
