@@ -127,7 +127,7 @@ object Bench {
           -1.0
       } finally {
         // Post-timing sweep hygiene: memory-sink tables (one per streaming
-        // query, up to fixture-sized) and intra-query .cache()s otherwise
+        // query, up to fixture-sized) and any leftover cached frames otherwise
         // accumulate on the driver heap across the 120+ query sweep and
         // tax late queries with GC — measured as a 1.5-2.5x in-sweep vs
         // solo gap on the last streaming queries. Each query (re)creates

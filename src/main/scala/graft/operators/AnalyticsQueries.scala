@@ -23,6 +23,12 @@ import org.apache.spark.sql.functions._
   */
 object AnalyticsQueries extends QueryModule {
 
+  /** Daily order revenue in exact integer cents: (day, x). */
+  private def dailyCents(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .groupBy(to_date(col("o_orderdate")).as("day"))
+      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"))
+
   // ------------------------------------------------------------------
   // Spearman rank correlation, per nation, between a customer's account
   // balance and their lifetime spend. Average ranks for ties are kept as
@@ -665,12 +671,9 @@ object AnalyticsQueries extends QueryModule {
   // ------------------------------------------------------------------
   def autocorrLag(s: SparkSession, dir: String): DataFrame = {
     // the daily frame is consumed three times (moment totals + both lag
-    // sides); localCheckpoint materializes its ~|days| rows once so the
+    // sides); it is materialized once (~|days| rows) so the
     // orders scan + aggregation run once, not three times
-    val daily = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"))
-      .localCheckpoint()
+    val daily = Materialize.gated(Tables.orders(s, dir), dailyCents(s, dir), "autocorr-lag-daily")
     val tot = daily.agg(count(lit(1)).as("n"), sum("x").as("t"),
       sum(expr("CAST(x AS DECIMAL(19,0)) * CAST(x AS DECIMAL(19,0))"))
         .cast("double").as("sxx"))
@@ -736,13 +739,10 @@ object AnalyticsQueries extends QueryModule {
   def theilSenTrend(s: SparkSession, dir: String): DataFrame = {
     // the daily frame feeds both pair sides and the day census; ~|days|
     // rows materialized once
-    val daily = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"))
+    val daily = Materialize.gated(Tables.orders(s, dir), dailyCents(s, dir)
       .select(year(col("day")).as("yr"),
         datediff(col("day"), lit("1970-01-01").cast("date")).cast("long").as("d"),
-        col("x"))
-      .localCheckpoint()
+        col("x")), "theil-sen-trend-daily")
     val nDays = daily.groupBy("yr").agg(count(lit(1)).as("n_days"))
     val a = daily.select(col("yr"), col("d").as("da"), col("x").as("xa"))
     val b = daily.select(col("yr"), col("d").as("db"), col("x").as("xb"))
@@ -806,11 +806,10 @@ object AnalyticsQueries extends QueryModule {
       .filter(year(col("o_orderdate")) === yr)
       .groupBy("o_custkey")
       .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT) DIV 100")).as(s"s$yr"))
-    val exp = spend(1996)
+    val exp = Materialize.gated(Tables.orders(s, dir), spend(1996)
       .join(spend(1995), Seq("o_custkey"), "left")
       .select(col("o_custkey").mod(2).as("variant"),
-        col("s1996").as("y"), coalesce(col("s1995"), lit(0L)).as("x"))
-      .localCheckpoint()
+        col("s1996").as("y"), coalesce(col("s1995"), lit(0L)).as("x")), "cuped-adjust-exp")
     val mom = exp.agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
       sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"),
       sum(col("y") * col("y")).as("syy"))
@@ -979,13 +978,10 @@ object AnalyticsQueries extends QueryModule {
   // any corpus size.
   // ------------------------------------------------------------------
   def mannKendall(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"))
+    val daily = Materialize.gated(Tables.orders(s, dir), dailyCents(s, dir)
       .select(year(col("day")).as("yr"),
         datediff(col("day"), lit("1970-01-01").cast("date")).cast("long").as("d"),
-        col("x"))
-      .localCheckpoint()
+        col("x")), "mann-kendall-daily")
     val a = daily.select(col("yr"), col("d").as("da"), col("x").as("xa"))
     val b = daily.select(col("yr"), col("d").as("db"), col("x").as("xb"))
     val sStat = a.join(b, Seq("yr")).filter(col("da") < col("db"))
@@ -1052,13 +1048,10 @@ object AnalyticsQueries extends QueryModule {
   // division. Calendar-bounded: ≤366·367/2 Walsh pairs per year.
   // ------------------------------------------------------------------
   def hodgesLehmann(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"))
+    val daily = Materialize.gated(Tables.orders(s, dir), dailyCents(s, dir)
       .select(year(col("day")).as("yr"),
         datediff(col("day"), lit("1970-01-01").cast("date")).cast("long").as("d"),
-        col("x"))
-      .localCheckpoint()
+        col("x")), "hodges-lehmann-daily")
     val a = daily.select(col("yr"), col("d").as("da"), col("x").as("xa"))
     val b = daily.select(col("yr"), col("d").as("db"), col("x").as("xb"))
     val walsh = a.join(b, Seq("yr")).filter(col("da") <= col("db"))
@@ -1105,9 +1098,7 @@ object AnalyticsQueries extends QueryModule {
   // candidate split — no pair expansion at all, O(days) per year.
   // ------------------------------------------------------------------
   def changepointMean(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"))
+    val daily = dailyCents(s, dir)
       .select(year(col("day")).as("yr"), col("day"), col("x"))
     val p = Window.partitionBy("yr")
     val w = p.orderBy("day")
@@ -1172,9 +1163,7 @@ object AnalyticsQueries extends QueryModule {
   // aggregate-first discipline), means floored to the cent for display.
   // ------------------------------------------------------------------
   def smaCrossover(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"))
+    val daily = dailyCents(s, dir)
     val w = Window.orderBy("day")
     def trail(n: Int, c: String, cnt: String) = Seq(
       sum("x").over(w.rowsBetween(-(n - 1), Window.currentRow)).as(c),
@@ -1228,15 +1217,12 @@ object AnalyticsQueries extends QueryModule {
   // of integer-cent-derived values, rounded at dollar precision.
   // ------------------------------------------------------------------
   def seasonalDecompose(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"))
+    val daily = dailyCents(s, dir)
     val c7 = Window.orderBy("day").rowsBetween(-3, 3)
-    val det = daily
+    val det = Materialize.gated(Tables.orders(s, dir), daily
       .withColumn("trend", sum("x").over(c7).cast("double") / count(lit(1)).over(c7).cast("double"))
       .withColumn("dow", expr("((dayofweek(day) + 5) % 7) + 1"))
-      .withColumn("d", col("x").cast("double") - col("trend"))
-      .localCheckpoint()
+      .withColumn("d", col("x").cast("double") - col("trend")), "seasonal-decompose-det")
     val seasonal = det.groupBy("dow")
       .agg(count(lit(1)).as("n_days"), avg("d").as("seas"))
     det.join(seasonal, Seq("dow"))
@@ -1283,9 +1269,7 @@ object AnalyticsQueries extends QueryModule {
   // 7-row frames so per-row state is O(7).
   // ------------------------------------------------------------------
   def hampelOutliers(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"))
+    val daily = dailyCents(s, dir)
     val t7 = Window.orderBy("day").rowsBetween(-6, 0)
     daily
       .withColumn("med7", expr("percentile(x, 0.5)").over(t7))
@@ -1337,11 +1321,8 @@ object AnalyticsQueries extends QueryModule {
   // exp(), computed from the same integers on both engines.
   // ------------------------------------------------------------------
   def pettittChangepoint(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"))
-      .select(year(col("day")).as("yr"), col("day"), col("x"))
-      .localCheckpoint()
+    val daily = Materialize.gated(Tables.orders(s, dir), dailyCents(s, dir)
+      .select(year(col("day")).as("yr"), col("day"), col("x")), "pettitt-changepoint-daily")
     val a = daily.select(col("yr"), col("day").as("da"), col("x").as("xa"))
     val b = daily.select(col("yr"), col("day").as("db"), col("x").as("xb"))
     val pairs = a.join(b, Seq("yr")).filter(col("da") < col("db"))
@@ -1421,15 +1402,14 @@ object AnalyticsQueries extends QueryModule {
       .join(broadcast(Tables.nation(s, dir)),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name"))
-    val daily = Tables.orders(s, dir)
+    val daily = Materialize.gated(Tables.orders(s, dir), Tables.orders(s, dir)
       .filter(year(col("o_orderdate")) === 1995)
       .join(cust, col("o_custkey") === col("c_custkey"))
       .groupBy(col("n_name"), to_date(col("o_orderdate")).as("day"))
       .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"))
       .select(col("n_name"),
         datediff(col("day"), lit("1970-01-01").cast("date")).cast("long").as("d"),
-        col("x"))
-      .localCheckpoint()
+        col("x")), "bh-fdr-daily")
     val a = daily.select(col("n_name"), col("d").as("da"), col("x").as("xa"))
     val b = daily.select(col("n_name"), col("d").as("db"), col("x").as("xb"))
     val sStat = a.join(b, Seq("n_name")).filter(col("da") < col("db"))
@@ -2085,9 +2065,7 @@ object AnalyticsQueries extends QueryModule {
   // cents end to end.
   // ------------------------------------------------------------------
   def peakDetection(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"))
+    val daily = dailyCents(s, dir)
     val w = Window.orderBy("day")
     daily
       .withColumn("prev", lag("x", 1).over(w))
@@ -2339,11 +2317,10 @@ object AnalyticsQueries extends QueryModule {
   // corpus size.
   // ------------------------------------------------------------------
   def kendallTau(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(s, dir)
+    val daily = Materialize.gated(Tables.orders(s, dir), Tables.orders(s, dir)
       .groupBy(year(col("o_orderdate")).as("yr"), to_date(col("o_orderdate")).as("day"))
       .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"),
-        count(lit(1)).as("y"))
-      .localCheckpoint()
+        count(lit(1)).as("y")), "kendall-tau-daily")
     val a = daily.select(col("yr"), col("day").as("da"), col("x").as("xa"), col("y").as("ya"))
     val b = daily.select(col("yr"), col("day").as("db"), col("x").as("xb"), col("y").as("yb"))
     val cd = a.join(b, Seq("yr")).filter(col("da") < col("db"))
@@ -2508,9 +2485,7 @@ object AnalyticsQueries extends QueryModule {
   // family); only full 14-delta windows count.
   // ------------------------------------------------------------------
   def rsiSignal(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"))
+    val daily = dailyCents(s, dir)
     val w1 = Window.orderBy("day")
     val w14 = Window.orderBy("day").rowsBetween(-13, Window.currentRow)
     daily
@@ -2565,15 +2540,14 @@ object AnalyticsQueries extends QueryModule {
   // per-customer spend, two single-row aggregates, one output row.
   // ------------------------------------------------------------------
   def powerMde(s: SparkSession, dir: String): DataFrame = {
-    val per = Tables.orders(s, dir)
+    val per = Materialize.gated(Tables.orders(s, dir), Tables.orders(s, dir)
       .filter(year(col("o_orderdate")) === 1996)
       .groupBy("o_custkey")
       // floor-to-dollar like CUPED: Σx² in CENTS overflows long at sf0.1's
       // per-customer spend (the sf0.1 gate caught exactly this); dollars
       // keep it exact past 100×
       .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT) DIV 100")).as("x"))
-      .withColumn("variant", col("o_custkey") % 2)
-      .localCheckpoint()
+      .withColumn("variant", col("o_custkey") % 2), "power-mde-per")
     per.agg(count(lit(1)).as("n"), sum("x").as("sx"),
         sum(col("x") * col("x")).as("sxx"),
         sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n0"),
@@ -2766,9 +2740,7 @@ object AnalyticsQueries extends QueryModule {
   // ordered window over the aggregate-first daily frame.
   // ------------------------------------------------------------------
   def stochasticOsc(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"))
+    val daily = dailyCents(s, dir)
     val w14 = Window.orderBy("day").rowsBetween(-13, Window.currentRow)
     daily
       .withColumn("mn", min("x").over(w14))
@@ -2829,9 +2801,7 @@ object AnalyticsQueries extends QueryModule {
   // shuffle.
   // ------------------------------------------------------------------
   def holtLinear(s: SparkSession, dir: String): DataFrame = {
-    Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"))
+    dailyCents(s, dir)
       .agg(expr("transform(sort_array(collect_list(struct(day, x))), e -> CAST(e.x AS DOUBLE))")
         .as("xs"))
       .withColumn("st", expr(
@@ -3178,11 +3148,10 @@ object AnalyticsQueries extends QueryModule {
   // engines, so no unordered double sum decides H.
   // ------------------------------------------------------------------
   def kruskalWallis(s: SparkSession, dir: String): DataFrame = {
-    val gv = Tables.lineitem(s, dir)
+    val gv = Materialize.gated(Tables.lineitem(s, dir), Tables.lineitem(s, dir)
       .groupBy(month(col("l_shipdate")).cast("long").as("g"),
         expr("CAST(l_quantity AS BIGINT)").as("v"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("c")), "kruskal-wallis-gv")
     val perv = gv.groupBy("v").agg(sum("c").as("tv"))
       .withColumn("below", coalesce(sum("tv").over(
         Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
@@ -3413,12 +3382,11 @@ object AnalyticsQueries extends QueryModule {
   // only corpus-sized pass; ranking walks the ≤ m·n collapsed frame.
   // ------------------------------------------------------------------
   def kendallsW(s: SparkSession, dir: String): DataFrame = {
-    val rev = Tables.orders(s, dir)
+    val rev = Materialize.gated(Tables.orders(s, dir), Tables.orders(s, dir)
       .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
       .join(broadcast(Tables.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
       .groupBy(year(col("o_orderdate")).as("yr"), col("n_name"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("rev"))
-      .localCheckpoint()
+      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("rev")), "kendalls-w-rev")
     val m = rev.select(countDistinct("yr").as("m"))
     // Panel balance FIRST: ranks, rank sums, and the tie census must all
     // be computed over the SAME set of judged subjects. Ranking all
@@ -3697,9 +3665,7 @@ object AnalyticsQueries extends QueryModule {
       "element_at(a, 4 + (CAST(element_at(a, 3) AS INT) % 7))",
       "e")
     val initSlots = (1 to 7).map(j => s"xs[${j - 1}] - l0").mkString(", ")
-    Tables.orders(spark, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"))
+    dailyCents(spark, dir)
       .agg(expr("transform(sort_array(collect_list(struct(day, x))), e -> CAST(e.x AS DOUBLE))")
         .as("xs"))
       .withColumn("l0", expr("(xs[0] + xs[1] + xs[2] + xs[3] + xs[4] + xs[5] + xs[6]) / 7.0"))
@@ -5142,9 +5108,7 @@ object AnalyticsQueries extends QueryModule {
   // power/share expression.
   // ------------------------------------------------------------------
   def spectralWeekly(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"))
+    val daily = dailyCents(s, dir)
     val w = Window.orderBy("day")
     val full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     // round(cos(2πk/7)·1e6), round(sin(2πk/7)·1e6) for k = 0..6

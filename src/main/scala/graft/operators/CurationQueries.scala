@@ -128,8 +128,9 @@ object CurationQueries extends QueryModule {
     */
   def tokenPacking(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-      .withColumn("n_tokens", expr(s"size($toks)").cast("long"))
-    DistributedOrder.globalCumsum(docs, col("n_tokens"), "cum", col("doc_id"))
+    DistributedOrder.globalCumsum(docs,
+        docs.withColumn("n_tokens", expr(s"size($toks)").cast("long")),
+        col("n_tokens"), "cum", col("doc_id"))
       .withColumn("pack_id", expr("CAST((cum - n_tokens) div 2048 AS INT)"))
       .groupBy("pack_id")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("pack_tokens"),
@@ -507,15 +508,16 @@ object CurationQueries extends QueryModule {
       .groupBy("src", "dst").agg(count(lit(1)).as("w"))
     val outdeg = edges.groupBy("src").agg(sum("w").as("out_w"))
     // transition probabilities — 5 iterations re-read this frame. It is
-    // ≤ 13×13 rows BY CONSTRUCTION of the host formula, but .cache()
-    // left the corpus-scan lineage in the plan, so the unrolled pyramid
-    // planned a 92-Exchange tree; localCheckpoint (optimization r18,
-    // guide §3.3 plan-size) truncates it — one corpus pass, then every
-    // iteration plans over a ≤169-row leaf.
-    val e = edges.join(outdeg, "src")
-      .select(col("src"), col("dst"), (col("w") / col("out_w").cast("double")).as("p"))
-      .localCheckpoint()
-    val nodes = e.select(col("src").as("host")).distinct().localCheckpoint()
+    // ≤ 13×13 rows BY CONSTRUCTION of the host formula; materializing it
+    // cuts the corpus-scan lineage out of the plan (a cached frame keeps
+    // it, and the unrolled pyramid then plans a 92-Exchange tree) — one
+    // corpus pass, then every iteration plans over a ≤169-row leaf.
+    val docs = Tables.documents(s, dir)
+    val e = Materialize.gated(docs, edges.join(outdeg, "src")
+      .select(col("src"), col("dst"), (col("w") / col("out_w").cast("double")).as("p")),
+      "hostpr-e")
+    val nodes = Materialize.gated(docs, e.select(col("src").as("host")).distinct(),
+      "hostpr-nodes")
     var ranks = nodes.withColumn("pr", lit(1.0 / 13))
     // the rank/inflow frames are host-domain-bounded (≤ 13 rows BY
     // CONSTRUCTION of the edge formula), so both per-iteration joins ride
@@ -1236,27 +1238,20 @@ object CurationQueries extends QueryModule {
     * diverges from [[bpePairs]]' round-1 ranking (the recount matters).
     */
   /** The shared k=20 trainer loop (census → argmax → greedy apply →
-    * recount), returning BOTH the final encoding frame and the learned
-    * merge sequence — [[bpeTrain]] emits the sequence, [[bpeTokenize]]
-    * consumes the final encodings. The census ignores 1-token rows, so a
-    * caller may include single-character words (which never merge) without
-    * changing the learned sequence.
+    * recount), returning the final encoding frame, the learned merge
+    * sequence and per-step snapshots — [[bpeTrain]] emits the sequence,
+    * [[bpeTokenize]] consumes the final encodings. The census ignores
+    * 1-token rows, so a caller may include single-character words (which
+    * never merge) without changing the learned sequence. `captureAt`
+    * names the merge counts whose encoding frames are kept (each already
+    * materialized by the loop's per-step policy, so a snapshot is a
+    * handle, not extra work). Step 0 is the character-split init;
+    * `docs` is the corpus `enc0` derives from (the size-gate input).
     */
-  private[graft] def bpeTrainLoop(enc0: DataFrame)
-      : (DataFrame, Seq[(Int, String, String, String, Long)]) = {
-    val (enc, learned, _) = bpeTrainLoopCapturing(enc0, Set.empty)
-    (enc, learned)
-  }
-
-  /** [[bpeTrainLoop]] plus per-step snapshots: `captureAt` names the merge
-    * counts whose encoding frames are kept (each already
-    * localCheckpoint()ed by the loop's per-step policy, so a snapshot is
-    * a handle, not extra work). Step 0 is the character-split init.
-    */
-  private[graft] def bpeTrainLoopCapturing(enc0: DataFrame, captureAt: Set[Int])
+  private[graft] def bpeTrainLoopCapturing(docs: DataFrame, enc0: DataFrame, captureAt: Set[Int])
       : (DataFrame, Seq[(Int, String, String, String, Long)], Map[Int, DataFrame]) = {
     val k = 20
-    var enc = enc0.localCheckpoint()
+    var enc = Materialize.gated(docs, enc0, "bpe-enc")
     val snaps = scala.collection.mutable.Map[Int, DataFrame]()
     if (captureAt.contains(0)) snaps(0) = enc
     val learned = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
@@ -1269,7 +1264,7 @@ object CurationQueries extends QueryModule {
       else {
         val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         learned += ((learned.size + 1, l, r, l + r, c))
-        enc = bpeApply(enc, l, r).localCheckpoint()
+        enc = Materialize.gated(docs, bpeApply(enc, l, r), "bpe-enc")
         if (captureAt.contains(learned.size)) snaps(learned.size) = enc
       }
     }
@@ -1298,12 +1293,13 @@ object CurationQueries extends QueryModule {
   private[graft] def bpeTrained(s: SparkSession, dir: String)
       : (DataFrame, Seq[(Int, String, String, String, Long)], Map[Int, DataFrame]) =
     graft.Derived.get(s, "curation.bpeTrained", DedupQueries.docsFile(dir)) {
-      val init = Tables.documents(s, dir)
+      val docs = Tables.documents(s, dir)
+      val init = docs
         .select(explode(expr(toks)).as("word"))
         .groupBy("word").agg(count(lit(1)).as("wc"))
         .select(col("word"), col("wc"),
           expr(s"concat('$Sep2', regexp_replace(word, '(.)', '$$1$Sep2'))").as("e"))
-      bpeTrainLoopCapturing(init, Set(0, 5, 10, 20))
+      bpeTrainLoopCapturing(docs, init, Set(0, 5, 10, 20))
     }
 
   /** The DuckDB twin replays the identical loop as 20 UNROLLED chained
@@ -1375,7 +1371,7 @@ object CurationQueries extends QueryModule {
   /** Corpus tokenization with the LEARNED vocabulary (VERDICT r13 #6) —
     * the artifact a training pipeline actually emits: every document
     * encoded into its token-ID sequence under the k=20 trained merges
-    * ([[bpeTrainLoop]]), closing the loop from [[bpeTrain]] (which learns
+    * ([[bpeTrainLoopCapturing]]), closing the loop from [[bpeTrain]] (which learns
     * the merges) through [[bpeEncode]] (which only counts tokens). Scale
     * shape: the trainer and the per-word id assembly run on the
     * distinct-word frame (vocabulary-sized); the corpus-side work is one
@@ -1523,7 +1519,7 @@ object CurationQueries extends QueryModule {
     val scored = db.join(broadcast(llr), "b")
       .groupBy("doc_id", "lang")
       .agg(sum(col("n") * col("llr_c")).as("weight_c"))
-    val ranked = DistributedOrder.globalRowNumber(scored, "rk",
+    val ranked = DistributedOrder.globalRowNumber(Tables.documents(s, dir), scored, "rk",
       col("weight_c").desc, col("doc_id").asc)
     // the quota count reads the ranked frame (whose lineage is the
     // DistributedOrder checkpoint), never re-deriving the corpus pipeline
@@ -1649,7 +1645,7 @@ object CurationQueries extends QueryModule {
     val dup = d.withColumn("n_copies",
       count(lit(1)).over(Window.partitionBy("content_hash")))
     val ranked = DistributedOrder
-      .globalRowNumber(dup, "grank", col("score"), col("doc_id"))
+      .globalRowNumber(Tables.documents(s, dir), dup, "grank", col("score"), col("doc_id"))
       .crossJoin(broadcast(d.agg(count(lit(1)).as("n_tot"))))
     // NTile(10)'s exact bucket rule: with n = 10q + r rows, buckets
     // 1..r hold q+1 rows and buckets r+1..10 hold q (Spark and DuckDB
@@ -2090,17 +2086,16 @@ object CurationQueries extends QueryModule {
     var lastCounts: DataFrame = null
     var lastTotal = 0L
     for (_ <- 1 to 2) {
-      // localCheckpoint (the BPE-trainer per-step policy): the two HOF
+      // materialized (the BPE-trainer per-step policy): the two HOF
       // folds are interpreted (ArrayAggregate has no codegen), and
       // CollapseProject would otherwise inline the forward-DP fold into
       // every candidate reference of the backtrace fold AND into every
       // downstream consumer — materializing the vocabulary-sized frame
       // once per iteration makes each fold evaluate exactly once per word
-      val seg = words
+      val seg = Materialize.gated(Tables.documents(s, dir), words
         .withColumn("qm", typedLit(vocab))
         .withColumn("best", expr(uniForwardExpr))
-        .withColumn("seg", expr(uniBackExpr))
-        .localCheckpoint()
+        .withColumn("seg", expr(uniBackExpr)), "unigram-seg")
       trace += ((vocab, seg))
       val counts = seg.select(col("wc"), explode(col("seg")).as("piece"))
         .groupBy("piece").agg(sum("wc").as("cnt"))
@@ -2451,7 +2446,7 @@ object CurationQueries extends QueryModule {
     val (feats, ws) = clfTrain(s, dir)
     val scored = clfScored(feats, ws.last)
     val ranked = DistributedOrder
-      .globalRowNumber(scored, "grank", col("p"), col("doc_id"))
+      .globalRowNumber(Tables.documents(s, dir), scored, "grank", col("p"), col("doc_id"))
       .crossJoin(broadcast(scored.agg(count(lit(1)).as("n_tot"))))
     ranked
       .withColumn("q", expr("n_tot div 10"))
@@ -2478,7 +2473,7 @@ object CurationQueries extends QueryModule {
     val (feats, ws) = clfTrain(s, dir)
     val scored = clfScored(feats, ws.last)
     val ranked = DistributedOrder
-      .globalRowNumber(scored, "grank", col("p"), col("doc_id"))
+      .globalRowNumber(Tables.documents(s, dir), scored, "grank", col("p"), col("doc_id"))
       .crossJoin(broadcast(scored.agg(count(lit(1)).as("n_tot"))))
       .withColumn("kept", col("grank") * 2 > col("n_tot"))
     ranked.groupBy("source")
@@ -2578,7 +2573,7 @@ object CurationQueries extends QueryModule {
       _.filter(col("doc_id") % 5 =!= 0))
     val scored = clfScored(feats.filter(col("doc_id") % 5 === 0), ws.last)
     val ranked = DistributedOrder
-      .globalRowNumber(scored, "grank", col("p"), col("doc_id"))
+      .globalRowNumber(Tables.documents(s, dir), scored, "grank", col("p"), col("doc_id"))
       .crossJoin(broadcast(scored.agg(count(lit(1)).as("n_tot"))))
     ranked
       .withColumn("q", expr("n_tot div 10"))

@@ -419,20 +419,16 @@ object DedupQueries extends QueryModule {
   // The signature is computed by the native codegen'd MinhashSignature
   // expression (functions.MinhashOps): one md5 per shingle, component-
   // wise minima of h1 + k*h2 in a single loop — bit-identical to the
-  // DuckDB oracle's conv()-based hex arithmetic. The frame is consumed
-  // at least twice by every caller (band self-join; minhashLsh adds two
-  // verify joins) so it is cached; at cluster scale this is the frame you
-  // would checkpoint (16 longs + shingle set/doc). Same plan in both
-  // callers → one shared cache entry.
-  private def lshDocs(s: SparkSession, dir: String): DataFrame = {
+  // DuckDB oracle's conv()-based hex arithmetic. Lazy: a caller whose
+  // returned plan reads it twice (band self-join plus the verify joins)
+  // materializes it through Materialize.gated.
+  private def lshDocs(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .withColumn("tk", expr(toks))
       .filter(size(col("tk")) >= 4)
       .withColumn("shingles", expr("word_shingles(tk, 4)"))
       .withColumn("sig", expr("minhash_sig(shingles, 16)"))
       .select("doc_id", "shingles", "sig")
-      .cache()
-  }
 
   /** Distinct LSH candidate pairs (doc_a < doc_b), keys only — the shared
     * front half of [[minhashLsh]] (which re-joins the wide columns for
@@ -485,9 +481,9 @@ object DedupQueries extends QueryModule {
     * (a handful of longs); `clique_pairs` is what an uncapped all-pairs
     * bucket join WOULD have emitted — the avoided quadratic.
     */
-  private[graft] def pairCensus(s: SparkSession, dir: String): Seq[(String, Long)] = {
-    val docs = lshDocs(s, dir)
-    try {
+  private[graft] def pairCensus(s: SparkSession, dir: String): Seq[(String, Long)] =
+    Materialize.scoped { m =>
+      val docs = m(lshDocs(s, dir))
       // DIV, not `/`: Spark's slash is double division; bucket sizes are
       // counts, and the census must stay exact longs
       val mh = mhBanded(docs).groupBy("band", "bhash").count()
@@ -534,13 +530,12 @@ object DedupQueries extends QueryModule {
         "containment_pairs_precap" -> ct.getLong(0),
         "containment_pairs_postcap" -> ct.getLong(1),
         "containment_max_df" -> ct.getLong(2))
-    } finally docs.unpersist()
-  }
+    }
 
   def minhashLsh(s: SparkSession, dir: String): DataFrame = {
-    val docs = lshDocs(s, dir)
+    val docs = Materialize.gated(Tables.documents(s, dir), lshDocs(s, dir), "lsh-docs")
     val cand = lshCandidates(docs)
-    // Verify joins stream the docs cache map-side against the BROADCAST
+    // Verify joins stream the materialized docs map-side against the BROADCAST
     // candidate set (LSH keeps candidates near-linear and tiny relative to
     // the corpus) — no shuffle of the wide shingle/sig columns at any
     // point, and no re-plan round for AQE to discover the same thing.
@@ -742,11 +737,12 @@ object DedupQueries extends QueryModule {
     val (tbl, sigsPath) = graft.Derived.get(s, "dedup.bandIndex", docsFile(dir), batchMod) {
       val out = graft.Scratch.dir("graft-band-index")
       val tblName = graft.Derived.tableName("graft_band_postings")
-      val corpus = corpusSigsFrame(s, dir, batchMod).cache()
-      mhBanded(corpus).write.mode("overwrite")
-        .bucketBy(8, "band", "bhash").saveAsTable(tblName)
-      corpus.write.mode("overwrite").parquet(s"$out/sigs")
-      corpus.unpersist()
+      Materialize.scoped { m =>
+        val corpus = m(corpusSigsFrame(s, dir, batchMod))
+        mhBanded(corpus).write.mode("overwrite")
+          .bucketBy(8, "band", "bhash").saveAsTable(tblName)
+        corpus.write.mode("overwrite").parquet(s"$out/sigs")
+      }
       (tblName, s"$out/sigs")
     }
     (s.table(tbl), graft.Tables.loadPath(s, sigsPath))
@@ -769,7 +765,7 @@ object DedupQueries extends QueryModule {
     * filter over the ONLY documents scan) stays visible in consumer plans
     * — PlanSpec pins it.
     */
-  private def batchSigs(s: SparkSession, dir: String, batchMod: Int = 9): DataFrame = {
+  private[graft] def batchSigs(s: SparkSession, dir: String, batchMod: Int = 9): DataFrame = {
     val frame = graft.Derived.get(s, "dedup.batchSigs", docsFile(dir), batchMod) {
       Tables.documents(s, dir)
         .filter(col("doc_id") % 10 === batchMod)
@@ -837,8 +833,8 @@ object DedupQueries extends QueryModule {
   private[graft] def corpusClusterLabels(s: SparkSession, dir: String, batchMod: Int = 9): DataFrame = {
     val path = graft.Derived.get(s, "dedup.corpusClusterLabels", docsFile(dir), batchMod) {
       val out = graft.Scratch.dir("graft-corpus-cc-labels")
-      val pairs = starEdges(bandIndex(s, dir, batchMod)._1).cache()
-      try convergeLabels(s, pairs, out) finally pairs.unpersist()
+      convergeLabels(s, Materialize.gated(Tables.documents(s, dir),
+        starEdges(bandIndex(s, dir, batchMod)._1), "corpus-cc-pairs"), out)
       out
     }
     graft.Tables.loadPath(s, path)
@@ -906,14 +902,14 @@ object DedupQueries extends QueryModule {
 
   def incrementalClusters(s: SparkSession, dir: String, batchMod: Int = 9): DataFrame = {
     val base = corpusClusterLabels(s, dir, batchMod)
-    val contracted = incrementalClusterDelta(s, dir, batchMod).localCheckpoint()
     // the delta-closure scratch dir is REUSED per (fixture, split) —
     // convergeLabels writes mode-overwrite, so repeated invocations (bench
     // best-of-N) recycle one directory instead of allocating a fresh one
     // per call (ADVICE r14 #5)
     val compOut = graft.Derived.get(s, "dedup.deltaCcDir", docsFile(dir), batchMod)(
       graft.Scratch.dir("graft-delta-cc"))
-    convergeLabels(s, contracted, compOut)
+    convergeLabels(s, Materialize.gated(Tables.documents(s, dir),
+      incrementalClusterDelta(s, dir, batchMod), "cc-delta"), compOut)
     val comp = s.read.parquet(compOut)
       .withColumnRenamed("doc_id", "node").withColumnRenamed("label", "comp")
     val baseLabelSet = base.select(col("label").as("node")).distinct()
@@ -1035,77 +1031,62 @@ object DedupQueries extends QueryModule {
   private[graft] def clusterLabels(s: SparkSession, dir: String): DataFrame = {
     val path = graft.Derived.get(s, "dedup.clusterLabels", docsFile(dir)) {
       val out = graft.Scratch.dir("graft-cc-labels")
-      computeClusterLabels(s, dir, out)
+      // candidates only — skips minhashLsh's verify joins and global sort,
+      // which the closure never looks at
+      convergeLabels(s, Materialize.gated(Tables.documents(s, dir),
+        lshCandidates(lshDocs(s, dir)), "cc-pairs"), out)
       out
     }
     graft.Tables.loadPath(s, path)
   }
 
-  /** Runs the label propagation to convergence and writes the converged
-    * (doc_id, label) table to `out`; every intermediate cache is released
-    * before returning.
-    */
-  private def computeClusterLabels(s: SparkSession, dir: String, out: String): Unit = {
-    // candidates only — skips minhashLsh's verify joins and global sort,
-    // which the closure never looks at
-    val docs = lshDocs(s, dir)
-    val pairs = lshCandidates(docs).cache()
-    try convergeLabels(s, pairs, out)
-    finally {
-      pairs.unpersist()
-      docs.unpersist()
-    }
-  }
-
   /** Min-label propagation to convergence over an undirected pair graph
     * (cols doc_a, doc_b) — the shared CC loop behind [[clusterLabels]],
     * [[corpusClusterLabels]], and the per-batch delta closure in
-    * [[incrementalClusters]]. Writes the converged (doc_id, label) table
-    * to `out` and releases every intermediate cache before returning.
+    * [[incrementalClusters]]. `pairs` must be materialized (every round's
+    * plan reads it); the iterates are cached only until the converged
+    * (doc_id, label) table is written to `out`.
     */
-  private def convergeLabels(s: SparkSession, pairs: DataFrame, out: String): Unit = {
-    // the dup-pair graph is orders of magnitude smaller than the corpus
-    // (LSH already pruned it); size the propagation's shuffle width to the
-    // graph, not the corpus — the same "partitions follow state size" dial
-    // as the streaming queries. Restored after the loop.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    var labels: DataFrame = null
-    try {
-      val edges = pairs
-        .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      def propagate(l: DataFrame): DataFrame =
-        edges.join(l, edges("doc_b") === l("doc_id"))
-          .select(edges("doc_a").as("doc_id"), col("label"))
-          .union(l) // own label participates in the min
-          .groupBy("doc_id").agg(min("label").as("label"))
-      labels = propagate( // 2 rounds composed LAZILY into one plan: every
-        propagate( // Spark action costs a full job round-trip, so
-          edges.select(col("doc_a").as("doc_id")) // convergence is checked
-            .distinct() // once per 2 hops, not once per hop
-            .withColumn("label", col("doc_id")))).cache()
-      var rounds = 2
-      var changed = propagate(labels).withColumnRenamed("label", "next_label")
-        .join(labels, "doc_id")
-        .filter(col("next_label") =!= col("label")).count()
-      // near-dup components are near-cliques: 2 hops almost always closes
-      // them, and the capped tail loop handles a pathological long chain
-      // (failing loudly rather than looping forever)
-      while (changed > 0 && rounds < 30) {
-        val next = propagate(labels).cache()
-        changed = next.withColumnRenamed("label", "next_label")
+  private def convergeLabels(s: SparkSession, pairs: DataFrame, out: String): Unit =
+    Materialize.scoped { m =>
+      // the dup-pair graph is orders of magnitude smaller than the corpus
+      // (LSH already pruned it); size the propagation's shuffle width to the
+      // graph, not the corpus — the same "partitions follow state size" dial
+      // as the streaming queries. Restored after the loop.
+      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
+      s.conf.set("spark.sql.shuffle.partitions", "4")
+      try {
+        val edges = pairs
+          .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+        def propagate(l: DataFrame): DataFrame =
+          edges.join(l, edges("doc_b") === l("doc_id"))
+            .select(edges("doc_a").as("doc_id"), col("label"))
+            .union(l) // own label participates in the min
+            .groupBy("doc_id").agg(min("label").as("label"))
+        var labels = m(propagate( // 2 rounds composed LAZILY into one plan:
+          propagate( // every Spark action costs a full job round-trip, so
+            edges.select(col("doc_a").as("doc_id")) // convergence is checked
+              .distinct() // once per 2 hops, not once per hop
+              .withColumn("label", col("doc_id")))))
+        var rounds = 2
+        var changed = propagate(labels).withColumnRenamed("label", "next_label")
           .join(labels, "doc_id")
           .filter(col("next_label") =!= col("label")).count()
-        labels.unpersist()
-        labels = next
-        rounds += 1
-      }
-      labels.write.mode("overwrite").parquet(out)
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      if (labels != null) labels.unpersist()
+        // near-dup components are near-cliques: 2 hops almost always closes
+        // them, and the capped tail loop handles a pathological long chain
+        // (failing loudly rather than looping forever)
+        while (changed > 0 && rounds < 30) {
+          val next = m(propagate(labels))
+          changed = next.withColumnRenamed("label", "next_label")
+            .join(labels, "doc_id")
+            .filter(col("next_label") =!= col("label")).count()
+          m.release(labels)
+          labels = next
+          rounds += 1
+        }
+        labels.write.mode("overwrite").parquet(out)
+      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
-  }
 
   /** Oracle CTE chain ending in `comp(doc_id, cluster_id)` — the recursive
     * connected-components closure over the LSH candidates, shared with the
@@ -1329,15 +1310,15 @@ object DedupQueries extends QueryModule {
       .withColumn("centroid", expr("transform(centroid_d, x -> CAST(x AS FLOAT))"))
       .select(col("label").as("c_id"), col("centroid"))
     val wAssign = Window.partitionBy("vec_id").orderBy(desc("c_cos"), asc("c_id"))
-    // cached: consumed three times (both pair sides + the final join) —
-    // without it each consumer re-runs the centroid agg and the broadcast
-    // assign; at cluster scale this is the checkpointed assignment frame
-    val assigned = e.join(broadcast(centroids), lit(true))
+    // materialized: consumed three times (both pair sides + the final
+    // join) — otherwise each consumer re-runs the centroid agg and the
+    // broadcast assign
+    val assigned = Materialize.gated(e, e.join(broadcast(centroids), lit(true))
       .withColumn("c_cos", expr("cosine_sim(embedding, centroid)"))
       .withColumn("arn", row_number().over(wAssign))
       .filter(col("arn") === 1)
-      .select(col("vec_id"), col("embedding"), col("c_id").as("cluster"))
-      .cache()
+      .select(col("vec_id"), col("embedding"), col("c_id").as("cluster")),
+      "sem-assign")
     val a = assigned.select(col("cluster").as("cluster_a"), col("vec_id").as("id_a"),
       col("embedding").as("emb_a"))
     val b = assigned.select(col("cluster").as("cluster_b"), col("vec_id").as("id_b"),
@@ -1406,12 +1387,11 @@ object DedupQueries extends QueryModule {
     * actually hits), Jaccard ≥ 0.5 drops. Per-source accounting reports
     * each gate's yield.
     */
-  def incrementalDedup(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
+  def incrementalDedup(s: SparkSession, dir: String): DataFrame = Materialize.scoped { m =>
+    val docs = m(Tables.documents(s, dir) // consumed by both halves + final accounting
       .withColumn("content_hash",
         sha2(lower(trim(regexp_replace(col("text"), "\\s+", " "))).cast("binary"), 256))
-      .withColumn("is_new", col("doc_id") % 10 === 9)
-      .cache() // consumed by both halves + final accounting
+      .withColumn("is_new", col("doc_id") % 10 === 9))
     val corpus = docs.filter(!col("is_new"))
     val batch = docs.filter(col("is_new"))
     val exactDup = batch.join(
@@ -1448,13 +1428,11 @@ object DedupQueries extends QueryModule {
         sum(when(col("exact_dup").isNull && col("near_dup").isNull, 1)
           .otherwise(0)).as("n_kept"))
       .orderBy("source")
-    // eager: per-source accounting is a handful of rows, so materializing
-    // here lets the corpus-wide docs cache be released immediately instead
-    // of outliving the query across a long sweep
-    try {
-      val rows = out.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-    } finally docs.unpersist()
+    // eager: per-source accounting is a handful of rows, so collecting
+    // here lets the corpus-wide docs cache be released with the scope
+    // instead of outliving the query across a long sweep
+    val rows = out.collect()
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
   private val incrementalDedupSql =
@@ -1626,7 +1604,7 @@ object DedupQueries extends QueryModule {
     (4, 4, "0.631568"), (2, 8, "0.857706"))
 
   def lshBandTuning(s: SparkSession, dir: String): DataFrame = {
-    val docs = lshDocs(s, dir)
+    val docs = Materialize.gated(Tables.documents(s, dir), lshDocs(s, dir), "lsh-docs")
     val cand = lshCandidates(docs)
     val withA = docs.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a"))
       .join(broadcast(cand), "doc_a")
@@ -1728,7 +1706,9 @@ object DedupQueries extends QueryModule {
       .withColumn("uni", col("n_a") + col("n_b") - col("inter"))
       .filter(lit(2L) * col("inter") >= col("uni"))
       .withColumn("hi", lit(10L) * col("inter") >= lit(7L) * col("uni"))
-    val cand = lshCandidates(lshDocs(s, dir)).withColumn("caught", lit(1L))
+    // read twice (the truth join and the candidate count)
+    val cand = Materialize.gated(Tables.documents(s, dir), lshCandidates(lshDocs(s, dir)),
+      "lsh-cand").withColumn("caught", lit(1L))
     val nCand = cand.agg(count(lit(1)).as("n_candidates"))
     truth.join(cand, Seq("doc_a", "doc_b"), "left")
       .agg(count(lit(1)).as("n_truth"),

@@ -20,29 +20,30 @@ import org.apache.spark.sql.functions._
   *
   * The order columns must form a TOTAL order (add a unique tiebreaker);
   * otherwise rows equal on the key could straddle a partition boundary
-  * and the local ranks would not compose into a global one.
+  * and the local ranks would not compose into a global one. `input` is
+  * the base relation `df` derives from (the [[Materialize.gated]] input).
   */
 object DistributedOrder {
   private val Pid = "__do_pid"
   private val Loc = "__do_loc"
   private val Off = "__do_off"
 
-  private def withOffsets(df: DataFrame,
+  private def withOffsets(input: DataFrame, df: DataFrame,
       local: org.apache.spark.sql.expressions.WindowSpec => Column,
       total: Column, out: String, order: Seq[Column]): DataFrame = {
-    // The ranged frame is MATERIALIZED (localCheckpoint) before either
+    // The ranged frame is MATERIALIZED (Materialize.gated) before either
     // consumer branch derives from it (ADVICE r11): both the row branch
     // and the offsets branch must see the SAME partition assignment, and
     // without materialization that correctness hangs on physical exchange
     // reuse — if reuse is disabled or a stage is re-planned, the two
     // branches get two RangePartitioners whose sampled boundaries can
     // differ, and rows near a boundary land in a different pid than the
-    // one their offset row was computed under (wrong global ranks). The
-    // checkpoint pins one RDD; PlanSpec asserts both consumers scan the
-    // same RDD id.
-    val ranged = df.repartitionByRange(order: _*)
-      .withColumn(Pid, spark_partition_id())
-      .localCheckpoint()
+    // one their offset row was computed under (wrong global ranks). Either
+    // representation carries the pid as a column; below the gate the
+    // checkpoint pins one RDD, and PlanSpec asserts both consumers scan
+    // the same RDD id.
+    val ranged = Materialize.gated(input, df.repartitionByRange(order: _*)
+      .withColumn(Pid, spark_partition_id()), "dorder")
     val wp = Window.partitionBy(Pid).orderBy(order: _*)
     val localized = ranged.withColumn(Loc, local(wp))
     // exclusive prefix of per-partition totals: |shuffle partitions| rows
@@ -57,14 +58,15 @@ object DistributedOrder {
   }
 
   /** Adds `out` = the 1-based global row number under `order` (bigint). */
-  def globalRowNumber(df: DataFrame, out: String, order: Column*): DataFrame =
-    withOffsets(df, wp => row_number().over(wp).cast("long"),
+  def globalRowNumber(input: DataFrame, df: DataFrame, out: String,
+      order: Column*): DataFrame =
+    withOffsets(input, df, wp => row_number().over(wp).cast("long"),
       count(lit(1)), out, order)
 
   /** Adds `out` = the inclusive global running sum of `value` under
     * `order` (bigint).
     */
-  def globalCumsum(df: DataFrame, value: Column, out: String,
+  def globalCumsum(input: DataFrame, df: DataFrame, value: Column, out: String,
       order: Column*): DataFrame =
-    withOffsets(df, wp => sum(value).over(wp), sum(value), out, order)
+    withOffsets(input, df, wp => sum(value).over(wp), sum(value), out, order)
 }

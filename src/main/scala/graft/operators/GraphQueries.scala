@@ -249,15 +249,16 @@ object GraphQueries extends QueryModule {
     * which pins BOTH shapes.
     */
   private[graft] def triangleStatsPlan(
-      s: SparkSession, pairs: DataFrame, deg: DataFrame,
-      nEdges: Long): (DataFrame, Seq[DataFrame]) = {
+      s: SparkSession, m: Materialize.Scope, pairs: DataFrame, deg: DataFrame,
+      nEdges: Long): DataFrame = {
     val cap = broadcastMaxBytes(s)
     def gate(df: DataFrame, bytes: Long): DataFrame =
       if (bytes <= cap) broadcast(df) else df
     // orient low-(degree,id) -> high-(degree,id); struct compare gives the
     // lexicographic (d, id) order both engines agree on. The degree table
     // is node-cardinality (≪ edges — ~20 k rows at sf0.1).
-    val oriented = pairs
+    // consumed by the adjacency build AND the per-edge probe
+    val oriented = m(pairs
       .join(gate(deg.withColumnRenamed("n", "u").withColumnRenamed("d", "du"),
         degBytes(nEdges)), "u")
       .join(gate(deg.withColumnRenamed("n", "v").withColumnRenamed("d", "dv"),
@@ -266,18 +267,16 @@ object GraphQueries extends QueryModule {
         when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("u"))
           .otherwise(col("v")).as("src"),
         when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("v"))
-          .otherwise(col("u")).as("dst"))
-      .cache() // consumed by the adjacency build AND the per-edge probe
+          .otherwise(col("u")).as("dst")))
     // Sorted-adjacency formulation: NEVER materialize the wedge set.
     // Wedges are pure arithmetic on out-degrees (Σ C(d⁺, 2)); triangles
     // are Σ over oriented edges of |N⁺(src) ∩ N⁺(dst)| — each triangle
     // has exactly one apex with out-edges to the other two, so the count
     // is exact, not 3×. The adjacency table is node-cardinality with
     // O(√m)-bounded lists (the orientation's guarantee).
-    val adj = oriented.groupBy("src")
+    val adj = m(oriented.groupBy("src")
       .agg(sort_array(collect_list(col("dst"))).as("nbrs"),
-        count(lit(1)).as("od"))
-      .cache()
+        count(lit(1)).as("od")))
     // node and wedge counts come from one pass each over the cached
     // node-sized tables; Σ C(d⁺, 2) over out-degrees for wedges
     val nodes = deg.agg(count(lit(1)).as("n_nodes"))
@@ -291,7 +290,7 @@ object GraphQueries extends QueryModule {
       .select(when(col("nd").isNull, lit(0))
         .otherwise(expr("sorted_intersect_count(ns, nd)")).as("t"))
       .agg(coalesce(sum(col("t").cast("long")), lit(0L)).as("n_triangles"))
-    (nodes.crossJoin(wedges).crossJoin(triangles), Seq(oriented, adj))
+    nodes.crossJoin(wedges).crossJoin(triangles)
   }
 
   /** Global triangle census: nodes, edges, wedges (open 2-paths after
@@ -310,27 +309,21 @@ object GraphQueries extends QueryModule {
     * The builder materializes eagerly: the result is a single 4-long
     * census row, so driving the plan to completion here (one count + one
     * `head()`) costs nothing extra and lets every intra-query cache be
-    * unpersisted before the frame is handed back — no executor memory
-    * outlives the query across a 200-query sweep.
+    * released with its scope before the frame is handed back — no
+    * executor memory outlives the query across a 200-query sweep.
     */
-  def triangleCount(s: SparkSession, dir: String): DataFrame = {
+  def triangleCount(s: SparkSession, dir: String): DataFrame = Materialize.scoped { m =>
     import s.implicits._
-    val pairs = edges(s, dir).cache() // consumed 3×: degrees, orientation ×2
-    val deg = pairs.select(col("u").as("n"))
+    val pairs = m(edges(s, dir)) // consumed 3×: degrees, orientation ×2
+    val deg = m(pairs.select(col("u").as("n"))
       .unionAll(pairs.select(col("v").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-      .cache()
-    try {
-      // exact |E| from the cache-materializing count; it feeds the
-      // broadcast size gate AND the report
-      val nEdges = pairs.count()
-      val (stats, cached) = triangleStatsPlan(s, pairs, deg, nEdges)
-      try {
-        val r = stats.head()
-        Seq((r.getLong(0), nEdges, r.getLong(1), r.getLong(2)))
-          .toDF("n_nodes", "n_edges", "n_wedges", "n_triangles")
-      } finally cached.foreach(_.unpersist())
-    } finally { pairs.unpersist(); deg.unpersist() }
+      .groupBy("n").agg(count(lit(1)).as("d")))
+    // exact |E| from the cache-materializing count; it feeds the
+    // broadcast size gate AND the report
+    val nEdges = pairs.count()
+    val r = triangleStatsPlan(s, m, pairs, deg, nEdges).head()
+    Seq((r.getLong(0), nEdges, r.getLong(1), r.getLong(2)))
+      .toDF("n_nodes", "n_edges", "n_wedges", "n_triangles")
   }
 
   private val triangleCountSql =
@@ -523,17 +516,13 @@ object GraphQueries extends QueryModule {
     // checkpoint blocks are reclaimed by the ContextCleaner when the
     // frames go out of scope — the same bounded-iteration treatment
     // GraphX/ML pipelines give Pregel loops.
-    val cached = scala.collection.mutable.Buffer[DataFrame]()
-    try {
-      val e0 = edges(s, dir).cache()
-      cached += e0
-      var deg = degrees(e0).cache()
-      cached += deg
+    Materialize.scoped { m =>
+      val e0 = m(edges(s, dir))
+      var deg = m(degrees(e0))
       var cur = e0
       val rows = (1 to 3).map { r =>
-        val nxt = prune(cur, deg).localCheckpoint(true)
-        val degN = degrees(nxt).cache()
-        cached += degN
+        val nxt = Materialize.gated(edges(s, dir), prune(cur, deg), "kcore-round")
+        val degN = m(degrees(nxt))
         // one job per round, not two: the degree table carries BOTH report
         // figures (n_nodes = rows, n_edges = Σd/2 — every undirected edge
         // contributes to exactly two nodes' degrees), and the checkpoint
@@ -549,7 +538,7 @@ object GraphQueries extends QueryModule {
       }
       rows.toDF("peel_round", "n_nodes", "n_edges")
         .orderBy("peel_round")
-    } finally cached.foreach(_.unpersist(false))
+    }
   }
 
   private val kcoreSql =
@@ -595,20 +584,17 @@ object GraphQueries extends QueryModule {
     * quadratic. Same size-gated broadcast discipline as the census; the
     * top-20 cut is a TakeOrdered with (degree, id) total order.
     */
-  def clusteringCoeff(s: SparkSession, dir: String): DataFrame = {
-    val cached = scala.collection.mutable.Buffer[DataFrame]()
-    try {
-      val pairs = edges(s, dir).cache()
-      cached += pairs
-      val deg = pairs.select(col("u").as("n"))
+  def clusteringCoeff(s: SparkSession, dir: String): DataFrame =
+    Materialize.scoped { m =>
+      val pairs = m(edges(s, dir))
+      val deg = m(pairs.select(col("u").as("n"))
         .unionAll(pairs.select(col("v").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("d")).cache()
-      cached += deg
+        .groupBy("n").agg(count(lit(1)).as("d")))
       val nEdges = pairs.count()
       val cap = broadcastMaxBytes(s)
       def gate(df: DataFrame, bytes: Long): DataFrame =
         if (bytes <= cap) broadcast(df) else df
-      val oriented = pairs
+      val oriented = m(pairs
         .join(gate(deg.withColumnRenamed("n", "u").withColumnRenamed("d", "du"),
           degBytes(nEdges)), "u")
         .join(gate(deg.withColumnRenamed("n", "v").withColumnRenamed("d", "dv"),
@@ -617,9 +603,7 @@ object GraphQueries extends QueryModule {
           when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("u"))
             .otherwise(col("v")).as("src"),
           when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("v"))
-            .otherwise(col("u")).as("dst"))
-        .cache()
-      cached += oriented
+            .otherwise(col("u")).as("dst")))
       val adj = oriented.groupBy("src")
         .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
       // per oriented edge (src, dst): every common out-neighbor w closes
@@ -646,8 +630,7 @@ object GraphQueries extends QueryModule {
       // released before the frame is handed back (triangleCount's policy)
       val rows = out.collect()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-    } finally cached.foreach(_.unpersist(false))
-  }
+    }
 
   private val clusteringCoeffSql =
     s"""WITH $edgesCte,
@@ -682,15 +665,12 @@ object GraphQueries extends QueryModule {
     */
   def bfsReach(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val cached = scala.collection.mutable.Buffer[DataFrame]()
-    try {
-      val e0 = edges(s, dir).cache()
-      cached += e0
-      val und = e0.union(e0.select(col("v").as("u"), col("u").as("v"))).cache()
-      cached += und
+    Materialize.scoped { m =>
+      val e0 = m(edges(s, dir))
+      val und = m(e0.union(e0.select(col("v").as("u"), col("u").as("v"))))
       val deg = und.groupBy("u").agg(count(lit(1)).as("d"))
-      val seeds = deg.orderBy(col("d").desc, col("u").asc).limit(10)
-        .select(col("u").as("node")).localCheckpoint(true)
+      val seeds = Materialize.gated(edges(s, dir), deg.orderBy(col("d").desc, col("u").asc)
+        .limit(10).select(col("u").as("node")), "bfs-seeds")
       var visited = seeds
       var frontier = seeds
       var frontierN = seeds.count()
@@ -714,8 +694,8 @@ object GraphQueries extends QueryModule {
         // frames (≤ 4, one per hop) — flat lineage without paying a second
         // materialization job per round (k-core's blow-up came from
         // *nested* uncheckpointed rounds, which this never forms)
-        val next = nbrs.join(gateN(visited, visitedN), Seq("node"), "left_anti")
-          .localCheckpoint(true)
+        val next = Materialize.gated(edges(s, dir),
+          nbrs.join(gateN(visited, visitedN), Seq("node"), "left_anti"), "bfs-hop")
         frontierN = next.count()
         visitedN += frontierN
         rows += ((hop, frontierN))
@@ -723,7 +703,7 @@ object GraphQueries extends QueryModule {
         frontier = next
       }
       rows.toSeq.toDF("hop", "n_reached").orderBy("hop")
-    } finally cached.foreach(_.unpersist(false))
+    }
   }
 
   private val bfsReachSql =
@@ -977,10 +957,7 @@ object GraphQueries extends QueryModule {
       .map(_.toLong).getOrElse(64L << 20)
     def hop(r: DataFrame): DataFrame = {
       val m = r.select(col("node").as("u"), col("mask"))
-      val small =
-        (try r.queryExecution.optimizedPlan.stats.sizeInBytes
-         catch { case _: Throwable => BigInt(Long.MaxValue) }) <=
-          BigInt(maskBroadcastMaxBytes)
+      val small = Materialize.inputBytes(r) <= maskBroadcastMaxBytes
       r.union(und
           .join(if (small) broadcast(m) else m, Seq("u"))
           .select(col("v").as("node"), col("mask")))
@@ -1120,8 +1097,8 @@ object GraphQueries extends QueryModule {
     val deg = Materialize.gated(edges(s, dir),
       und.groupBy("u").agg(count(lit(1)).as("d")), "ppr-deg")
     val und2 = Materialize.gated(edges(s, dir), und.join(deg, Seq("u")), "ppr-und2")
-    val seed = deg.orderBy(col("d").desc, col("u").asc).limit(1)
-      .select(col("u").as("node")).localCheckpoint(true)
+    val seed = Materialize.gated(edges(s, dir), deg.orderBy(col("d").desc, col("u").asc)
+      .limit(1).select(col("u").as("node")), "ppr-seed")
     val seedRestart = seed.select(col("node"), lit(150000000000L).as("val"))
     var ranks = seed.select(col("node"), lit(1000000000000L).as("r"))
     for (_ <- 1 to 4) {

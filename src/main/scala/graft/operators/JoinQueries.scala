@@ -230,8 +230,8 @@ object JoinQueries extends QueryModule {
     * [[graft.plans.RewriteBandJoin]] optimizer rule enabled, so the
     * nested-loop shape is rewritten into the binned equi join
     * AUTOMATICALLY (what [[binnedBandAcctbal]] spells out by hand). The
-    * result is materialized eagerly (localCheckpoint) while the conf is
-    * set, then the flag is restored — the rule stays scoped to this query
+    * result is materialized eagerly ([[Materialize.gated]]) while the conf
+    * is set, then the flag is restored — the rule stays scoped to this query
     * and the declared theta query keeps demonstrating the nested-loop
     * surface. PlanSpec pins that the rewritten plan carries no
     * nested-loop/cartesian operator.
@@ -242,13 +242,13 @@ object JoinQueries extends QueryModule {
     try {
       val c = Tables.customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
       val sup = Tables.supplier(s, dir) // no broadcast hint: the rule, not the hint
-      c.join(sup,
+      // optimize + execute NOW, under the flag
+      Materialize.gated(c, c.join(sup,
           col("c_acctbal") >= col("s_acctbal") - 100 &&
             col("c_acctbal") <= col("s_acctbal") + 100)
         .groupBy("s_suppkey", "s_name")
         .agg(count(lit(1)).as("n_near_customers"))
-        .orderBy("s_suppkey")
-        .localCheckpoint(true) // optimize + execute NOW, under the flag
+        .orderBy("s_suppkey"), "band-auto")
     } finally prev match {
       case Some(v) => s.conf.set(plans.RewriteBandJoin.ConfKey, v)
       case None => s.conf.unset(plans.RewriteBandJoin.ConfKey)

@@ -848,14 +848,9 @@ object SimilarityQueries extends QueryModule {
           .as("p"))
       .select(col("doc_id"), col("p.term").as("term"), col("p.tf").as("tf"),
         col("dl"))
-    val corpusBytes = docsRel.queryExecution.optimizedPlan.stats.sizeInBytes
     val tf =
-      if (corpusBytes <= bm25MaterializeMinBytes(s)) tfLineage
-      else {
-        val p = graft.Scratch.dir("graft-bm25-postings")
-        tfLineage.write.mode("overwrite").parquet(p)
-        s.read.parquet(p)
-      }
+      if (Materialize.inputBytes(docsRel) <= bm25MaterializeMinBytes(s)) tfLineage
+      else Materialize.toScratch(tfLineage, "bm25-postings")
     val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val stats = tf.groupBy("doc_id").agg(max("dl").as("dl"))
       .agg(count(lit(1)).as("n_docs"), avg(col("dl").cast("double")).as("avgdl"))
@@ -1507,13 +1502,13 @@ object SimilarityQueries extends QueryModule {
     // lazy-below-the-gate recompute loses even at bench scale: the
     // postings are materialized ONCE here. Above the size gate bm25Index
     // has ALREADY materialized them to scratch parquet, so the frame is a
-    // plain scan and checkpointing it again would just pin a corpus-sized
-    // postings list in executor storage (r18) — reuse the scan as-is.
+    // plain scan and materializing it again would just copy a corpus-sized
+    // postings list (r18) — reuse the scan as-is.
     val (tfRaw, _, _) = bm25Index(s, dir)
-    val corpusBytes = Tables.documents(s, dir)
-      .queryExecution.optimizedPlan.stats.sizeInBytes
+    val docs = Tables.documents(s, dir)
     val tf =
-      if (corpusBytes <= bm25MaterializeMinBytes(s)) tfRaw.localCheckpoint()
+      if (Materialize.inputBytes(docs) <= bm25MaterializeMinBytes(s))
+        Materialize.gated(docs, tfRaw, "prf-postings")
       else tfRaw
     val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val stats = tf.groupBy("doc_id").agg(max("dl").as("dl"))
@@ -1709,14 +1704,13 @@ object SimilarityQueries extends QueryModule {
         Seq(s"$dir/embeddings.parquet"), batchMod) {
       val out = graft.Scratch.dir("graft-ivf-index")
       val tblName = graft.Derived.tableName("graft_ivf_assign")
-      val corpus = Tables.embeddings(s, dir)
-        .filter(col("vec_id") % 10 =!= batchMod).cache()
-      val cents = ivfCentroids(corpus).cache()
-      cents.write.mode("overwrite").parquet(s"$out/centroids")
-      ivfAssign(corpus, cents).write.mode("overwrite")
-        .bucketBy(8, "list_id").saveAsTable(tblName)
-      cents.unpersist()
-      corpus.unpersist()
+      Materialize.scoped { m =>
+        val corpus = m(Tables.embeddings(s, dir).filter(col("vec_id") % 10 =!= batchMod))
+        val cents = m(ivfCentroids(corpus))
+        cents.write.mode("overwrite").parquet(s"$out/centroids")
+        ivfAssign(corpus, cents).write.mode("overwrite")
+          .bucketBy(8, "list_id").saveAsTable(tblName)
+      }
       (tblName, s"$out/centroids")
     }
     (s.table(tbl), graft.Tables.loadPath(s, centsPath))

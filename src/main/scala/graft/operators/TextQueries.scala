@@ -1483,9 +1483,9 @@ object TextQueries extends QueryModule {
       .unionByName(dirW.select(col("v").as("u"), col("u").as("v"), col("w")))
       .groupBy("u", "v").agg(sum("w").as("w"))
     val outdeg = edges.groupBy("u").agg(sum("w").as("out_w"))
-    // e and nodes feed every one of the 4 unrolled iterations; .cache()
-    // computed them once at runtime but left the FULL corpus lineage in
-    // the plan, so the unrolled pyramid planned a 176-Exchange tree
+    // e and nodes feed every one of the 4 unrolled iterations; a cache
+    // computes them once at runtime but leaves the FULL corpus lineage in
+    // the plan, where the unrolled pyramid becomes a 176-Exchange tree
     // (optimization r18, guide §3.3 plan-size): materializing truncates
     // the lineage — each iteration now plans over a leaf scan. Size-gated
     // like every corpus-derived frame (both are vocabulary-bounded, but

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.scheduler.SparkListenerApplicationEnd
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
@@ -144,18 +142,8 @@ class DerivedSpec extends SparkSuite {
       "HyperplaneOps.cache: a pure function of (planes, dims), no fixture or session")
 
   test("no memo map or identity key grows back outside Derived") {
-    val root = Paths.get("src/main/scala")
-    val rx = """new\s+(java\.util\.concurrent\.)?ConcurrentHashMap|System\.identityHashCode""".r
-    val walk = Files.walk(root)
-    val hits = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).flatMap { p =>
-      val rel = root.relativize(p).toString
-      Files.readAllLines(p).asScala.map(_.trim).filter(l => rx.findFirstIn(l).isDefined)
-        .map(l => (rel, l))
-    }.toSeq finally walk.close()
-    val offending = hits.filterNot(h => h._1 == "graft/Derived.scala" || MemoAllowlist.contains(h))
-    assert(offending.isEmpty,
-      "memo maps or identity keys outside graft.Derived:\n" + offending.mkString("\n"))
-    val stale = MemoAllowlist.keySet -- hits
-    assert(stale.isEmpty, "allowlist entries that match no code:\n" + stale.mkString("\n"))
+    SourceSweep.guard(
+      """new\s+(java\.util\.concurrent\.)?ConcurrentHashMap|System\.identityHashCode""".r,
+      "graft/Derived.scala", MemoAllowlist)
   }
 }

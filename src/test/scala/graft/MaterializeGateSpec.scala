@@ -2,11 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Focused guards for the r18 size-gated materialization helpers: both
-  * sides of each gate must produce identical rows, and the above-gate
-  * path must actually switch representation (scratch parquet scan
-  * instead of pinned checkpoint blocks) — the property the 100 TB claim
-  * rests on, which the fixture-scale sweeps never exercise.
+/** Focused guards for the reuse policy in [[operators.Materialize]]:
+  * both sides of each size gate must produce identical rows, the
+  * above-gate path must actually switch representation (scratch parquet
+  * scan instead of pinned checkpoint blocks) — the property the 100 TB
+  * claim rests on, which the fixture-scale sweeps never exercise — no
+  * builder may leave a cache behind, and no reuse call may grow back
+  * outside `Materialize`.
   */
 class MaterializeGateSpec extends AnyFunSuite with SparkSuite {
 
@@ -45,6 +47,8 @@ class MaterializeGateSpec extends AnyFunSuite with SparkSuite {
     }
     val input = spark.baseRelationToDataFrame(noStats)
     intercept[IllegalStateException](input.queryExecution.optimizedPlan.stats)
+    assert(operators.Materialize.inputBytes(input) == BigInt(Long.MaxValue),
+      "an input without stats must read as large")
     val frame = Tables.documents(spark, dir).selectExpr("doc_id", "length(text) AS n")
     val gated = operators.Materialize.gated(input, frame, "spec-nostats")
     val plan = gated.queryExecution.optimizedPlan
@@ -63,5 +67,40 @@ class MaterializeGateSpec extends AnyFunSuite with SparkSuite {
       assert(gated == base,
         "mask-broadcast gate must not change harmonic centrality results")
     } finally spark.conf.unset("graft.graph.maskBroadcastMaxBytes")
+  }
+
+  test("no builder leaves a cache behind") {
+    // a fresh session rebuilds every registry entry, so the scopes inside
+    // memoized builders (labels, band and IVF indexes) run here too
+    val s = spark.newSession()
+    // CacheManager.numCachedEntries is package-private in Spark
+    val cm = spark.sharedState.cacheManager
+    val count = cm.getClass.getMethod("numCachedEntries")
+    def entries: Int = count.invoke(cm).asInstanceOf[Int]
+    // the one session-lived entry, armed first: its consumers reuse it
+    operators.DedupQueries.batchSigs(s, dir)
+    val armed = entries
+    Seq("dedup_minhash_lsh", "curation_lsh_band_tuning", "dedup_lsh_recall_eval",
+      "dedup_semantic", "dedup_incremental", "dedup_clusters",
+      "dedup_clusters_incremental", "dedup_index_maintenance", "sim_ivf_topk",
+      "graph_triangle_count", "graph_clustering_coeff", "graph_bfs_reach",
+      "graph_kcore").foreach { q =>
+      SparkEntry.queries(q)(s, dir).write.format("noop").mode("overwrite").save()
+      assert(entries == armed, s"$q left ${entries - armed} cache entries behind")
+    }
+  }
+
+  /** The lines of `src/main` (file, trimmed line) that may reuse or
+    * release a frame outside `Materialize`, with the reason for each.
+    */
+  private val ReuseAllowlist: Map[(String, String), String] = Map(
+    ("graft/operators/DedupQueries.scala",
+      "if (frame.storageLevel == org.apache.spark.storage.StorageLevel.NONE) frame.cache()") ->
+      ("DedupQueries.batchSigs: a session-lived lazy cache that keeps the batch " +
+        "provenance visible to PlanSpec, re-armed after Bench's per-query clearCache()"))
+
+  test("no frame is reused or released outside Materialize") {
+    SourceSweep.guard("""\.(localCheckpoint|cache|persist|unpersist)\(""".r,
+      "graft/operators/Materialize.scala", ReuseAllowlist)
   }
 }

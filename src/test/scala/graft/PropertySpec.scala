@@ -1232,10 +1232,10 @@ class PropertySpec extends SparkSuite {
       val df = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
         .toDF("k", "v").repartition(7)
       val cum = operators.DistributedOrder
-        .globalCumsum(df, col("v"), "cum", col("k"))
+        .globalCumsum(df, df, col("v"), "cum", col("k"))
         .select("k", "cum").as[(Long, Long)].collect().toMap
       val rn = operators.DistributedOrder
-        .globalRowNumber(df, "rn", col("k"))
+        .globalRowNumber(df, df, "rn", col("k"))
         .select("k", "rn").as[(Long, Long)].collect().toMap
       var run = 0L
       vs.zipWithIndex.foreach { case (v, i) =>
