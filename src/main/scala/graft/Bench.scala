@@ -1,86 +1,47 @@
 package graft
 
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
+import Measure.{fixed, obj}
+
 /** Per-round benchmark main (driver contract): runs every declared query on
-  * SPARK_GRAFT_SF_DIR at local[32], forcing full materialization through
-  * the noop sink (count() can short-circuit column reads; noop cannot),
-  * and prints one JSON line with per-query seconds.
-  *
-  * The parquet footers/fs cache are warmed with a metadata pass first so
-  * query timings measure compute, not first-touch I/O.
+  * SPARK_GRAFT_SF_DIR at local[32] (SPARK_GRAFT_CPUS overrides), each timed
+  * by [[Measure.timeOne]], and prints one JSON line with per-query seconds.
+  * Tables are warmed and the derived corpus tables staged first
+  * ([[Measure.prepare]]), so query timings measure compute, not first-touch
+  * I/O or one-time builds.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Graft.session(s"local[$cpus]", "graft-bench")
+  /** Committed reference figures: the frozen clean-window BENCH_FULL of the
+    * previous round (refreshed at each round's freeze), its append-only
+    * first-seen origin, and the adjudicated-regression expectations.
+    */
+  val RefFile = "bench_ref.json"
+  val OriginFile = "bench_ref_origin.json"
+  val ExpectedFile = "bench_expected.json"
 
-    // warm: footer reads + buffer cache + codegen of the scan paths
-    // (events.ts is TIMESTAMP(NANOS) — needs the nanos-as-long legacy conf)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    Tables.all.foreach(t => Tables.load(spark, sfDir, t).count())
-    // pre-stage the streaming fixtures (sentinel files + kinesis shard
-    // logs) — one-time staging, not part of any query's timing — and the
-    // memoized corpus-snapshot tables (Derived.stageAll lists every one)
-    // for the same reason: they model PERSISTED
-    // corpus-snapshot tables (built once per corpus, read by every
-    // consumer), so their one-time build is staging, not any single
-    // query's time — previously whichever consumer ran first in the
-    // sweep absorbed the build, and the >5 s outlier re-time could then
-    // record the memo-hit cost for one run but not another (the
-    // dedup_clusters 0.32 vs 4.8 s artifact noise this removes). The
-    // staging cost is NOT silently absorbed: it is timed here and
-    // reported as `staging_sec` in the artifact, so cross-round
-    // comparisons of the consumer queries see where the build went.
-    val stagingT0 = System.nanoTime()
-    Derived.stageAll(spark, sfDir)
-    val stagingSec = (System.nanoTime() - stagingT0) / 1e9
+  def main(args: Array[String]): Unit = {
+    val sfDir = Graft.fixtureDir("/root/testdata/sf0.1")
+    val spark = Measure.session("graft-bench", 32)
+    // Staging is not silently absorbed: it is reported as `staging_sec`, so
+    // cross-round comparisons of the consumer queries see where the build
+    // went.
+    val stagingSec = Measure.prepare(spark, sfDir, Derived.stageAll)
 
     // Streaming throughput vs the reference's 2 rec/s producer ceiling
-    // (BASELINE.md): events/s through the full [REF] decode pipeline.
-    // Measured FIRST (right after warmup, before the query sweep perturbs
-    // the JVM) because it doubles as the host-noise canary: this VM has
+    // (BASELINE.md), measured FIRST (before the sweep perturbs the JVM)
+    // because it doubles as the host-noise canary: this VM has
     // multi-minute throttle windows with 2-100× slowdowns, and a sweep
-    // recorded inside one looks like a broad regression. The artifact is
-    // self-describing about it — `throttled` below — so nobody has to
-    // re-litigate VM noise from per-query deltas.
-    // -1 on failure, like every other errored measurement in this artifact:
-    // a 0 here would make the canary read as a plausible "measured zero"
-    // rate with throttled=false instead of an error
-    val nEvents = try Tables.events(spark, sfDir).count() catch { case _: Throwable => -1L }
-    def canaryOnce(): Double =
-      if (nEvents < 0) -1.0
-      else try {
-        val t0 = System.nanoTime()
-        SparkEntry.queries("stream_payload_pipeline")(spark, sfDir)
-          .write.mode("overwrite").format("noop").save()
-        nEvents / ((System.nanoTime() - t0) / 1e9)
-      } catch { case _: Throwable => -1.0 }
-    // median of three: one throttle burst landing on a single canary run
-    // can no longer misgrade the whole window (max-of-2 graded the window
-    // by its LUCKIEST instant; the r8 window measured 0.74× on best-of-2
-    // yet fired 24 sweep flags — the typical rate, not the peak, is what
-    // the sweep actually experienced). All raw runs stay in the artifact.
-    val canaryRuns = Seq(canaryOnce(), canaryOnce(), canaryOnce())
-    val streamRate = {
-      val ok = canaryRuns.filter(_ > 0).sorted
-      if (ok.isEmpty) -1.0 else ok(ok.size / 2)
-    }
-    // committed clean-window canary rate at sf0.1 (BENCH_FULL history:
-    // 95-110 k events/s). Two window-quality grades, both self-described
-    // in the artifact: `throttled` (< 0.5×) triggers the full-sweep re-run
-    // policy; `degraded` (< 0.85×) marks a window whose per-query figures
-    // should be read against `regressions_rechecked`, not at face value —
-    // r8's 0.74× window fired 24 noise flags while throttled stayed false,
-    // so the artifact needs the finer grade even when the coarse one
-    // doesn't trip.
-    // Latency-floor canary (r13, STREAM_PROFILE.json attribution): the
-    // throughput canary above is 32-way parallel CPU work, but streaming
-    // queries also pay a single-threaded, fsync/metadata-latency-bound
-    // ceremony floor (~0.32 s/query in a clean window: WAL + offset log +
-    // planning + memory-sink drain) that a host can degrade INDEPENDENTLY
-    // of throughput — the r12 drift trio was exactly this shape. A one-row
-    // single-batch stream measures that floor directly. Recorded for
-    // window forensics (median of 3 + raw runs); not used in any gate.
+    // recorded inside one looks like a broad regression. All raw runs stay
+    // in the artifact.
+    val canaryRuns = Measure.canaryRuns(spark, sfDir)
+    val streamRate = Measure.median(canaryRuns)
+    // Latency-floor canary: streaming queries also pay a single-threaded,
+    // fsync/metadata-latency-bound ceremony floor (WAL + offset log +
+    // planning + memory-sink drain) that a host can degrade independently
+    // of throughput. A one-row single-batch stream measures that floor
+    // directly. Recorded for window forensics; not used in any gate.
     def floorOnce(i: Int): Double = try {
       val stage = Scratch.dir("graft_floor_")
       spark.range(1).toDF("id").write.mode("overwrite").parquet(s"$stage/in")
@@ -99,15 +60,15 @@ object Bench {
       sec
     } catch { case _: Throwable => -1.0 }
     val floorRuns = Seq(floorOnce(1), floorOnce(2), floorOnce(3))
-    val ceremonyFloor = {
-      val ok = floorRuns.filter(_ > 0).sorted
-      if (ok.isEmpty) -1.0 else ok(ok.size / 2)
-    }
+    val ceremonyFloor = Measure.median(floorRuns)
 
-    val CanaryBestEventsPerSec = 95000.0
+    // Two window-quality grades, both self-described in the artifact:
+    // `throttled` (< 0.5×) and `degraded` (< 0.85×, a window whose
+    // per-query figures should be read against `regressions_rechecked`,
+    // not at face value).
     val canaryRatio =
       if (streamRate > 0 && sfDir.endsWith("sf0.1"))
-        streamRate / CanaryBestEventsPerSec
+        streamRate / Measure.CanaryRefEventsPerSec
       else -1.0
     val throttled = canaryRatio > 0 && canaryRatio < 0.5
     val degraded = canaryRatio > 0 && canaryRatio < 0.85
@@ -116,241 +77,120 @@ object Bench {
     // driver invokes with no args and benches everything).
     val only = args.toSet
     val benched = SparkEntry.allDefs.filter(d => only.isEmpty || only(d.name))
-    def timeOne(d: QueryDef): Double = {
-      val t0 = System.nanoTime()
-      try {
-        d.run(spark, sfDir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] ${d.name} failed: ${e.getMessage}")
-          -1.0
-      } finally {
-        // Post-timing sweep hygiene: memory-sink tables (one per streaming
-        // query, up to fixture-sized) and any leftover cached frames otherwise
-        // accumulate on the driver heap across the 120+ query sweep and
-        // tax late queries with GC — measured as a 1.5-2.5x in-sweep vs
-        // solo gap on the last streaming queries. Each query (re)creates
-        // its own views, so dropping temp views between queries is safe.
-        try {
-          spark.catalog.clearCache()
-          spark.catalog.listTables().collect()
-            .filter(_.isTemporary)
-            .foreach(t => spark.catalog.dropTempView(t.name))
-        } catch { case _: Throwable => () }
-      }
-    }
-    // Degraded/throttled-window policy (VERDICT r11 #4): run the sweep,
-    // then ONE full re-run, and report the per-query min. Originally only
-    // `throttled` (< 0.5×) windows re-ran, but two of the last three
-    // driver benches graded merely `degraded` (canary 0.79, 0.83) and
-    // their per-query figures needed recheck forensics — so the re-run now
-    // fires on `degraded` too (which throttled implies). The first pass's
-    // figures all go to queries_raw so both passes stay in the artifact.
+    def timeOne(d: QueryDef): Double = Measure.timeOne(spark, d, sfDir)
+    // Degraded-window policy: run the sweep, then ONE full re-run, and
+    // report the per-query best (throttled implies degraded). The first
+    // pass's figures go to queries_raw so both passes stay in the artifact.
     val raw = scala.collection.mutable.LinkedHashMap[String, Double]()
     val onePass = benched.map(d => d -> timeOne(d))
-    val rerunFullSweep = degraded // throttled < 0.5 implies degraded < 0.85
+    val rerunFullSweep = degraded
     val firstPass =
       if (!rerunFullSweep) onePass
       else onePass.map { case (d, sec1) =>
         raw(d.name) = sec1
-        val sec2 = timeOne(d)
-        d -> (if (sec1 < 0) sec2 else if (sec2 < 0) sec1 else math.min(sec1, sec2))
+        d -> Measure.best(sec1, timeOne(d))
       }
-    // This host has multi-minute throttle windows (2-100× slowdowns on a
-    // contiguous run segment). Re-measure gross outliers — queries over 5 s
-    // AND over 5× the sweep median — once, and report the min; the raw
-    // first-pass figure is kept in queries_raw so best-of and as-measured
-    // are both visible in the artifact.
-    val oks = firstPass.collect { case (_, v) if v >= 0 => v }.sorted
-    val median = if (oks.isEmpty) 0.0 else oks(oks.size / 2)
+    // Re-measure gross outliers (over 5 s AND over 5× the sweep median)
+    // once and report the best; the first-pass figure stays in queries_raw.
+    val median = Measure.median(firstPass.map(_._2))
     val results = firstPass.map { case (d, sec) =>
       if (sec > 5.0 && median > 0 && sec > 5.0 * median) {
-        val again = timeOne(d)
         if (!raw.contains(d.name)) raw(d.name) = sec
-        d.name -> (if (again >= 0) math.min(sec, again) else sec)
+        d.name -> Measure.best(sec, timeOne(d))
       } else d.name -> sec
     }
-    def jsonMap(m: Iterable[(String, Double)], dp: Int): String =
-      m.map { case (k, v) => "\"" + k + "\":" + s"%.${dp}f".format(v) }
-        .mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val (worstName, worstSec) =
       if (results.isEmpty) ("", 0.0) else results.maxBy(_._2)
 
-    // Per-query regression gate vs the committed prior-round reference
-    // (bench_ref.json = the frozen clean-window BENCH_FULL of the previous
-    // round; refreshed at each round's freeze). This self-adjudicates the
-    // driver-run-vs-frozen-run window question that otherwise costs manual
-    // forensics: ratios are canary-normalized — when THIS window's stream
-    // canary is slower than the reference's, the expectation scales down by
-    // the same factor; the normalization is clamped at 1.0 so a faster
-    // window can never mask a real regression. Flag = normalized ratio
-    // > 1.5 AND > 0.3 s absolute growth (sub-second jitter is not a
-    // regression). The list is reported in the artifact, never fails the
-    // run — the judge reads it.
-    val refPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "bench_ref.json")
-    val (candidates, norm): (Seq[(String, Double, Double, Double)], Double) = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        Graft.repoFile(refPath)), "UTF-8")
-      val qObj = """"queries":\{([^}]*)\}""".r
-        .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-      val refQ = """"([^"]+)":(-?[0-9.]+)""".r.findAllMatchIn(qObj)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      val refRate = """"stream_events_per_sec":(-?[0-9.]+)""".r
-        .findFirstMatchIn(txt).map(_.group(1).toDouble).getOrElse(-1.0)
-      val n =
-        if (refRate > 0 && streamRate > 0) math.min(1.0, streamRate / refRate)
-        else 1.0
-      (results.flatMap { case (name, now) =>
-        refQ.get(name) match {
-          case Some(prev) if prev > 0 && now > 0 =>
-            val ratio = (now / prev) * n
-            if (ratio > 1.5 && now - prev > 0.3) Some((name, prev, now, ratio))
-            else None
-          case _ => None
-        }
-      }.sortBy(-_._4), n)
-    } catch { case _: Throwable => (Seq.empty, 1.0) }
-    // Regression-flag adjudication, mechanized AND used in the gate: a flag
-    // raised from inside the 120+-query sweep can be window noise (a host
-    // throttle burst, GC from a neighbor query) rather than a plan
-    // regression, so every candidate is re-measured ONCE, solo, at the end
-    // of the run — the JVM is warm and the sweep's heap pressure has been
-    // swept between queries — and the flag DECISION is min(sweep, solo) vs
-    // the reference: the query's best demonstrated time this session is
-    // what reflects the plan; the worse figure reflects the window. (r8
-    // flagged 24 from a contended sweep and every one solo-resolved under
-    // the gate — the sweep-only decision made `n_regressions` a window-
-    // quality metric, not a plan metric. Now the noise stays visible in
-    // `regressions_rechecked` while `regressions` carries only flags that
-    // REPRODUCE solo.) Both raw figures stay in the artifact.
-    // The solo confirmation is best-of-2 WHEN the first solo run would
-    // itself confirm the flag: a single solo landing inside a throttle
-    // burst could otherwise mint a false regression, and — the converse
-    // ADVICE r9 called out — a single LUCKY solo could self-resolve a real
-    // intermittent one. One extra run only on still-flagged candidates
-    // keeps the cost at zero for the common all-noise case while making
-    // the confirmed figure a best-of-2.
-    val rechecked = candidates.map { case (n, prev, sweepSec, _) =>
-      val d = benched.find(_.name == n).get
-      val solo1 = timeOne(d)
-      val solo =
-        if (prev > 0 && solo1 > 0 && (solo1 / prev) * norm > 1.5) {
-          val solo2 = timeOne(d)
-          if (solo2 > 0) math.min(solo1, solo2) else solo1
-        } else solo1
-      (n, prev, sweepSec, solo)
+    // Two flag channels share one gate: the per-round regression channel
+    // against bench_ref.json, and the cumulative-drift channel against
+    // bench_ref_origin.json (a snapshot of the first frozen clean-window
+    // reference that a refresh never rewrites, so drift baked in one
+    // sub-0.3 s slice per refresh stays visible). Ratios are
+    // canary-normalized: when this window's canary is slower than the
+    // reference's, the expectation scales down by the same factor, clamped
+    // at 1.0 so a faster window never masks a real regression. Flag =
+    // normalized ratio > 1.5 AND > 0.3 s absolute growth (sub-second
+    // jitter is not a regression). Flags are reported, never fail the run.
+    def norm(refRate: Double): Double =
+      if (refRate > 0 && streamRate > 0) math.min(1.0, streamRate / refRate) else 1.0
+    def flag(now: Double, prev: Double, n: Double): Option[Double] = {
+      val ratio = (now / prev) * n
+      if (prev > 0 && now > 0 && ratio > 1.5 && now - prev > 0.3) Some(ratio) else None
     }
-    val recheckedJson = rechecked.map { case (n, prev, sweep, solo) =>
-      f"""{"query":"$n","prev":$prev%.3f,"sweep_sec":$sweep%.3f,"solo_sec":$solo%.3f,"solo_ratio":${if (prev > 0 && solo > 0) solo / prev else -1.0}%.2f}"""
-    }.mkString("[", ",", "]")
-    // Adjudicated-regression channel: a deliberate semantic change (e.g.
-    // r10's quota eviction lifecycle — 2 extra micro-batch commits + a
-    // timeout pass over the whole store, priced in by design) SHOULD slow
-    // its query, but only by being named explicitly IN THE REPO — the
-    // channel is the committed bench_expected.json ({query, reason,
-    // expired} entries), not an env var or round-notes prose, so the
-    // acceptance travels with the artifact. Lifecycle: while an entry is
-    // ACTIVE (expired=false) its flag routes to `regressions_expected`
-    // (with the reason) and the bench_ref refresh is REFUSED — the
-    // accepted cost stays visible against the old reference every run
-    // instead of being silently grandfathered. Retiring it is an explicit
-    // edit (expired=true), after which the next clean full sweep may
-    // refresh the reference and bake the cost into `prev`. The env var
-    // remains as an ad-hoc local override; entries from it carry reason
-    // "env (uncommitted)".
-    // Parsed with Jackson (on the Spark classpath), not a regex: the old
-    // field-order-sensitive regex silently dropped ALL expectations on a
-    // benign reformat or a '}' inside a reason string (ADVICE r11), which
-    // would resurface accepted costs as blocking regressions with no
-    // diagnostic. A present-but-unparseable file now warns loudly.
-    val expectedPath = sys.env.getOrElse(
-      "SPARK_GRAFT_EXPECTED_FILE", "bench_expected.json")
+    // A flag raised inside the sweep can be window noise (a throttle
+    // burst, GC from a neighbor query) rather than a plan regression, so
+    // every flagged query is re-measured solo at the end of the run —
+    // best-of-2 when the first solo run would itself confirm the flag, so
+    // neither one unlucky nor one lucky solo run decides — and the
+    // decision is the query's best time this session vs the reference.
+    // Returns (query, reference, sweep, solo).
+    def recheck(ref: Map[String, Double], n: Double): Seq[(String, Double, Double, Double)] =
+      results.flatMap { case (name, now) =>
+        ref.get(name).flatMap(prev => flag(now, prev, n).map(r => (name, prev, now, r)))
+      }.sortBy(-_._4).map { case (name, prev, sweep, _) =>
+        val d = benched.find(_.name == name).get
+        val solo1 = timeOne(d)
+        val solo = if (flag(solo1, prev, n).isDefined) Measure.best(solo1, timeOne(d)) else solo1
+        (name, prev, sweep, solo)
+      }
+    // Returns (query, reference, best, ratio) for the flags that reproduce.
+    def confirm(rechecked: Seq[(String, Double, Double, Double)], n: Double)
+        : Seq[(String, Double, Double, Double)] =
+      rechecked.flatMap { case (name, prev, sweep, solo) =>
+        val now = Measure.best(sweep, solo)
+        flag(now, prev, n).map(r => (name, prev, now, r))
+      }.sortBy(-_._4)
+
+    val (refQ, refRate) = Measure.readRef(RefFile).getOrElse((Map.empty[String, Double], -1.0))
+    val refNorm = norm(refRate)
+    val rechecked = recheck(refQ, refNorm)
+    val confirmed = confirm(rechecked, refNorm)
+
+    // Adjudicated-regression channel: a deliberate semantic change that
+    // slows its query is named IN THE REPO, in bench_expected.json
+    // ({query, reason, expired} entries), so the acceptance travels with
+    // the artifact. While an entry is ACTIVE (expired=false) its flag
+    // routes to `regressions_expected` and the bench_ref refresh is
+    // REFUSED, keeping the accepted cost visible against the old
+    // reference; retiring it (expired=true) lets the next clean full sweep
+    // bake the cost into `prev`. A present-but-unparseable file warns
+    // loudly instead of silently dropping every adjudication.
     val expectedEntries: Seq[(String, String, Boolean)] =
-      if (!java.nio.file.Files.exists(Graft.repoFile(expectedPath))) Seq.empty
+      if (!java.nio.file.Files.exists(Graft.repoFile(ExpectedFile))) Seq.empty
       else try {
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = mapper.readTree(Graft.repoFile(expectedPath).toFile)
-        val arr = root.path("expectations")
-        val out = (0 until arr.size()).flatMap { i =>
-          val e = arr.get(i)
-          if (e.hasNonNull("query"))
-            Some((e.path("query").asText(), e.path("reason").asText(""),
-              e.path("expired").asBoolean(false)))
-          else None
-        }
+        val out = Measure.readJson(ExpectedFile).path("expectations").asScala.toSeq
+          .filter(_.hasNonNull("query"))
+          .map(e => (e.path("query").asText(), e.path("reason").asText(""),
+            e.path("expired").asBoolean(false)))
         if (out.isEmpty)
-          System.err.println(s"[bench] WARNING: $expectedPath exists but contains " +
+          System.err.println(s"[bench] WARNING: $ExpectedFile exists but contains " +
             "zero parseable expectation entries — committed adjudications are NOT in effect")
         out
       } catch {
         case e: Throwable =>
-          System.err.println(s"[bench] WARNING: failed to parse $expectedPath " +
+          System.err.println(s"[bench] WARNING: failed to parse $ExpectedFile " +
             s"(${e.getMessage}) — committed adjudications are NOT in effect")
           Seq.empty
       }
-    val envExpected = sys.env.get("SPARK_GRAFT_EXPECTED_REGRESSIONS")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
-      .map(n => (n, "env (uncommitted)", false))
-    val expectedReasons: Map[String, String] =
-      (expectedEntries ++ envExpected).map { case (n, r, _) => n -> r }.toMap
-    val activeExpected = (expectedEntries ++ envExpected)
-      .collect { case (n, _, false) => n }.distinct
-    val confirmed = rechecked.flatMap { case (n, prev, sweep, solo) =>
-      // same canary-normalized gate as the candidate pass (clamped at 1.0:
-      // a faster-than-ref window never masks a real regression)
-      val best = if (solo > 0) math.min(sweep, solo) else sweep
-      if (prev > 0 && (best / prev) * norm > 1.5 && best - prev > 0.3)
-        Some((n, prev, best, (best / prev) * norm))
-      else None
-    }.sortBy(-_._4)
+    val expectedReasons = expectedEntries.map { case (n, r, _) => n -> r }.toMap
+    val activeExpected = expectedEntries.collect { case (n, _, false) => n }.distinct
     val (regressionsExpected, regressions) =
       confirmed.partition { case (n, _, _, _) => expectedReasons.contains(n) }
-    def regJson(rs: Seq[(String, Double, Double, Double)]): String =
-      rs.map { case (n, prev, now, r) =>
-        f"""{"query":"$n","prev":$prev%.3f,"best_sec":$now%.3f,"ratio":$r%.2f}"""
-      }.mkString("[", ",", "]")
-    val regressionsJson = regJson(regressions)
-    // JSON-string escape for free-text fields (ADVICE r13 #4): a reason
-    // containing a backslash or control character previously emitted
-    // invalid JSON into BENCH_FULL.json, which the Jackson-based
-    // DocsClaimSpec/refresh tooling would then fail to parse. One shared
-    // helper covers both free-text channels (reasons AND names).
-    def jsonStr(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val regressionsExpectedJson = regressionsExpected.map {
-      case (n, prev, now, r) =>
-        val reason = jsonStr(expectedReasons.getOrElse(n, ""))
-        f"""{"query":"${jsonStr(n)}","reason":"$reason","prev":$prev%.3f,"best_sec":$now%.3f,"ratio":$r%.2f}"""
-    }.mkString("[", ",", "]")
 
-    // bench_ref refresh policy, codified (VERDICT r9 #3): the reference is
-    // only rewritten from a FULL sweep measured in a clean-enough window
-    // (canary_ratio >= 0.95) with ZERO regression flags surviving solo
-    // recheck — refreshing from a degraded window would bake the window's
-    // slowness into every future ratio, and refreshing over a live
-    // regression would grandfather it. Default-ARMED as of r14 (VERDICT r13
-    // #1): arming used to be opt-in (SPARK_GRAFT_REFRESH_REF=1), and for
-    // four consecutive rounds every ARMED sweep hit a dirty window while
-    // clean windows sailed through unarmed — the r13 driver sweep ran at
-    // canary 0.969 with zero regressions and simply wasn't asked. The
-    // policy gate below is the refusal mechanism, so arming every sweep
-    // adds no risk; opt OUT with SPARK_GRAFT_REFRESH_REF=0 for local
-    // iteration runs that must not touch the frozen reference. A refused
-    // refresh is recorded in the artifact, not just on stderr.
+    // bench_ref refresh policy: the reference is only rewritten from a FULL
+    // sweep in a clean-enough window (canary_ratio >= 0.95) with ZERO
+    // regression flags surviving solo recheck — refreshing from a degraded
+    // window would bake its slowness into every future ratio, and
+    // refreshing over a live regression would grandfather it. Armed by
+    // default (the policy gate is the refusal mechanism); any falsy
+    // SPARK_GRAFT_REFRESH_REF (0/false/no/off) disarms it for local runs
+    // that must not touch the frozen reference. A refused refresh is
+    // recorded in the artifact.
     val refreshPolicy = "full sweep && canary_ratio>=0.95 && n_regressions==0" +
       " && no active (unexpired) entry in bench_expected.json" +
       " && BENCH_FULL.json not frozen at HEAD"
-    // Disarm parsing (ADVICE r14 #1): any conventional falsy spelling
-    // disarms — previously only the literal "0" did, so an operator
-    // setting =false/off/no to protect the frozen reference silently
-    // left it armed. The parsed decision is logged either way.
     val refreshRequested = {
       val rawEnv = sys.env.get("SPARK_GRAFT_REFRESH_REF")
       val disarm = rawEnv.exists(v =>
@@ -359,24 +199,17 @@ object Bench {
         s"-> ${if (disarm) "DISARMED" else "armed"}")
       !disarm
     }
-    // Frozen-artifact detection (VERDICT r14 "what's wrong" #1): when the
-    // committed BENCH_FULL.json is clean at HEAD — the state a freeze
-    // commit hands to the driver — a post-freeze sweep must not overwrite
-    // the artifact the round doc describes (DocsClaimSpec guards that
-    // binding). Such sweeps route their full detail to
-    // BENCH_POSTFREEZE.json and never rewrite bench_ref.json, so the
-    // worktree the round hands over stays exactly as frozen.
-    // SPARK_GRAFT_FREEZE=1 is the explicit "this run IS the freeze"
-    // override: the builder re-freezing the round legitimately overwrites
-    // the committed artifact (and then commits the new one), so the
-    // clean-at-HEAD guard must not bounce that one run to the post-freeze
-    // file. Only the literal "1" arms it; everything else keeps the guard.
+    // Frozen-artifact detection: when the committed BENCH_FULL.json is
+    // clean at HEAD — the state a freeze commit hands over — a sweep must
+    // not overwrite the artifact the round doc describes (DocsClaimSpec
+    // guards that binding). Such sweeps write BENCH_POSTFREEZE.json and
+    // never rewrite bench_ref.json. SPARK_GRAFT_FREEZE=1 (only the literal
+    // "1") marks the one run that IS the freeze and legitimately
+    // overwrites the committed artifact. Detection errors FAIL CLOSED: an
+    // undeterminable git state is treated as frozen. The repo root is
+    // resolved explicitly so a bench launched from a non-root cwd still
+    // checks the real artifact.
     val freezeRun = sys.env.get("SPARK_GRAFT_FREEZE").contains("1")
-    // ADVICE r15 #4: detection errors FAIL CLOSED — an undeterminable
-    // git state is treated as frozen (the sweep then writes the side
-    // artifact, which is always safe), never as a license to overwrite
-    // the committed one. The repo root is resolved explicitly so a bench
-    // launched from a non-root cwd still checks the real artifact.
     val frozenArtifact: Boolean = !freezeRun && (try {
       val rootP = new ProcessBuilder("git", "rev-parse", "--show-toplevel").start()
       val root = new String(rootP.getInputStream.readAllBytes, "UTF-8").trim
@@ -400,139 +233,62 @@ object Bench {
       only.isEmpty && canaryRatio >= 0.95 && regressions.isEmpty &&
         activeExpected.isEmpty && !frozenArtifact
     val refreshed = refreshRequested && refreshEligible
-    // Grandfathering audit (ADVICE r12): a refresh bakes every RETIRED
-    // (expired=true) expectation's accepted cost into the new `prev`
-    // silently — its query stops being flagged not because the cost went
-    // away but because the reference moved. Record exactly which retired
-    // entries were baked at refresh time, so the acceptance stays
-    // auditable from the artifact instead of from cross-round forensics.
+    // Grandfathering audit: a refresh bakes every RETIRED (expired=true)
+    // expectation's accepted cost into the new `prev`; record exactly which
+    // retired entries were baked, so the acceptance stays auditable.
     val bakedExpired =
       if (!refreshed) Seq.empty
-      else expectedEntries.collect { case (n, reason, true) => (n, reason) }
-    val bakedJson = bakedExpired.map { case (n, r) =>
-      s"""{"query":"${jsonStr(n)}","reason":"${jsonStr(r)}"}"""
-    }.mkString("[", ",", "]")
-    // Cumulative-drift channel (VERDICT r13 "what's wrong" #1): the flat
-    // 0.3 s absolute-growth carve-out in the per-round gate is ratchet-
-    // resettable — each refresh can bake another sub-0.3 s slice of the
-    // same query invisibly. Report (never gate) each query's ratio vs the
-    // OLDEST retained reference (bench_ref_origin.json, a committed
-    // snapshot of the first frozen clean-window reference, which a refresh
-    // never rewrites), canary-normalized the same way, so compounded drift
-    // stays visible in every artifact no matter how often `prev` moves.
-    val originPath = sys.env.getOrElse(
-      "SPARK_GRAFT_BENCH_REF_ORIGIN", "bench_ref_origin.json")
-    // originParseOk (ADVICE r14 #2): a missing/unparseable origin file used
-    // to be indistinguishable from a genuinely empty drift list — the flag
-    // makes a blind channel self-describing in the artifact.
-    val (originTxt, originQ, originRate, originParseOk)
-        : (String, Map[String, Double], Double, Boolean) = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        Graft.repoFile(originPath)), "UTF-8")
-      val qObj = """"queries":\{([^}]*)\}""".r
-        .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-      val q = """"([^"]+)":(-?[0-9.]+)""".r.findAllMatchIn(qObj)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      val rate = """"stream_events_per_sec":(-?[0-9.]+)""".r
-        .findFirstMatchIn(txt).map(_.group(1).toDouble).getOrElse(-1.0)
-      (txt, q, rate, q.nonEmpty)
-    } catch { case _: Throwable => ("", Map.empty[String, Double], -1.0, false) }
-    val nOrig =
-      if (originRate > 0 && streamRate > 0) math.min(1.0, streamRate / originRate)
-      else 1.0
-    val driftCandidates: Seq[(String, Double, Double, Double)] =
-      results.flatMap { case (name, now) =>
-        originQ.get(name) match {
-          case Some(orig) if orig > 0 && now > 0 =>
-            val ratio = (now / orig) * nOrig
-            if (ratio > 1.5 && now - orig > 0.3) Some((name, orig, now, ratio))
-            else None
-          case _ => None
-        }
-      }.sortBy(-_._4)
-    // Drift adjudication, symmetric with the regression channel (VERDICT
-    // r16 "what's wrong" #1): the origin figures were recorded as solo
-    // min-of-window measurements, while the sweep side is single-timed —
-    // ADJUDICATION_r16 proved that asymmetry alone re-flags ~20 sub-second
-    // queries every round (one-sided GC/neighbor inflation that a best-of-2
-    // removes; the old code rebuilt in today's environment reproduces the
-    // inflated figures, and best-of-2 reproduces the origins). So every
-    // drift candidate is re-measured solo — best-of-2 when the first solo
-    // run would itself confirm — and the LISTED channel carries only
-    // entries whose best demonstrated time this session still drifts; the
-    // raw sweep/solo figures stay in `drift_rechecked` for forensics.
-    val driftRechecked = driftCandidates.map { case (n, orig, sweepSec, _) =>
-      val d = benched.find(_.name == n).get
-      val solo1 = timeOne(d)
-      val solo =
-        if (solo1 > 0 && (solo1 / orig) * nOrig > 1.5 && solo1 - orig > 0.3) {
-          val solo2 = timeOne(d)
-          if (solo2 > 0) math.min(solo1, solo2) else solo1
-        } else solo1
-      (n, orig, sweepSec, solo)
-    }
-    val driftCumulative: Seq[(String, Double, Double, Double)] =
-      driftRechecked.flatMap { case (n, orig, sweepSec, solo) =>
-        val best = if (solo > 0) math.min(sweepSec, solo) else sweepSec
-        val ratio = (best / orig) * nOrig
-        if (ratio > 1.5 && best - orig > 0.3) Some((n, orig, best, ratio))
-        else None
-      }.sortBy(-_._4)
-    val driftRecheckedJson = driftRechecked.map { case (n, orig, sweep, solo) =>
-      f"""{"query":"${jsonStr(n)}","origin":$orig%.3f,"sweep_sec":$sweep%.3f,"solo_sec":$solo%.3f}"""
-    }.mkString("[", ",", "]")
-    // Origin coverage append (VERDICT r14 "what's missing" #3): queries
-    // added after the origin snapshot have no origin entry, so the
-    // cumulative channel is blind to them. On each refresh, APPEND
-    // first-seen origins (this sweep's figure — the same figure entering
-    // bench_ref) for queries the origin file lacks; existing entries are
-    // never rewritten, keeping the file append-only by construction.
+      else expectedEntries.collect { case (n, reason, true) => obj("query" -> n, "reason" -> reason) }
+
+    // Drift channel: the origin figures were recorded as solo best-of-window
+    // measurements, so the sweep side is rechecked the same way as the
+    // regression channel before anything is listed (one-sided GC/neighbor
+    // inflation otherwise re-flags ~20 sub-second queries every round).
+    // `origin_parse_ok` makes a missing/unparseable origin file visible
+    // instead of reading as an empty drift list.
+    val origin = Measure.readRef(OriginFile).filter(_._1.nonEmpty)
+    val (originQ, originRate) = origin.getOrElse((Map.empty[String, Double], -1.0))
+    val originNorm = norm(originRate)
+    val driftRechecked = recheck(originQ, originNorm)
+    val driftCumulative = confirm(driftRechecked, originNorm)
+    // Origin coverage append: on each refresh, first-seen origins (this
+    // sweep's figure, the same one entering bench_ref) are APPENDED for
+    // queries the origin file lacks; existing entries are never rewritten.
     val originAppended: Seq[String] =
       if (!refreshed) Seq.empty
-      else if (!originParseOk) {
-        // Bootstrap (ADVICE r16 #1): with no parseable queries object the
-        // splice below has nothing to insert into, and silently skipping
-        // left the blind channel blind FOREVER (origin appends no-op'd on
-        // every later refresh too). Write a minimal skeleton seeded with
-        // this clean-window sweep's figures — first-seen origins, exactly
-        // what the append would have recorded — and log the degradation.
-        System.err.println(s"[bench] WARNING: $originPath missing/unparseable " +
+      else if (origin.isEmpty) {
+        // Bootstrap: with no parseable queries object there is nothing to
+        // splice into, so write a skeleton seeded with this clean-window
+        // sweep's figures (exactly what the append would have recorded).
+        System.err.println(s"[bench] WARNING: $OriginFile missing/unparseable " +
           "— bootstrapping a fresh origin skeleton from this sweep")
         try {
-          val seed = results.collect { case (n, v) if v > 0 => n -> v }
-          val qs = seed.sortBy(_._1)
-            .map { case (n, v) => f""""${jsonStr(n)}":$v%.3f""" }.mkString(",")
-          java.nio.file.Files.write(Graft.repoFile(originPath),
-            (s"""{"bootstrapped_from":"this sweep (origin file was absent/unparseable)",""" +
-              f""""stream_events_per_sec":$streamRate%.0f,"queries":{$qs}}""").getBytes("UTF-8"))
+          val seed = results.filter(_._2 > 0)
+          java.nio.file.Files.write(Graft.repoFile(OriginFile), Measure.json(obj(
+            "bootstrapped_from" -> "this sweep (origin file was absent/unparseable)",
+            "stream_events_per_sec" -> fixed(streamRate, 0),
+            "queries" -> figures(seed.sortBy(_._1), 3))).getBytes("UTF-8"))
           seed.map(_._1)
         } catch { case _: Throwable => Seq.empty }
       }
       else {
-        val missing = results.collect {
-          case (n, v) if v > 0 && !originQ.contains(n) => n -> v
-        }
-        // ADVICE r15 #3: SPLICE only the missing entries into the
-        // existing queries object text — regenerating the whole file
-        // from the lossy regex parse dropped unknown top-level fields
-        // and re-rounded every existing figure, so "append-only" has to
-        // mean string insertion, not parse → re-serialize.
+        val missing = results.filter { case (n, v) => v > 0 && !originQ.contains(n) }
+        // SPLICE only the missing entries into the existing queries object
+        // text: "append-only" means string insertion, so unknown top-level
+        // fields and the existing figures' formatting survive untouched.
         if (missing.nonEmpty) try {
-          val m = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(originTxt).get
+          val path = Graft.repoFile(OriginFile)
+          val txt = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
+          val m = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(txt).get
           val add = missing.sortBy(_._1)
-            .map { case (n, v) => f""""${jsonStr(n)}":$v%.3f""" }.mkString(",")
-          val spliced = originTxt.substring(0, m.end(1)) +
-            (if (m.group(1).trim.isEmpty) add else "," + add) +
-            originTxt.substring(m.end(1))
-          java.nio.file.Files.write(Graft.repoFile(originPath),
-            spliced.getBytes("UTF-8"))
+            .map { case (n, v) => s"${Measure.json(n)}:${fixed(v, 3)}" }.mkString(",")
+          val spliced = txt.substring(0, m.end(1)) +
+            (if (m.group(1).trim.isEmpty) add else "," + add) + txt.substring(m.end(1))
+          java.nio.file.Files.write(path, spliced.getBytes("UTF-8"))
           missing.map(_._1)
         } catch { case _: Throwable => Seq.empty }
         else Seq.empty
       }
-    val driftCumulativeJson = driftCumulative.map { case (n, orig, now, r) =>
-      f"""{"query":"${jsonStr(n)}","origin":$orig%.3f,"now_sec":$now%.3f,"cum_ratio":$r%.2f}"""
-    }.mkString("[", ",", "]")
     if (refreshRequested && !refreshEligible)
       System.err.println(
         f"[bench] bench_ref refresh REFUSED (policy: $refreshPolicy; " +
@@ -540,22 +296,54 @@ object Bench {
           s"active_expected=${activeExpected.mkString("[", ",", "]")}, " +
           s"filtered=${only.nonEmpty})")
 
-    // Full per-query detail — too big for the driver's log tail (the
-    // harness keeps only the last ~2000 chars of stdout, and 148 queries
-    // are ~4 KB), so it goes to files: BENCH_FULL.json at the repo root
-    // (committed with the round) and target/bench.json (back-compat).
-    // Full-artifact routing: filtered (arg-subset) runs never clobber the
-    // committed sweep artifact; post-freeze sweeps go to
-    // BENCH_POSTFREEZE.json so the frozen BENCH_FULL.json + docs binding
-    // survives the driver's end-of-round run.
+    // Full per-query detail is too big for the driver's log tail (it keeps
+    // only the last ~2000 chars of stdout), so it goes to files:
+    // BENCH_FULL.json at the repo root (committed with the round) and
+    // target/bench.json. Filtered (arg-subset) runs never clobber the
+    // committed sweep artifact, and post-freeze sweeps go to
+    // BENCH_POSTFREEZE.json.
     val fullArtifact =
       if (only.nonEmpty) "target/bench_partial.json"
       else if (frozenArtifact) "BENCH_POSTFREEZE.json"
       else "BENCH_FULL.json"
-    val detail =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","artifact_file":"$fullArtifact","frozen_artifact_flow":$frozenArtifact,"queries":${jsonMap(results, 3)},"queries_raw":${jsonMap(raw, 3)},"sf":"$sfDir","staging_sec":$stagingSec%.3f,"stream_events_per_sec":$streamRate%.0f,"canary_runs":${canaryRuns.map(r => f"$r%.0f").mkString("[", ",", "]")},"canary_best_ref":$CanaryBestEventsPerSec%.0f,"canary_ratio":$canaryRatio%.3f,"ceremony_floor_sec":$ceremonyFloor%.3f,"floor_runs":${floorRuns.map(r => f"$r%.3f").mkString("[", ",", "]")},"throttled":$throttled,"degraded":$degraded,"full_rerun":$rerunFullSweep,"bench_ref":"$refPath","ref_refresh_policy":"$refreshPolicy","ref_refresh_requested":$refreshRequested,"ref_refreshed":$refreshed,"refresh_baked_expired":$bakedJson,"bench_ref_origin":"$originPath","origin_parse_ok":$originParseOk,"origin_appended":${originAppended.map(n => "\"" + jsonStr(n) + "\"").mkString("[", ",", "]")},"drift_cumulative":$driftCumulativeJson,"drift_rechecked":$driftRecheckedJson,"regressions":$regressionsJson,"regressions_expected":$regressionsExpectedJson,"expected_file":"$expectedPath","expected_active":${activeExpected.map("\"" + _ + "\"").mkString("[", ",", "]")},"regressions_rechecked":$recheckedJson}"""
+    def flagged(rs: Seq[(String, Double, Double, Double)], ref: String, now: String,
+        ratio: String) = rs.map { case (n, refSec, sec, r) =>
+      obj("query" -> n, ref -> fixed(refSec, 3), now -> fixed(sec, 3), ratio -> fixed(r, 2))
+    }
+    val detail = Measure.json(obj(
+      "metric" -> "total", "value" -> fixed(total, 3), "unit" -> "sec",
+      "artifact_file" -> fullArtifact, "frozen_artifact_flow" -> frozenArtifact,
+      "queries" -> figures(results, 3), "queries_raw" -> figures(raw, 3),
+      "sf" -> sfDir, "staging_sec" -> fixed(stagingSec, 3),
+      "stream_events_per_sec" -> fixed(streamRate, 0),
+      "canary_runs" -> canaryRuns.map(fixed(_, 0)),
+      "canary_best_ref" -> fixed(Measure.CanaryRefEventsPerSec, 0),
+      "canary_ratio" -> fixed(canaryRatio, 3),
+      "ceremony_floor_sec" -> fixed(ceremonyFloor, 3), "floor_runs" -> floorRuns.map(fixed(_, 3)),
+      "throttled" -> throttled, "degraded" -> degraded, "full_rerun" -> rerunFullSweep,
+      "bench_ref" -> RefFile, "ref_refresh_policy" -> refreshPolicy,
+      "ref_refresh_requested" -> refreshRequested, "ref_refreshed" -> refreshed,
+      "refresh_baked_expired" -> bakedExpired,
+      "bench_ref_origin" -> OriginFile, "origin_parse_ok" -> origin.nonEmpty,
+      "origin_appended" -> originAppended,
+      "drift_cumulative" -> flagged(driftCumulative, "origin", "now_sec", "cum_ratio"),
+      "drift_rechecked" -> driftRechecked.map { case (n, orig, sweep, solo) =>
+        obj("query" -> n, "origin" -> fixed(orig, 3), "sweep_sec" -> fixed(sweep, 3),
+          "solo_sec" -> fixed(solo, 3))
+      },
+      "regressions" -> flagged(regressions, "prev", "best_sec", "ratio"),
+      "regressions_expected" -> regressionsExpected.map { case (n, prev, now, r) =>
+        obj("query" -> n, "reason" -> expectedReasons.getOrElse(n, ""),
+          "prev" -> fixed(prev, 3), "best_sec" -> fixed(now, 3), "ratio" -> fixed(r, 2))
+      },
+      "expected_file" -> ExpectedFile, "expected_active" -> activeExpected,
+      "regressions_rechecked" -> rechecked.map { case (n, prev, sweep, solo) =>
+        obj("query" -> n, "prev" -> fixed(prev, 3), "sweep_sec" -> fixed(sweep, 3),
+          "solo_sec" -> fixed(solo, 3),
+          "solo_ratio" -> fixed(if (prev > 0 && solo > 0) solo / prev else -1.0, 2))
+      }))
     val outFiles = Seq("target/bench.json", fullArtifact) ++
-      (if (refreshed) Seq(refPath) else Seq.empty)
+      (if (refreshed) Seq(RefFile) else Seq.empty)
     for (p <- outFiles) {
       try {
         val path = Graft.repoFile(p)
@@ -565,9 +353,9 @@ object Bench {
     }
 
     // The stdout contract line itself must fit the tail budget, so it
-    // carries the totals plus a representative headline subset; trim from
-    // the end if a rename ever pushes it past the budget. Per-query data
-    // for everything else lives in BENCH_FULL.json (pointer included).
+    // carries the totals plus a representative headline subset, trimmed
+    // from the end while it is over 1800 chars. Per-query data for
+    // everything else lives in the full artifact (pointer included).
     val headline = Seq(
       "q01_pricing_summary", "join_revenue_by_nation", "join_asof_last_order",
       "win_rank_top_orders", "win_topk_native", "agg_percentiles_by_flag",
@@ -583,13 +371,22 @@ object Bench {
       "stream_session_windows", "stream_tws_sessions", "stream_stream_join",
       "stream_stream_left_join", "stream_dedup_within_watermark")
     val byName = results.toMap
-    def compactLine(n: Int): String = {
-      val hl = headline.filter(byName.contains).take(n).map(k => k -> byName(k))
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"worst_query":"$worstName","worst_sec":$worstSec%.2f,"staging_sec":$stagingSec%.2f,"stream_events_per_sec":$streamRate%.0f,"canary_ratio":$canaryRatio%.2f,"throttled":$throttled,"degraded":$degraded,"n_regressions":${regressions.size},"n_flags_rechecked":${rechecked.size},"queries_full":"$fullArtifact","queries":${jsonMap(hl, 2)}}"""
-    }
+    def compactLine(n: Int): String = Measure.json(obj(
+      "metric" -> "total", "value" -> fixed(total, 3), "unit" -> "sec", "sf" -> sfDir,
+      "n_queries" -> results.size, "worst_query" -> worstName,
+      "worst_sec" -> fixed(worstSec, 2), "staging_sec" -> fixed(stagingSec, 2),
+      "stream_events_per_sec" -> fixed(streamRate, 0),
+      "canary_ratio" -> fixed(canaryRatio, 2), "throttled" -> throttled,
+      "degraded" -> degraded, "n_regressions" -> regressions.size,
+      "n_flags_rechecked" -> rechecked.size, "queries_full" -> fullArtifact,
+      "queries" -> figures(headline.filter(byName.contains).take(n).map(k => k -> byName(k)), 2)))
     val line = (headline.size to 0 by -1).map(compactLine).find(_.length <= 1800)
       .getOrElse(compactLine(0))
     println(line)
     spark.stop()
   }
+
+  /** Per-query seconds as an ordered JSON object of `dp`-decimal figures. */
+  private def figures(m: Iterable[(String, Double)], dp: Int): ListMap[String, Any] =
+    ListMap(m.toSeq.map { case (k, v) => k -> fixed(v, dp) }: _*)
 }

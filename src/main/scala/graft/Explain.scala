@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val sfDir = Graft.fixtureDir("/root/testdata/sf0.01")
     val spark = Graft.session("local[4]", "graft-explain")
     val wanted = if (args.isEmpty) SparkEntry.allDefs.map(_.name).toSet else args.toSet
     SparkEntry.allDefs.filter(d => wanted(d.name)).foreach { d =>

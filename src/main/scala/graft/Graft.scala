@@ -86,12 +86,18 @@ object Graft {
     spark
   }
 
+  /** The fixture directory a main runs on: `SPARK_GRAFT_SF_DIR`, else `default`. */
+  def fixtureDir(default: String): String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", default)
+
+  /** `local[N]` with N = `SPARK_GRAFT_CPUS`, else `defaultCores`. */
+  def localMaster(defaultCores: Int): String =
+    s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCores.toString)}]"
+
   /** Resolve a committed-artifact path against the git toplevel (ADVICE
     * r16 #2): the bench/scale mains write BENCH_*.json where the round
     * commits from, so a run launched from a subdirectory must not strand
     * the artifact in cwd where it reads as missing/stale. Absolute paths
-    * (env overrides) pass through; an undeterminable git state falls back
-    * to cwd — the behavior before this helper existed.
+    * pass through; an undeterminable git state falls back to cwd.
     */
   def repoFile(name: String): java.nio.file.Path = {
     val p = java.nio.file.Paths.get(name)

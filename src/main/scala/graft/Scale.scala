@@ -3,6 +3,10 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ListMap
+
+import Measure.{fixed, obj}
+
 /** Deterministic N× fixture amplifier for the scale-proof sweep: every
   * "this plan survives 100×" claim in the plan audits is an argument until
   * it is measured on a larger corpus. This stamps out `reps` replicas of
@@ -103,8 +107,7 @@ object ScaleGen {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "target/scale10"
     val reps = if (args.length > 2) args(2).toInt else 10
-    val spark = Graft.session(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-      "graft-scalegen")
+    val spark = Graft.session(Graft.localMaster(32), "graft-scalegen")
     generate(spark, src, out, reps)
     Tables.all.foreach { t =>
       println(s"[scalegen] $t: ${spark.read.parquet(s"$out/$t.parquet").count()} rows")
@@ -144,156 +147,139 @@ object BenchScale {
   /** Adjudication margin: any entry whose first-pass floored factor lands
     * ABOVE this fraction of the bound — not just above the bound itself —
     * is re-measured median-of-3 per side. A gate that can flip on one
-    * noisy run is a gate that gets ignored when it flips: r10 recorded
-    * `dt_timezone_funcs` at exactly factor 12.00 of bound 12.0 (a pass by
-    * zero margin) with no requery record to say whether that was the plan
-    * or the window. Every near-bound figure in the artifact is now an
-    * adjudicated median, with the raw runs kept in `requeried_raw` and the
-    * survivors listed in `near_bound`.
+    * noisy run is a gate that gets ignored when it flips. Every near-bound
+    * figure in the artifact is an adjudicated median, with the raw runs
+    * kept in `requeried_raw` and the survivors listed in `near_bound`.
     */
   val RequeryMargin = 0.9
 
-  def main(args: Array[String]): Unit = {
-    val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val scaled = if (args.length > 0) args(0) else "target/scale10"
-    val reps = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Graft.session(s"local[$cpus]", "graft-benchscale")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(scaled, "lineitem.parquet")))
-      ScaleGen.generate(spark, base, scaled, reps)
+  /** Re-measures the worst-settling loop may spend beyond the margin pass. */
+  val WorstRequeryCap = 5
 
-    // warm both corpora + pre-stage streaming fixtures outside any timing
-    for (dir <- Seq(base, scaled)) {
-      Tables.all.foreach(t => Tables.load(spark, dir, t).count())
-      Derived.stageAll(spark, dir)
-    }
-    // host-noise canary (same contract as Bench)
-    val nEvents = Tables.events(spark, base).count()
-    def canaryOnce(): Double =
-      try {
-        val t0 = System.nanoTime()
-        SparkEntry.queries("stream_payload_pipeline")(spark, base)
-          .write.mode("overwrite").format("noop").save()
-        nEvents / ((System.nanoTime() - t0) / 1e9)
-      } catch { case _: Throwable => -1.0 }
-    // median of three, matching Bench: grade the window by its typical
-    // rate, not its luckiest instant
-    val streamRate = {
-      val ok = Seq(canaryOnce(), canaryOnce(), canaryOnce()).filter(_ > 0).sorted
-      if (ok.isEmpty) -1.0 else ok(ok.size / 2)
-    }
-    val throttled = streamRate > 0 && streamRate < 0.5 * 95000.0
+  /** One query's seconds on the base fixture and on the scaled corpus
+    * (−1 = failed).
+    */
+  final case class Row(name: String, base: Double, scaled: Double) {
+    def ok: Boolean = base > 0 && scaled > 0
+    def factor: Double = if (ok) scaled / base else -1.0
+    def floored: Double = scaled / math.max(base, BaseTimeFloor)
+  }
 
-    val defs = SparkEntry.allDefs
-    def timeOne(d: QueryDef, dir: String): Double = {
-      val t0 = System.nanoTime()
-      try {
-        d.run(spark, dir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[benchscale] ${d.name} @ $dir failed: ${e.getMessage}")
-          -1.0
-      } finally {
-        try {
-          spark.catalog.clearCache()
-          spark.catalog.listTables().collect()
-            .filter(_.isTemporary)
-            .foreach(t => spark.catalog.dropTempView(t.name))
-        } catch { case _: Throwable => () }
+  /** An adjudicated sweep: the rows (each re-measured query at its
+    * median-of-3 per side), the raw (base, scaled) runs of every re-measured
+    * query, and whether the worst-settling loop settled within its cap.
+    */
+  final case class Adjudication(rows: Seq[Row],
+      requeried: ListMap[String, (Seq[Double], Seq[Double])], settled: Boolean, extra: Int) {
+    /** Gated rows whose floored factor exceeds `bound`. */
+    def violations(bound: Double): Seq[String] =
+      rows.filter(r => gated(r) && r.floored > bound).map(_.name)
+    def failures: Seq[String] = rows.filterNot(_.ok).map(_.name)
+    def requeriedJson: ListMap[String, Any] = requeried.map { case (n, (b, sc)) =>
+      n -> obj("base_runs" -> b.map(fixed(_, 3)), "scaled_runs" -> sc.map(fixed(_, 3)))
+    }
+  }
+
+  private def gated(r: Row): Boolean = r.ok && !BoundExempt(r.name)
+
+  /** Median-of-3 adjudication of a first pass against `bound`;
+    * `rerun(name)` measures one more (base, scaled) pair.
+    *
+    * A stall landing on one query's scaled run fabricates a factor
+    * violation on this host, so every gated entry whose floored factor is
+    * above [[RequeryMargin]]·bound is re-measured twice per side and
+    * judged by the median: a one-off stall is outvoted, but a flaky real
+    * pathology (GC pressure, a spill threshold) that reproduces in either
+    * re-run keeps the violation, which best-of would mask. Then, until the
+    * worst gated entry is itself adjudicated (adjudicating the worst can
+    * demote it and reveal a new unadjudicated worst just below), the worst
+    * is re-measured too, at most [[WorstRequeryCap]] times; a loop that
+    * stops on the cap reports itself unsettled, so the headline worst is
+    * marked as a possibly unconfirmed first-pass figure.
+    */
+  def adjudicate(first: Seq[Row], bound: Double, rerun: String => (Double, Double)): Adjudication = {
+    var requeried = ListMap.empty[String, (Seq[Double], Seq[Double])]
+    def requery(r: Row): Row = {
+      val (b2, sc2) = rerun(r.name)
+      val (b3, sc3) = rerun(r.name)
+      requeried += r.name -> ((Seq(r.base, b2, b3), Seq(r.scaled, sc2, sc3)))
+      Row(r.name, Measure.median(Seq(r.base, b2, b3)), Measure.median(Seq(r.scaled, sc2, sc3)))
+    }
+    var rows = first.map(r => if (gated(r) && r.floored > RequeryMargin * bound) requery(r) else r)
+    var extra = 0
+    var settled = false
+    while (!settled && extra < WorstRequeryCap) {
+      rows.zipWithIndex.filter(x => gated(x._1)).maxByOption(_._1.floored) match {
+        case Some((r, i)) if !requeried.contains(r.name) =>
+          rows = rows.updated(i, requery(r)); extra += 1
+        case _ => settled = true
       }
     }
+    Adjudication(rows, requeried, settled, extra)
+  }
+
+  /** A measured sweep and the session it ran in. */
+  final case class Sweep(spark: SparkSession, base: String, scaled: String, reps: Int,
+      bound: Double, streamRate: Double, adj: Adjudication)
+
+  /** Times `queries` on the SPARK_GRAFT_SF_DIR fixture and on the
+    * `reps`-times corpus (args: scaled dir, reps; generated when missing),
+    * after warming both and running `stage` on each, then adjudicates the
+    * factors against `bound(reps)`.
+    */
+  def sweep(appName: String, args: Array[String], defaultReps: Int, queries: Seq[QueryDef],
+      bound: Int => Double, stage: (SparkSession, String) => Unit): Sweep = {
+    val base = Graft.fixtureDir("/root/testdata/sf0.1")
+    val scaled = if (args.length > 0) args(0) else s"target/scale$defaultReps"
+    val reps = if (args.length > 1) args(1).toInt else defaultReps
+    val spark = Measure.session(appName, 32)
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(scaled, "lineitem.parquet")))
+      ScaleGen.generate(spark, base, scaled, reps)
+    for (dir <- Seq(base, scaled)) Measure.prepare(spark, dir, stage)
+    val streamRate = Measure.median(Measure.canaryRuns(spark, base))
     // base first (its cold-codegen cost mirrors the per-round sweep), then
     // scaled — the second run reuses the compiled plans, so the factor
     // isolates DATA growth, not compilation
-    val firstPass = defs.map { d =>
-      val b = timeOne(d, base)
-      val sc = timeOne(d, scaled)
-      val factor = if (b > 0 && sc > 0) sc / b else -1.0
-      println(f"[benchscale] ${d.name}%-28s base ${b}%6.2f s   x$reps ${sc}%6.2f s   factor ${factor}%5.2f")
-      (d.name, b, sc, factor)
+    def pair(d: QueryDef): (Double, Double) =
+      (Measure.timeOne(spark, d, base), Measure.timeOne(spark, d, scaled))
+    def report(r: Row, tag: String): Unit =
+      println(f"[benchscale] ${r.name}%-28s $tag base ${r.base}%6.2f s   x$reps ${r.scaled}%7.2f s   factor ${r.factor}%6.2f")
+    val first = queries.map { d =>
+      val (b, sc) = pair(d)
+      val r = Row(d.name, b, sc)
+      report(r, "")
+      r
     }
-    // Bound-violation requery: this host has multi-minute throttle windows,
-    // and a stall landing on one query's scaled run fabricates a factor
-    // violation. Adjudication is MEDIAN-OF-3 per side (the first-pass
-    // figure plus two re-runs), not best-of: a one-off stall is outvoted
-    // by the two clean measurements, but a *flaky real* pathology (GC
-    // pressure, spill threshold) that reproduces in either re-run keeps
-    // the violation — min-of-two would mask it. All raw measurements stay
-    // in the artifact (`requeried_raw`) so adjudicated and as-measured
-    // are both visible.
-    def floored(b: Double, sc: Double): Double = sc / math.max(b, BaseTimeFloor)
-    val requeried = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    def med3(first: Double, x: Double, y: Double): Double = {
-      val v = Seq(first, x, y).filter(_ > 0).sorted
-      if (v.isEmpty) -1.0 else v(v.size / 2)
-    }
-    def requeryOne(r: (String, Double, Double, Double)): (String, Double, Double, Double) = {
-      val (n, b, sc, _) = r
-      val d = defs.find(_.name == n).get
-      val b2 = timeOne(d, base)
-      val sc2 = timeOne(d, scaled)
-      val b3 = timeOne(d, base)
-      val sc3 = timeOne(d, scaled)
-      requeried(n) = Seq(b, sc, b2, sc2, b3, sc3)
-      val bMed = med3(b, b2, b3)
-      val scMed = med3(sc, sc2, sc3)
-      println(f"[benchscale] ${d.name}%-28s REQUERY(med3) base ${bMed}%6.2f s   x$reps ${scMed}%6.2f s   factor ${scMed / bMed}%5.2f")
-      (n, bMed, scMed, scMed / bMed)
-    }
-    val marginPass = firstPass.map { case r @ (n, b, sc, _) =>
-      if (b > 0 && sc > 0 && !BoundExempt(n)
-          && floored(b, sc) > RequeryMargin * FactorBound) requeryOne(r)
-      else r
-    }
-    // The sweep's WORST surviving factor is its least-confirmed number when
-    // it lands just below the requery margin: r13 froze win_median_trailing
-    // at 9.71 first-pass (margin 10.8) where r11 froze the identical plan
-    // at 4.27 — a 2.3× disagreement between two freezes is a measurement
-    // problem, and the artifact's headline figure shouldn't rest on one
-    // run. Adjudicate median-of-3 until the GLOBAL floored-worst non-exempt
-    // entry is itself an adjudicated one — a single worst-pick is not
-    // enough, because adjudicating the worst can demote it and reveal a
-    // new unadjudicated worst just below it (the r14 first freeze hit
-    // exactly that: frame_sample 9.74 → med3 8.84 left fuzzy_blocked 9.34
-    // on top, unconfirmed). Capped at 5 extra adjudications per sweep.
-    var adjudicationExtra = 0
-    var adjudicationSettled = false
-    val rows = {
-      var cur = marginPass
-      var extra = 0
-      var settled = false
-      while (!settled && extra < 5) {
-        val worst = cur.zipWithIndex.collect {
-          case ((n, b, sc, _), i) if b > 0 && sc > 0 && !BoundExempt(n) =>
-            (floored(b, sc), i, n)
-        }.sortBy(-_._1).headOption
-        worst match {
-          case Some((_, i, n)) if !requeried.contains(n) =>
-            cur = cur.updated(i, requeryOne(cur(i))); extra += 1
-          case _ => settled = true
-        }
-      }
-      // Cap-exhaustion visibility (ADVICE r14 #4): a loop that exits on the
-      // 5-requery cap leaves the headline worst factor an unconfirmed
-      // first-pass figure — record settled-vs-exhausted (and the count) so
-      // the artifact distinguishes the two instead of reading identically.
-      adjudicationExtra = extra
-      adjudicationSettled = settled
-      if (!settled)
-        System.err.println(s"[benchscale] WARNING: worst-factor adjudication " +
-          s"EXHAUSTED its $extra-requery cap without settling — the headline " +
-          "worst factor may be an unconfirmed first-pass measurement")
-      cur
-    }
+    val byName = queries.map(d => d.name -> d).toMap
+    val adj = adjudicate(first, bound(reps), n => pair(byName(n)))
+    adj.rows.filter(r => adj.requeried.contains(r.name)).foreach(report(_, "REQUERY(med3)"))
+    if (!adj.settled)
+      System.err.println(s"[benchscale] WARNING: worst-factor adjudication " +
+        s"EXHAUSTED its ${adj.extra}-requery cap without settling — the headline " +
+        "worst factor may be an unconfirmed first-pass measurement")
+    Sweep(spark, base, scaled, reps, bound(reps), streamRate, adj)
+  }
+
+  /** Writes `fields` to the repo-rooted `artifact` and prints its head. */
+  def write(artifact: String, fields: (String, Any)*): Unit = {
+    val json = Measure.json(obj(fields: _*))
+    java.nio.file.Files.write(Graft.repoFile(artifact), json.getBytes("UTF-8"))
+    println(json.take(1800))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val Sweep(spark, base, scaled, reps, _, streamRate, adj) =
+      sweep("graft-benchscale", args, 10, SparkEntry.allDefs, _ => FactorBound, Derived.stageAll)
+    val rows = adj.rows
+    def timeOne(n: String, dir: String): Double =
+      Measure.timeOne(spark, SparkEntry.allDefs.find(_.name == n).get, dir)
     // Skewed-key sweep: the per-key-density-sensitive families re-measured
     // on the hot-key corpus (same 10× volume, one customer owning ~10% of
     // orders and ~10% of events) — the factor vs the base fixture goes
     // through the SAME floored bound, so a plan whose per-key work is
     // quadratic (or whose per-probe cost is linear in per-key dim size)
     // fails the gate here even when the uniform corpus hides it.
-    val skewDir = sys.env.getOrElse("SPARK_GRAFT_SKEW_DIR", "target/scale10skew")
+    val skewDir = s"${scaled}skew"
     // Per-key-density-sensitive families: the as-of probes + event
     // sequences (per-(user, hour) pair residual), the user-keyed batch
     // window ops (sessionize / funnel / Markov — one sort partition per
@@ -308,38 +294,29 @@ object BenchScale {
       "stream_stateful_user_stats")
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(skewDir, "lineitem.parquet")))
       ScaleGen.generateSkewed(spark, base, skewDir, reps)
-    Tables.all.foreach(t => Tables.load(spark, skewDir, t).count())
-    // no stream-fixture staging needed for the skew corpus: the only
-    // streaming skew query (stream_stateful_user_stats) reads the
-    // events.parquet dir directly via RecordStream.eventsStream — the
-    // sentinel-staged copy is only consumed by queries outside SkewQueries
-    val baseByName = rows.map(r => r._1 -> r._2).toMap
-    val skewRows = SkewQueries.flatMap { n =>
-      defs.find(_.name == n).map { d =>
-        val sk1 = timeOne(d, skewDir)
-        val b = baseByName.getOrElse(n, -1.0)
-        if (b > 0 && sk1 > 0 && floored(b, sk1) > RequeryMargin * FactorBound) {
-          // same median-of-3 adjudication as the main sweep
-          val sk2 = timeOne(d, skewDir)
-          val sk3 = timeOne(d, skewDir)
-          val skMed = med3(sk1, sk2, sk3)
-          (n, b, skMed, if (b > 0 && skMed > 0) skMed / b else -1.0)
-        } else (n, b, sk1, if (b > 0 && sk1 > 0) sk1 / b else -1.0)
-      }
+    // no stream-fixture staging for the skew corpus: the only streaming
+    // skew query (stream_stateful_user_stats) reads the events.parquet dir
+    // directly via RecordStream.eventsStream — the sentinel-staged copy is
+    // only consumed by queries outside SkewQueries
+    Measure.prepare(spark, skewDir, (_, _) => ())
+    val baseByName = rows.map(r => r.name -> r.base).toMap
+    val skewRows = SkewQueries.map { n =>
+      val r = Row(n, baseByName.getOrElse(n, -1.0), timeOne(n, skewDir))
+      // same median-of-3 adjudication as the main sweep
+      if (r.ok && r.floored > RequeryMargin * FactorBound)
+        r.copy(scaled = Measure.median(Seq(r.scaled, timeOne(n, skewDir), timeOne(n, skewDir))))
+      else r
     }
-    val skewViolations = skewRows.filter { case (n, b, sk, _) =>
-      b > 0 && sk > 0 && floored(b, sk) > FactorBound
-    }.map(_._1)
+    val skewViolations = skewRows.filter(r => r.ok && r.floored > FactorBound).map(_.name)
 
-    // Streaming scale leg under RocksDB (VERDICT r11 #5): the main sweep
-    // times every stateful streaming query at 10× data, but on the default
-    // HDFS-backed state store — the provider the 100 TB deployment would
-    // actually run (state larger than heap spills to disk) was only ever
-    // exercised at unit-test scale. Re-run the five heaviest stateful
-    // queries on the scaled corpus under RocksDBStateStoreProvider and
-    // record wall time (same floored factor vs the main sweep's base) plus
-    // the state-store census from the query progress (rows, bytes, and a
-    // provider-confirmation flag so a silent fallback to HDFS can't pass).
+    // Streaming scale leg under RocksDB: the main sweep times every
+    // stateful streaming query at 10× data on the default HDFS-backed
+    // state store; the provider a 100 TB deployment would run (state
+    // larger than heap spills to disk) is exercised here on the five
+    // heaviest stateful queries, with wall time (same floored factor vs
+    // the main sweep's base) plus the state-store census from the query
+    // progress (rows, bytes, and a provider-confirmation flag so a silent
+    // fallback to HDFS can't pass).
     val RocksQueries = Seq("stream_quota_enforce", "stream_tws_sessions",
       "stream_stateful_user_stats", "stream_stream_join", "stream_session_windows")
     val progresses =
@@ -354,222 +331,123 @@ object BenchScale {
     spark.streams.addListener(listener)
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val rocksRows = RocksQueries.flatMap { n =>
-      defs.find(_.name == n).map { d =>
-        progresses.synchronized(progresses.clear())
-        val sec = timeOne(d, scaled)
-        Thread.sleep(2000) // listener bus is async; let the tail progress land
-        val snap = progresses.synchronized(progresses.toSeq)
-        val stateRows = snap.map(_.stateOperators.map(_.numRowsTotal).sum)
-          .maxOption.getOrElse(0L)
-        val stateBytes = snap.map(_.stateOperators.map(_.memoryUsedBytes).sum)
-          .maxOption.getOrElse(0L)
-        val rocksConfirmed = snap.exists(_.stateOperators.exists(
-          _.customMetrics.toString.toLowerCase.contains("rocksdb")))
-        val b = baseByName.getOrElse(n, -1.0)
-        (n, b, sec, if (b > 0 && sec > 0) sec / b else -1.0, stateRows, stateBytes,
-          rocksConfirmed)
-      }
+    val rocksRows = RocksQueries.map { n =>
+      progresses.synchronized(progresses.clear())
+      val sec = timeOne(n, scaled)
+      Thread.sleep(2000) // listener bus is async; let the tail progress land
+      val snap = progresses.synchronized(progresses.toSeq)
+      val stateRows = snap.map(_.stateOperators.map(_.numRowsTotal).sum)
+        .maxOption.getOrElse(0L)
+      val stateBytes = snap.map(_.stateOperators.map(_.memoryUsedBytes).sum)
+        .maxOption.getOrElse(0L)
+      val rocksConfirmed = snap.exists(_.stateOperators.exists(
+        _.customMetrics.toString.toLowerCase.contains("rocksdb")))
+      (Row(n, baseByName.getOrElse(n, -1.0), sec), stateRows, stateBytes, rocksConfirmed)
     }
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
     spark.streams.removeListener(listener)
-    val rocksViolations = rocksRows.filter { case (n, b, sec, _, _, _, ok) =>
-      (b > 0 && sec > 0 && floored(b, sec) > FactorBound) || !ok
-    }.map(_._1)
+    val rocksViolations = rocksRows.filter { case (r, _, _, confirmed) =>
+      (r.ok && r.floored > FactorBound) || !confirmed
+    }.map(_._1.name)
 
     // candidate-pair census for the bound-exempt generators, both corpora
     // (outside all timing)
-    val census = Seq("base" -> base, "scaled" -> scaled).map { case (tag, dir) =>
-      val entries = operators.DedupQueries.pairCensus(spark, dir)
-        .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-      s""""$tag":$entries"""
-    }.mkString("{", ",", "}")
-    val ok = rows.filter(_._4 > 0)
-    val worst = if (ok.isEmpty) ("", -1.0) else { val w = ok.maxBy(_._4); (w._1, w._4) }
-    // the gate: floored factor vs the declared bound, exempt set excluded
-    val violations = rows.filter { case (n, b, sc, _) =>
-      b > 0 && sc > 0 && !BoundExempt(n) && floored(b, sc) > FactorBound
-    }.map(_._1)
-    val failures = rows.filter(_._4 <= 0).map(_._1)
-    val json = {
-      val qs = rows.map { case (n, b, sc, f) =>
-        f""""$n":{"base_sec":$b%.3f,"scaled_sec":$sc%.3f,"factor":$f%.2f}"""
-      }.mkString("{", ",", "}")
-      val viol = violations.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val fails = failures.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val exempt = BoundExempt.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val req = requeried.map { case (n, ms) =>
-        val Seq(b1, sc1, b2, sc2, b3, sc3) = ms
-        f""""$n":{"base_runs":[$b1%.3f,$b2%.3f,$b3%.3f],"scaled_runs":[$sc1%.3f,$sc2%.3f,$sc3%.3f]}"""
-      }.mkString("{", ",", "}")
-      val skew = skewRows.map { case (n, b, sk, f) =>
-        f""""$n":{"base_sec":$b%.3f,"skew_sec":$sk%.3f,"factor":$f%.2f}"""
-      }.mkString("{", ",", "}")
-      val skewViol = skewViolations.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val rocks = rocksRows.map { case (n, b, sec, f, rws, bytes, ok) =>
-        f""""$n":{"base_sec":$b%.3f,"rocksdb_scaled_sec":$sec%.3f,"factor":$f%.2f,"state_rows":$rws,"state_bytes":$bytes,"provider_confirmed":$ok}"""
-      }.mkString("{", ",", "}")
-      val rocksViol = rocksViolations.map("\"" + _ + "\"").mkString("[", ",", "]")
-      // adjudicated near-bound survivors: entries whose MEDIAN factor
-      // still sits within the requery margin of the bound after the
-      // med3 pass — the watch list for the next round, named in the
-      // artifact instead of discovered by re-reading 385 figures
-      val nearBound = rows.filter { case (n, b, sc, _) =>
-        b > 0 && sc > 0 && !BoundExempt(n) && {
-          val f = floored(b, sc)
-          f > RequeryMargin * FactorBound && f <= FactorBound
-        }
-      }.map { case (n, b, sc, _) =>
-        f""""$n":{"floored_factor":${floored(b, sc)}%.2f,"adjudicated":${requeried.contains(n)}}"""
-      }.mkString("{", ",", "}")
-      val policy = f"median-of-3 re-measure per side when floored factor > $RequeryMargin%.1f*factor_bound; survivors listed in near_bound"
-      f"""{"metric":"scale_sweep","base":"$base","scaled":"$scaled","data_factor":$reps,"n_queries":${rows.size},"factor_bound":$FactorBound%.1f,"base_time_floor_sec":$BaseTimeFloor%.1f,"requery_policy":"$policy","bound_exempt":$exempt,"violations":$viol,"within_bound":${violations.isEmpty && failures.isEmpty && skewViolations.isEmpty && rocksViolations.isEmpty},"failed":$fails,"near_bound":$nearBound,"requeried_raw":$req,"skew_sweep":$skew,"skew_violations":$skewViol,"streaming_rocksdb":$rocks,"streaming_rocksdb_violations":$rocksViol,"worst_query":"${worst._1}","worst_factor":${worst._2}%.2f,"worst_adjudication_settled":$adjudicationSettled,"worst_adjudication_requeries":$adjudicationExtra,"stream_events_per_sec":$streamRate%.0f,"throttled":$throttled,"pair_census":$census,"queries":$qs}"""
-    }
-    java.nio.file.Files.write(Graft.repoFile("BENCH_SCALE.json"),
-      json.getBytes("UTF-8"))
-    println(json.take(1800))
+    val census = obj(Seq("base" -> base, "scaled" -> scaled).map { case (tag, dir) =>
+      tag -> obj(operators.DedupQueries.pairCensus(spark, dir): _*)
+    }: _*)
+    val worst = rows.filter(_.ok).maxByOption(_.factor)
+    val violations = adj.violations(FactorBound)
+    // adjudicated near-bound survivors: entries whose MEDIAN factor still
+    // sits within the requery margin of the bound — the watch list for the
+    // next round, named in the artifact
+    val nearBound = rows.filter { r =>
+      gated(r) && r.floored > RequeryMargin * FactorBound && r.floored <= FactorBound
+    }.map(r => r.name -> obj("floored_factor" -> fixed(r.floored, 2),
+      "adjudicated" -> adj.requeried.contains(r.name)))
+    def factorRow(r: Row, scaledKey: String) =
+      obj("base_sec" -> fixed(r.base, 3), scaledKey -> fixed(r.scaled, 3), "factor" -> fixed(r.factor, 2))
+    write("BENCH_SCALE.json",
+      "metric" -> "scale_sweep", "base" -> base, "scaled" -> scaled, "data_factor" -> reps,
+      "n_queries" -> rows.size, "factor_bound" -> fixed(FactorBound, 1),
+      "base_time_floor_sec" -> fixed(BaseTimeFloor, 1),
+      "requery_policy" -> f"median-of-3 re-measure per side when floored factor > $RequeryMargin%.1f*factor_bound; survivors listed in near_bound",
+      "bound_exempt" -> BoundExempt.toSeq.sorted, "violations" -> violations,
+      "within_bound" -> (violations.isEmpty && adj.failures.isEmpty && skewViolations.isEmpty &&
+        rocksViolations.isEmpty),
+      "failed" -> adj.failures, "near_bound" -> obj(nearBound: _*),
+      "requeried_raw" -> adj.requeriedJson,
+      "skew_sweep" -> obj(skewRows.map(r => r.name -> factorRow(r, "skew_sec")): _*),
+      "skew_violations" -> skewViolations,
+      "streaming_rocksdb" -> obj(rocksRows.map { case (r, stateRows, stateBytes, confirmed) =>
+        r.name -> obj("base_sec" -> fixed(r.base, 3), "rocksdb_scaled_sec" -> fixed(r.scaled, 3),
+          "factor" -> fixed(r.factor, 2), "state_rows" -> stateRows, "state_bytes" -> stateBytes,
+          "provider_confirmed" -> confirmed)
+      }: _*),
+      "streaming_rocksdb_violations" -> rocksViolations,
+      "worst_query" -> worst.fold("")(_.name),
+      "worst_factor" -> fixed(worst.fold(-1.0)(_.factor), 2),
+      "worst_adjudication_settled" -> adj.settled, "worst_adjudication_requeries" -> adj.extra,
+      "stream_events_per_sec" -> fixed(streamRate, 0),
+      "throttled" -> (streamRate > 0 && streamRate < 0.5 * Measure.CanaryRefEventsPerSec),
+      "pair_census" -> census,
+      "queries" -> obj(rows.map(r => r.name -> factorRow(r, "scaled_sec")): _*))
     spark.stop()
   }
 }
 
-/** 100× spot sweep (VERDICT r15 "what's missing" #4): the full scale gate
-  * stops at 10×, but the "design for 100 TB" claims rest on the five most
-  * scale-sensitive families — the persisted band-index probe, incremental
-  * cluster maintenance, the sorted-neighborhood fuzzy join, substring-span
-  * dedup, and the BM25/PRF retrieval stack. This leg re-measures exactly
-  * those queries at data_factor 100 (one leg, not the 431-query sweep) and
-  * writes BENCH_SCALE100.json with per-query factors and an adjudicated
-  * worst.
+/** 100× spot sweep: the full scale gate stops at 10×, but the "design for
+  * 100 TB" claims rest on the five most scale-sensitive families — the
+  * persisted band-index probe, incremental cluster maintenance, the
+  * sorted-neighborhood fuzzy join, substring-span dedup, and the BM25/PRF
+  * retrieval stack. This leg re-measures exactly those queries at
+  * data_factor 100 (one leg, not the full sweep) with the same sweep and
+  * adjudication as [[BenchScale]], and writes BENCH_SCALE100.json with
+  * per-query factors and an adjudicated worst.
   *
   * Interpretation contract: the amplifier replicates every document
   * verbatim, so at 100× each document is a 100-way duplicate cluster —
   * maximal duplicate density by design. A LINEAR operator therefore
   * measures factor ≈ reps (floored by [[BenchScale.BaseTimeFloor]] against
-  * constant overhead); the bound is 1.2·reps, and anything above it gets a
-  * median-of-3 adjudication plus a named cause in the artifact rather than
-  * a silent number.
+  * constant overhead); the bound is 1.2·reps.
   */
 object BenchScale100 {
   val SpotQueries: Seq[String] = Seq(
     "dedup_index_maintenance", "dedup_index_census", "dedup_clusters_incremental",
     "join_fuzzy_blocked", "dedup_substring_spans",
     "sim_bm25_topk", "sim_prf_expansion",
-    // r17 additions (VERDICT r16 "what's missing" #2 and #4): the
-    // duplicate-density-sensitive banded paragraph shape, and the new
+    // the duplicate-density-sensitive banded paragraph shape, and the
     // maintained ANN index probe + census
     "dedup_paragraph_neardup", "sim_index_maintenance", "sim_index_census")
 
   def main(args: Array[String]): Unit = {
-    val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val scaled = if (args.length > 0) args(0) else "target/scale100"
-    val reps = if (args.length > 1) args(1).toInt else 100
-    val factorBound = 1.2 * reps
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Graft.session(s"local[$cpus]", "graft-benchscale100")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(scaled, "lineitem.parquet")))
-      ScaleGen.generate(spark, base, scaled, reps)
-
-    // warm both corpora and pre-stage the memoized per-fixture tables the
-    // spot families consume (the band index and corpus cluster labels are
-    // maintained-by-ingest tables in the production story — built outside
-    // query timing, exactly like the 10× sweep stages them)
-    for (dir <- Seq(base, scaled)) {
-      Tables.all.foreach(t => Tables.load(spark, dir, t).count())
+    // the spot families read the band index, the corpus cluster labels and
+    // the IVF index: maintained-by-ingest tables in the production story,
+    // so they are staged outside query timing
+    def stage(spark: SparkSession, dir: String): Unit = {
       operators.DedupQueries.bandIndex(spark, dir)._1.count()
       operators.DedupQueries.corpusClusterLabels(spark, dir).count()
       operators.SimilarityQueries.ivfIndex(spark, dir)._1.count()
     }
-    val nEvents = Tables.events(spark, base).count()
-    def canaryOnce(): Double =
-      try {
-        val t0 = System.nanoTime()
-        SparkEntry.queries("stream_payload_pipeline")(spark, base)
-          .write.mode("overwrite").format("noop").save()
-        nEvents / ((System.nanoTime() - t0) / 1e9)
-      } catch { case _: Throwable => -1.0 }
-    val streamRate = {
-      val ok = Seq(canaryOnce(), canaryOnce(), canaryOnce()).filter(_ > 0).sorted
-      if (ok.isEmpty) -1.0 else ok(ok.size / 2)
-    }
-
-    val defs = SparkEntry.allDefs.filter(d => SpotQueries.contains(d.name))
-    def timeOne(d: QueryDef, dir: String): Double = {
-      val t0 = System.nanoTime()
-      try {
-        d.run(spark, dir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[benchscale100] ${d.name} @ $dir failed: ${e.getMessage}")
-          -1.0
-      } finally {
-        try {
-          spark.catalog.clearCache()
-          spark.catalog.listTables().collect()
-            .filter(_.isTemporary)
-            .foreach(t => spark.catalog.dropTempView(t.name))
-        } catch { case _: Throwable => () }
-      }
-    }
-    def floored(b: Double, sc: Double): Double =
-      sc / math.max(b, BenchScale.BaseTimeFloor)
-    def med3(a: Double, x: Double, y: Double): Double = {
-      val v = Seq(a, x, y).filter(_ > 0).sorted
-      if (v.isEmpty) -1.0 else v(v.size / 2)
-    }
-    val requeried = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    def requeryOne(n: String, b: Double, sc: Double): (String, Double, Double, Double) = {
-      val d = defs.find(_.name == n).get
-      val (b2, sc2) = (timeOne(d, base), timeOne(d, scaled))
-      val (b3, sc3) = (timeOne(d, base), timeOne(d, scaled))
-      requeried(n) = Seq(b, sc, b2, sc2, b3, sc3)
-      val (bm, scm) = (med3(b, b2, b3), med3(sc, sc2, sc3))
-      println(f"[benchscale100] $n%-28s REQUERY(med3) base $bm%6.2f s  x$reps $scm%7.2f s  factor ${scm / bm}%6.2f")
-      (n, bm, scm, scm / bm)
-    }
-    val firstPass = defs.map { d =>
-      val b = timeOne(d, base)
-      val sc = timeOne(d, scaled)
-      val f = if (b > 0 && sc > 0) sc / b else -1.0
-      println(f"[benchscale100] ${d.name}%-28s base $b%6.2f s  x$reps $sc%7.2f s  factor $f%6.2f")
-      (d.name, b, sc, f)
-    }
-    // adjudicate every over-bound entry AND the global worst, median-of-3
-    var rows = firstPass.map { case r @ (n, b, sc, _) =>
-      if (b > 0 && sc > 0 && floored(b, sc) > factorBound) requeryOne(n, b, sc) else r
-    }
-    rows.filter(r => r._2 > 0 && r._3 > 0)
-      .sortBy(r => -floored(r._2, r._3)).headOption.foreach { case (n, b, sc, _) =>
-        if (!requeried.contains(n)) {
-          val i = rows.indexWhere(_._1 == n)
-          rows = rows.updated(i, requeryOne(n, b, sc))
-        }
-      }
-    val ok = rows.filter(r => r._2 > 0 && r._3 > 0)
-    val worst = if (ok.isEmpty) ("", -1.0)
-      else { val w = ok.maxBy(r => floored(r._2, r._3)); (w._1, floored(w._2, w._3)) }
-    val violations = rows.filter { case (_, b, sc, _) =>
-      b > 0 && sc > 0 && floored(b, sc) > factorBound
-    }.map(_._1)
-    val failures = rows.filter(_._4 <= 0).map(_._1)
-    val qs = rows.map { case (n, b, sc, f) =>
-      f""""$n":{"base_sec":$b%.3f,"scaled_sec":$sc%.3f,"factor":$f%.2f,"floored_factor":${floored(b, sc)}%.2f,"sublinearity":${floored(b, sc) / reps}%.3f}"""
-    }.mkString("{", ",", "}")
-    val req = requeried.map { case (n, ms) =>
-      val Seq(b1, sc1, b2, sc2, b3, sc3) = ms
-      f""""$n":{"base_runs":[$b1%.3f,$b2%.3f,$b3%.3f],"scaled_runs":[$sc1%.3f,$sc2%.3f,$sc3%.3f]}"""
-    }.mkString("{", ",", "}")
-    val viol = violations.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fails = failures.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json =
-      f"""{"metric":"scale100_spot_sweep","base":"$base","scaled":"$scaled","data_factor":$reps,"n_queries":${rows.size},"factor_bound":$factorBound%.1f,"base_time_floor_sec":${BenchScale.BaseTimeFloor}%.1f,"duplicate_density_note":"the amplifier makes every document a $reps-way duplicate cluster; factors near $reps are LINEAR","violations":$viol,"within_bound":${violations.isEmpty && failures.isEmpty},"failed":$fails,"requeried_raw":$req,"worst_query":"${worst._1}","worst_floored_factor":${worst._2}%.2f,"stream_events_per_sec":$streamRate%.0f,"queries":$qs}"""
-    // repo-rooted like BENCH_SCALE.json (ADVICE r16 #2): a run launched
-    // from a subdirectory must not strand the committed artifact in cwd
-    java.nio.file.Files.write(Graft.repoFile("BENCH_SCALE100.json"),
-      json.getBytes("UTF-8"))
-    println(json.take(1800))
-    spark.stop()
+    val sw = BenchScale.sweep("graft-benchscale100", args, 100,
+      SparkEntry.allDefs.filter(d => SpotQueries.contains(d.name)), 1.2 * _, stage)
+    val (reps, adj) = (sw.reps, sw.adj)
+    val worst = adj.rows.filter(_.ok).maxByOption(_.floored)
+    val violations = adj.violations(sw.bound)
+    BenchScale.write("BENCH_SCALE100.json",
+      "metric" -> "scale100_spot_sweep", "base" -> sw.base, "scaled" -> sw.scaled,
+      "data_factor" -> reps, "n_queries" -> adj.rows.size,
+      "factor_bound" -> fixed(sw.bound, 1),
+      "base_time_floor_sec" -> fixed(BenchScale.BaseTimeFloor, 1),
+      "duplicate_density_note" -> s"the amplifier makes every document a $reps-way duplicate cluster; factors near $reps are LINEAR",
+      "violations" -> violations, "within_bound" -> (violations.isEmpty && adj.failures.isEmpty),
+      "failed" -> adj.failures, "requeried_raw" -> adj.requeriedJson,
+      "worst_query" -> worst.fold("")(_.name),
+      "worst_floored_factor" -> fixed(worst.fold(-1.0)(_.floored), 2),
+      "stream_events_per_sec" -> fixed(sw.streamRate, 0),
+      "queries" -> obj(adj.rows.map(r => r.name -> obj("base_sec" -> fixed(r.base, 3),
+        "scaled_sec" -> fixed(r.scaled, 3), "factor" -> fixed(r.factor, 2),
+        "floored_factor" -> fixed(r.floored, 2), "sublinearity" -> fixed(r.floored / reps, 3))): _*))
+    sw.spark.stop()
   }
 }

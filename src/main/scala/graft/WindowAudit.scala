@@ -121,9 +121,8 @@ object WindowAudit {
     * declared query that has at least one unpartitioned window.
     */
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = Graft.session(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]",
-      "graft-window-audit")
+    val sfDir = Graft.fixtureDir("/root/testdata/sf0.001")
+    val spark = Graft.session(Graft.localMaster(8), "graft-window-audit")
     SparkEntry.allDefs.foreach { d =>
       try {
         val plan = d.run(spark, sfDir).queryExecution.optimizedPlan

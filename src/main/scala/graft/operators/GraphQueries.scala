@@ -541,20 +541,24 @@ object GraphQueries extends QueryModule {
     }
   }
 
+  /** Every CTE read more than once is MATERIALIZED: DuckDB 1.0 otherwise
+    * inlines them and re-expands the whole edge chain at each reference,
+    * which needs more than 3 GB at sf0.01 and exhausts temp storage at sf0.1.
+    */
   private val kcoreSql =
-    s"""WITH $edgesCte,
+    s"""WITH ${edgesCte.replace(" AS (", " AS MATERIALIZED (")},
        |k1 AS (SELECT n FROM deg WHERE d >= 40),
-       |e1 AS (SELECT u, v FROM pairs
+       |e1 AS MATERIALIZED (SELECT u, v FROM pairs
        |       WHERE u IN (SELECT n FROM k1) AND v IN (SELECT n FROM k1)),
        |deg1 AS (SELECT n, count(*) AS d FROM (
        |  SELECT u AS n FROM e1 UNION ALL SELECT v FROM e1) GROUP BY n),
        |k2 AS (SELECT n FROM deg1 WHERE d >= 40),
-       |e2 AS (SELECT u, v FROM e1
+       |e2 AS MATERIALIZED (SELECT u, v FROM e1
        |       WHERE u IN (SELECT n FROM k2) AND v IN (SELECT n FROM k2)),
        |deg2 AS (SELECT n, count(*) AS d FROM (
        |  SELECT u AS n FROM e2 UNION ALL SELECT v FROM e2) GROUP BY n),
        |k3 AS (SELECT n FROM deg2 WHERE d >= 40),
-       |e3 AS (SELECT u, v FROM e2
+       |e3 AS MATERIALIZED (SELECT u, v FROM e2
        |       WHERE u IN (SELECT n FROM k3) AND v IN (SELECT n FROM k3)),
        |s1 AS (SELECT 1 AS peel_round,
        |  (SELECT count(*) FROM (SELECT DISTINCT n FROM (

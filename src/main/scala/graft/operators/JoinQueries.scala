@@ -898,14 +898,14 @@ object JoinQueries extends QueryModule {
           col("c_nationkey") === col("s_nationkey"))
       .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name").as("nation"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-        .as("revenue"))
+      .agg(SharedExprs.roundCents(sum(SharedExprs.revMicros) / 1e6).as("revenue"))
       .orderBy(desc("revenue"), col("nation"))
   }
 
   private val q05LocalSupplierSql =
     """SELECT n_name AS nation,
-      |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+      |  round(sum(CAST(round(l_extendedprice * (1 - l_discount) * 1e6) AS BIGINT)) / 1e6, 2)
+      |    AS revenue
       |FROM customer
       |JOIN orders ON c_custkey = o_custkey
       |JOIN lineitem ON l_orderkey = o_orderkey

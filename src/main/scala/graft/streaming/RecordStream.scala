@@ -224,24 +224,7 @@ object RecordStream {
   def kinesisFixture(spark: SparkSession, dir: String): String =
     graft.Derived.get(spark, "stream.kinesisFixture", eventsFile(dir)) {
       val stage = graft.Scratch.dir("graft_kinesis_")
-      val rows = graft.Tables.events(spark, dir)
-        .select(
-          pmod(col("user_id"), lit(NumShards)).cast("int").as("shard"),
-          (expr("unix_micros(ts)") * 1000L).as("ts_nanos"),
-          col("user_id").cast("string").as("pkey"),
-          when(col("event_id") % 97 === 0, concat(lit("garbage-"), col("event_id")))
-            .otherwise(concat(lit("testData-"),
-              date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSS"))).as("payload"),
-          col("event_id"))
-        .orderBy("shard", "ts_nanos", "event_id")
-        .collect()
-      val writers = (0 until NumShards).map { i =>
-        i -> new java.io.PrintWriter(
-          new java.io.File(stage, f"shard-$i%03d.txt"), "UTF-8")
-      }.toMap
-      try rows.foreach { r =>
-        writers(r.getInt(0)).print(s"${r.getLong(1)}\t${r.getString(2)}\t${r.getString(3)}\n")
-      } finally writers.values.foreach(_.close())
+      writeShardLogs(spark, dir, stage)((shard, _) => f"shard-$shard%03d.txt")
       stage
     }
 
@@ -258,37 +241,42 @@ object RecordStream {
       val stage = graft.Scratch.dir("graft_kinesis_rs_")
       val splitNanos = java.time.Instant.parse("2024-01-15T00:00:00Z")
         .getEpochSecond * 1000000000L
-      val rows = graft.Tables.events(spark, dir)
-        .select(
-          when(pmod(col("user_id"), lit(NumShards)) =!= 0, "keep")
-            .otherwise(when(expr("unix_micros(ts)") * 1000L < splitNanos,
-              lit("parent")).otherwise(lit("child"))).as("role"),
-          pmod(col("user_id"), lit(NumShards)).cast("int").as("shard"),
-          (expr("unix_micros(ts)") * 1000L).as("ts_nanos"),
-          col("user_id").cast("string").as("pkey"),
-          when(col("event_id") % 97 === 0, concat(lit("garbage-"), col("event_id")))
-            .otherwise(concat(lit("testData-"),
-              date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSS"))).as("payload"),
-          col("event_id"))
-        .orderBy("shard", "ts_nanos", "event_id")
-        .collect()
-      def fileOf(role: String, shard: Int): String = role match {
-        case "parent" => "shard-000.txt"
-        case "child" => "shard-100.txt"
-        case _ => f"shard-$shard%03d.txt"
+      writeShardLogs(spark, dir, stage) { (shard, tsNanos) =>
+        if (shard != 0) f"shard-$shard%03d.txt"
+        else if (tsNanos < splitNanos) "shard-000.txt"
+        else "shard-100.txt"
       }
-      val writers = scala.collection.mutable.Map[String, java.io.PrintWriter]()
-      try rows.foreach { r =>
-        val f = fileOf(r.getString(0), r.getInt(1))
-        val w = writers.getOrElseUpdate(f,
-          new java.io.PrintWriter(new java.io.File(stage, f), "UTF-8"))
-        w.print(s"${r.getLong(2)}\t${r.getString(3)}\t${r.getString(4)}\n")
-      } finally writers.values.foreach(_.close())
       val topo = new java.io.PrintWriter(new java.io.File(stage, "_topology.txt"), "UTF-8")
       try topo.print("shardId-000000000100\tshardId-000000000000\n")
       finally topo.close()
       stage
     }
+
+  /** Writes every events-fixture record as a shard-log line
+    * (`ts_nanos<TAB>pkey<TAB>payload`) into `stage`, in (shard, ts,
+    * event_id) order, each to the file `fileOf(shard, tsNanos)` names.
+    */
+  private def writeShardLogs(spark: SparkSession, dir: String, stage: String)(
+      fileOf: (Int, Long) => String): Unit = {
+    val rows = graft.Tables.events(spark, dir)
+      .select(
+        pmod(col("user_id"), lit(NumShards)).cast("int").as("shard"),
+        (expr("unix_micros(ts)") * 1000L).as("ts_nanos"),
+        col("user_id").cast("string").as("pkey"),
+        when(col("event_id") % 97 === 0, concat(lit("garbage-"), col("event_id")))
+          .otherwise(concat(lit("testData-"),
+            date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSS"))).as("payload"),
+        col("event_id"))
+      .orderBy("shard", "ts_nanos", "event_id")
+      .collect()
+    val writers = scala.collection.mutable.Map[String, java.io.PrintWriter]()
+    try rows.foreach { r =>
+      val f = fileOf(r.getInt(0), r.getLong(1))
+      val w = writers.getOrElseUpdate(f,
+        new java.io.PrintWriter(new java.io.File(stage, f), "UTF-8"))
+      w.print(s"${r.getLong(1)}\t${r.getString(2)}\t${r.getString(3)}\n")
+    } finally writers.values.foreach(_.close())
+  }
 
   /** The events fixture replayed through the native shard-ordered
     * DataSourceV2 source — the engine's own "Kinesis consumer" surface.

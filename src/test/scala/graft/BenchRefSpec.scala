@@ -34,9 +34,10 @@ class BenchRefSpec extends AnyFunSuite {
   }
 
   test("origin entries are positive and parseable by Bench's regex reader") {
-    // Bench parses the origin file with a flat regex over the queries
-    // object: a nested object or non-numeric value inside it would silently
-    // truncate the parse. Pin the shape the reader assumes.
+    // Bench appends first-seen origins by splicing them into the text of
+    // the queries object, found with a flat regex: a nested object or
+    // non-numeric value inside it would make the splice land mid-object.
+    // Pin the shape the splice assumes.
     val txt = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("bench_ref_origin.json")), "UTF-8")
     val qObj = """"queries":\{([^}]*)\}""".r

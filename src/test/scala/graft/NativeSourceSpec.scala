@@ -36,6 +36,19 @@ class NativeSourceSpec extends SparkSuite {
     }
   }
 
+  test("reshard fixture splits shard-000 in order and copies shard-001 byte for byte") {
+    def log(stage: String, f: String) = java.nio.file.Paths.get(stage, f)
+    def lines(stage: String, f: String) =
+      java.nio.file.Files.readAllLines(log(stage, f)).toArray.toSeq
+    val plain = RecordStream.kinesisFixture(spark, Sf)
+    val reshard = RecordStream.kinesisReshardFixture(spark, Sf)
+    val (parent, child) = (lines(reshard, "shard-000.txt"), lines(reshard, "shard-100.txt"))
+    assert(parent.nonEmpty && child.nonEmpty)
+    assert(parent ++ child == lines(plain, "shard-000.txt"))
+    assert(java.nio.file.Files.readAllBytes(log(reshard, "shard-001.txt")).toSeq ==
+      java.nio.file.Files.readAllBytes(log(plain, "shard-001.txt")).toSeq)
+  }
+
   test("restart from checkpoint resumes per-shard offsets exactly [REF A10]") {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_kin_ck_").toString
     val outDir = java.nio.file.Files.createTempDirectory("graft_kin_out_").toString
