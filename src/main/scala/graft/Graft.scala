@@ -11,7 +11,10 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * core of the master (`local[N]` → N, `local[*]` → the host's cores), not
   * the 200 default that over-schedules tiny shuffles. On a real cluster the
   * same builder is used with `spark.sql.shuffle.partitions` sized to ~2-3×
-  * total cores and AQE left on to coalesce / skew-split at runtime.
+  * total cores and AQE left on to coalesce / skew-split at runtime. The
+  * `file` scheme is bound to [[LocalFs]] for both Hadoop APIs, so local
+  * checkpoint, state-store and sink writes start no `chmod`/`readlink`
+  * process.
   */
 object Graft {
   /** RAM-backed local scratch (optimization r17, guide §6 I/O layout):
@@ -19,8 +22,12 @@ object Graft {
     * broadcast spill) and the JVM temp dir (streaming temp checkpoints,
     * [[Scratch]] staging parquet) are EPHEMERAL by construction here —
     * every piece is per-run state that a JVM-exit sweeper or Spark itself
-    * deletes — so on hosts with a writable tmpfs they belong on it, not
-    * on the data disk where WAL/offset-log fsyncs pay rotational latency.
+    * deletes — so on hosts with a writable tmpfs they belong on it
+    * rather than on the data disk. (What made streaming checkpoints slow
+    * here was not the disk: a 300-byte write, fsync and rename, the shape
+    * of one offset-log entry, measured 0.4 ms median on the 4-core dev
+    * host's data disk; the per-file `chmod`/`readlink` processes Hadoop
+    * started were the cost, and [[LocalFs]] removes them on any disk.)
     * Parameterized for other deployments: SPARK_GRAFT_LOCAL_DIR=<path>
     * overrides the root (a cluster sets its NVMe scratch), =0 disables
     * (fall back to java.io.tmpdir). NOT result caching: only transient
@@ -80,8 +87,10 @@ object Graft {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+    LocalFs.confs.foreach { case (k, v) => builder.config(k, v) }
     fastLocalDir().foreach(d => builder.config("spark.local.dir", d))
     val spark = builder.getOrCreate()
+    LocalFs.evictStale(spark.sessionState.newHadoopConf())
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -17,38 +17,54 @@ object AggQueries extends QueryModule {
   /** TPC-H Q1 shape: scan → filter (pushed to parquet) → hash agg → sort.
     * Reference anchor: the engine surface mandated by BASELINE.json; shape
     * chosen to exercise partial/final agg over the largest fixture table.
+    * Every sum and average is over integer micros (`pricingMicros`), so
+    * the last rounded digit does not depend on the order of addition;
+    * the oracle sums the same micros.
     */
-  def pricingSummary(s: SparkSession, dir: String): DataFrame =
+  def pricingSummary(s: SparkSession, dir: String): DataFrame = {
+    def total(c: String) = sum(expr(pricingMicros(c))) / 1e6
+    def mean(c: String) = SharedExprs.roundDigits(total(c) / count(expr(pricingMicros(c))), 4)
     Tables
       .lineitem(s, dir)
       .filter(col("l_shipdate") <= lit("2000-01-01").cast("timestamp"))
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
-        round(sum("l_quantity"), 2).as("sum_qty"),
-        round(sum("l_extendedprice"), 2).as("sum_base_price"),
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax"))), 2)
-          .as("sum_charge"),
-        round(avg("l_quantity"), 4).as("avg_qty"),
-        round(avg("l_extendedprice"), 4).as("avg_price"),
-        round(avg("l_discount"), 4).as("avg_disc"),
+        SharedExprs.roundCents(total("qty")).as("sum_qty"),
+        SharedExprs.roundCents(total("price")).as("sum_base_price"),
+        SharedExprs.roundCents(total("disc_price")).as("sum_disc_price"),
+        SharedExprs.roundCents(total("charge")).as("sum_charge"),
+        mean("qty").as("avg_qty"),
+        mean("price").as("avg_price"),
+        mean("disc").as("avg_disc"),
         count(lit(1)).as("count_order"))
       .orderBy("l_returnflag", "l_linestatus")
+  }
 
-  private val pricingSummarySql =
-    """SELECT l_returnflag, l_linestatus,
-      |  round(sum(l_quantity), 2) AS sum_qty,
-      |  round(sum(l_extendedprice), 2) AS sum_base_price,
-      |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-      |  round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-      |  round(avg(l_quantity), 4) AS avg_qty,
-      |  round(avg(l_extendedprice), 4) AS avg_price,
-      |  round(avg(l_discount), 4) AS avg_disc,
+  /** Q1's per-row doubles as integer-micros SQL, the same text in both engines. */
+  private val pricingMicros = Map(
+    "qty" -> "l_quantity",
+    "price" -> "l_extendedprice",
+    "disc_price" -> "l_extendedprice * (1 - l_discount)",
+    "charge" -> "l_extendedprice * (1 - l_discount) * (1 + l_tax)",
+    "disc" -> "l_discount").map { case (c, e) => c -> SharedExprs.microsSql(e) }
+
+  private val pricingSummarySql = {
+    def total(c: String) = s"round(sum(${pricingMicros(c)}) / 1e6, 2)"
+    def mean(c: String) = s"round(sum(${pricingMicros(c)}) / 1e6 / count(${pricingMicros(c)}), 4)"
+    s"""SELECT l_returnflag, l_linestatus,
+      |  ${total("qty")} AS sum_qty,
+      |  ${total("price")} AS sum_base_price,
+      |  ${total("disc_price")} AS sum_disc_price,
+      |  ${total("charge")} AS sum_charge,
+      |  ${mean("qty")} AS avg_qty,
+      |  ${mean("price")} AS avg_price,
+      |  ${mean("disc")} AS avg_disc,
       |  CAST(count(*) AS BIGINT) AS count_order
       |FROM lineitem
       |WHERE l_shipdate <= TIMESTAMP '2000-01-01 00:00:00'
       |GROUP BY l_returnflag, l_linestatus
       |ORDER BY l_returnflag, l_linestatus""".stripMargin
+  }
 
   /** count(DISTINCT …) and sum(DISTINCT …) — planned as expand + two-phase
     * aggregate by Catalyst; scales via partial distinct on the mappers.

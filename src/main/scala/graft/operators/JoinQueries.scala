@@ -739,8 +739,7 @@ object JoinQueries extends QueryModule {
     li.join(o, col("l_orderkey") === col("o_orderkey"))
       .join(c, col("o_custkey") === col("c_custkey"))
       .groupBy("l_orderkey", "o_orderdate")
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-        .as("revenue"))
+      .agg(SharedExprs.roundCents(sum(SharedExprs.revMicros) / 1e6).as("revenue"))
       .orderBy(desc("revenue"), col("o_orderdate"), col("l_orderkey"))
       .limit(10)
       .select(col("l_orderkey"),
@@ -751,7 +750,8 @@ object JoinQueries extends QueryModule {
   private val q03ShippingPrioritySql =
     """SELECT l_orderkey,
       |  strftime(orders.o_orderdate, '%Y-%m-%d') AS o_orderdate,
-      |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+      |  round(sum(CAST(round(l_extendedprice * (1 - l_discount) * 1e6) AS BIGINT)) / 1e6, 2)
+      |    AS revenue
       |FROM customer
       |JOIN orders ON c_custkey = o_custkey
       |JOIN lineitem ON l_orderkey = o_orderkey

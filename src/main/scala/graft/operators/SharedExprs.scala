@@ -9,9 +9,13 @@ import org.apache.spark.sql.functions.{expr, round}
   * must land in BOTH twins, which is why they live in one place.
   */
 object SharedExprs {
-  /** Integer-micros line revenue: exact under any aggregation order. */
-  def revMicros: Column =
-    expr("CAST(round(l_extendedprice * (1 - l_discount) * 1e6) AS BIGINT)")
+  /** SQL text, valid in both engines, for the integer micros of a per-row
+    * double expression: a sum of it is exact under any aggregation order.
+    */
+  def microsSql(e: String): String = s"CAST(round(($e) * 1e6) AS BIGINT)"
+
+  /** Integer-micros line revenue. */
+  def revMicros: Column = expr(microsSql("l_extendedprice * (1 - l_discount)"))
 
   /** Cents rounding in the oracle's form, for a double derived from an
     * exact integer sum (`sum(micros) / 1e6`). DuckDB's round(DOUBLE, 2) is
@@ -21,7 +25,15 @@ object SharedExprs {
     * scale 0 the decimal string is half-up exactly where std::round is, so
     * `round(x * 100) / 100` computes the oracle's value.
     */
-  def roundCents(x: Column): Column = round(x * 100) / 100
+  def roundCents(x: Column): Column = roundDigits(x, 2)
+
+  /** DuckDB's round(DOUBLE, d), `std::round(x * 10^d) / 10^d`, in Spark;
+    * see [[roundCents]].
+    */
+  def roundDigits(x: Column, d: Int): Column = {
+    val scale = math.pow(10, d)
+    round(x * scale) / scale
+  }
 
   /** Whitespace tokenizer (Spark side): codegen'd split + empty-drop. */
   val toks = "array_remove(split(text, ' ', -1), '')"

@@ -165,7 +165,10 @@ class KinesisLikeMicroBatch(path: String, maxPerBatch: Long, streamName: String)
   private val files: Seq[java.io.File] = KinesisLikeSource.shardFiles(path)
 
   /** Per-shard seek index: `index(i)` is the byte offset of sequence number
-    * i's line (one extra trailing entry = file length). The shard-iterator
+    * i's line (one extra trailing entry = the end of the last record). Only
+    * newline-terminated lines are records: an unterminated tail is a record
+    * still being written, and reading it now would serve it truncated and
+    * skip the rest of it for good. The shard-iterator
     * analogue — planInputPartitions hands each slice its start byte so a
     * reader seeks instead of re-reading from the head. One raw byte pass
     * per shard file, shared with shard-end discovery [REF A14]. (At this
@@ -183,7 +186,6 @@ class KinesisLikeMicroBatch(path: String, maxPerBatch: Long, streamName: String)
         if (b == '\n') offs += pos
         b = in.read()
       }
-      if (pos > offs.last) offs += pos // tolerate a missing final newline
     } finally in.close()
     KinesisLikeSource.shardIdOf(f.getName) -> offs.toArray
   }.toMap

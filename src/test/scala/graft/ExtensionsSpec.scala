@@ -10,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ExtensionsSpec extends AnyFunSuite {
 
-  // needs its own session: extensions bind at session build time
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-ext-test")
-    .withExtensions(new plans.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session("local[2]", "graft-ext-test")
 
   test("injected functions resolve without manual registration") {
     import spark.implicits._

@@ -227,4 +227,30 @@ class NativeSourceSpec extends SparkSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == want, s"got=$got want=$want")
   }
+
+  test("an unterminated final line is not a record until its newline lands") {
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    import streaming.source.{KinesisLikeMicroBatch, KinesisShardReaderFactory}
+    val stage = java.nio.file.Files.createTempDirectory("graft_kin_tail_")
+    val log = stage.resolve("shard-000.txt")
+    val line = (i: Int) => s"${1000000000L + i}\tpk$i\tpayload-$i"
+    java.nio.file.Files.write(log,
+      ((0 until 3).map(i => line(i) + "\n").mkString + line(3).take(12)).getBytes("UTF-8"))
+    def readAll(): Seq[(Long, String)] = {
+      val mb = new KinesisLikeMicroBatch(stage.toString, Long.MaxValue, "s")
+      val end = mb.latestOffset(mb.initialOffset(), ReadLimit.allAvailable())
+      mb.planInputPartitions(mb.initialOffset(), end).toSeq.flatMap { p =>
+        val r = new KinesisShardReaderFactory().createReader(p)
+        try Iterator.continually(r.next()).takeWhile(identity)
+          .map(_ => (r.get().getLong(3), new String(r.get().getBinary(4), "UTF-8"))).toList
+        finally r.close()
+      }
+    }
+    // the half-written record 3 is withheld, not served truncated
+    assert(readAll() == (0 until 3).map(i => (i.toLong, s"payload-$i")))
+    // once the writer finishes the line, record 3 is read whole
+    java.nio.file.Files.write(log, (line(3).drop(12) + "\n").getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.APPEND)
+    assert(readAll() == (0 until 4).map(i => (i.toLong, s"payload-$i")))
+  }
 }

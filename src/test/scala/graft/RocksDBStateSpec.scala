@@ -10,16 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RocksDBStateSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-rocksdb-test")
-    .withExtensions(new plans.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.streaming.stateStore.providerClass",
+  lazy val spark: SparkSession = {
+    val s = Graft.session("local[2]", "graft-rocksdb-test")
+    s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    s
+  }
 
   test("streaming aggregation runs on the RocksDB state store") {
     import spark.implicits._

@@ -42,6 +42,18 @@ class ScalarGoldenSpec extends SparkSuite {
     assert(cents(1234.5) == 1234.5)
   }
 
+  test("roundDigits(x, 4): the oracle's round(x, 4) on ties, not Spark's") {
+    import org.apache.spark.sql.functions.lit
+    def four(x: Double): Double =
+      spark.range(1).select(operators.SharedExprs.roundDigits(lit(x), 4)).head().getDouble(0)
+    // 2.00065 * 1e4 is 20006.4999…: DuckDB 1.0.0 gives 2.0006, round(x, 4) 2.0007
+    assert(one("round(CAST(2.00065 AS DOUBLE), 4)") == 2.0007)
+    assert(four(2.00065) == 2.0006)
+    // exact binary ties after scaling round half away from zero, as in DuckDB
+    assert(four(0.12345) == 0.1235)
+    assert(four(-0.00125) == -0.0013)
+  }
+
   test("json_tuple and schema_of_json") {
     val r = spark.sql(
       """SELECT json_tuple('{"a": 1, "b": "x"}', 'a', 'b')""").head()

@@ -3,20 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session per suite (one JVM-wide session; Spark reuses it
-  * across suites via getOrCreate).
+/** Shared local session per suite, built by the program's own factory
+  * (one JVM-wide session; Spark reuses it across suites via getOrCreate,
+  * so every suite must agree on the extension set and the `file` binding).
   */
 trait SparkSuite extends AnyFunSuite {
   val Sf = "/root/testdata/sf0.001"
 
-  // extensions registered here because getOrCreate reuses the first
-  // session JVM-wide — every suite must agree on the extension set
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .withExtensions(new plans.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session("local[4]", "graft-test")
 }

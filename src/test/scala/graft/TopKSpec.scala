@@ -10,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TopKSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-topk-test")
-    .withExtensions(new plans.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session("local[4]", "graft-topk-test")
 
   private val Sf = "/root/testdata/sf0.001"
 
