@@ -13,16 +13,19 @@ import org.apache.spark.sql.SparkSession
 
 /** The measurement core that [[Bench]], [[BenchScale]] and [[BenchScale100]]
   * share: one session set-up, one warm-and-stage step, one timer with its
-  * post-timing hygiene, one stream-rate canary, one median and one JSON
-  * reader and writer. Every figure these mains report is measured the same
-  * way, so a change to the protocol is made here once.
+  * post-timing hygiene, one host loop and window grade, one stream-rate
+  * figure, one median and one JSON reader and writer. Every figure these
+  * mains report is measured the same way, so a change to the protocol is
+  * made here once.
   */
 object Measure {
-  /** Clean-window median rate of the stream canary at sf0.1, in events/s
-    * (BENCH_FULL history at `local[32]`: 95-110 k events/s). A window's
-    * canary ratio is its own canary rate over this figure.
+  /** The committed same-host reference: a full sweep's artifact, written
+    * only by `Bench --refresh` and read by every later sweep.
     */
-  val CanaryRefEventsPerSec = 95000.0
+  val RefFile = "BENCH_FULL.json"
+
+  /** The host's core count, the thread count of the host loop. */
+  val nproc: Int = Runtime.getRuntime.availableProcessors
 
   /** A session on `SPARK_GRAFT_CPUS` cores (`defaultCores` when unset) that
     * reads `events.ts` (TIMESTAMP(NANOS)) as raw longs, which the warm-up
@@ -84,22 +87,80 @@ object Measure {
   /** Fastest of the positive runs, −1 when there are none. */
   def best(runs: Double*): Double = runs.filter(_ > 0).minOption.getOrElse(-1.0)
 
-  /** Three runs of the host-noise canary: events/s of the events table
-    * through the full decode pipeline (`stream_payload_pipeline`), −1 for a
-    * failed run. Graded by [[median]], so one throttle burst landing on a
-    * single run cannot misgrade the window.
+  /** `n` runs of `run` after one untimed warm run (JIT, page cache), which
+    * is discarded.
     */
-  def canaryRuns(spark: SparkSession, dir: String): Seq[Double] = {
-    val nEvents = try Tables.events(spark, dir).count() catch { case _: Throwable => -1L }
-    val pipeline = SparkEntry.allDefs.find(_.name == "stream_payload_pipeline").get
-    Seq.fill(3) {
-      if (nEvents < 0) -1.0
-      else try {
-        val t0 = System.nanoTime()
-        pipeline.run(spark, dir).write.mode("overwrite").format("noop").save()
-        nEvents / ((System.nanoTime() - t0) / 1e9)
-      } catch { case _: Throwable => -1.0 }
+  private def warmRuns(n: Int)(run: => Double): Seq[Double] = { run; Seq.fill(n)(run) }
+
+  /** The host loop: milliseconds for `threads` threads at once to each run
+    * `pass` over its own 8 MB array, nine timed runs after a warm one. It
+    * runs no program code, so it moves only with the host: its clock and
+    * the cores other tenants leave free. perfbench's `calibrate()` times
+    * the same loop.
+    */
+  def calibRuns(threads: Int, pass: Array[Long] => Unit = spin): Seq[Double] = {
+    val arrays = Seq.fill(threads)(new Array[Long](1 << 20))
+    warmRuns(9) {
+      val t0 = System.nanoTime()
+      val ts = arrays.map(a => new Thread(() => pass(a)))
+      ts.foreach(_.start())
+      ts.foreach(_.join())
+      (System.nanoTime() - t0) / 1e6
     }
+  }
+
+  /** 16 passes of a dependent multiply-add over `a`. */
+  private def spin(a: Array[Long]): Unit = {
+    var x = 1L
+    var pass = 0
+    while (pass < 16) {
+      var i = 0
+      while (i < a.length) {
+        x = x * 6364136223846793005L + a(i)
+        a(i) = x
+        i += 1
+      }
+      pass += 1
+    }
+  }
+
+  /** This host's speed against `ref`'s: the reference's host-loop
+    * milliseconds over `calibMs` (a slower host reads below 1), or −1 when
+    * there is no reference from a host with this core count.
+    */
+  def windowRatio(ref: Option[Reference], calibMs: Double): Double =
+    ref.filter(r => r.nproc == nproc && r.calibMs > 0 && calibMs > 0)
+      .fold(-1.0)(_.calibMs / calibMs)
+
+  /** The window grade of a [[windowRatio]]: below 0.5 `throttled`, below
+    * 0.85 `degraded` (a sweep then runs twice and keeps each query's best),
+    * `unrated` without a same-host reference.
+    */
+  def grade(ratio: Double): String =
+    if (ratio < 0) "unrated" else if (ratio < 0.5) "throttled"
+    else if (ratio < 0.85) "degraded" else "ok"
+
+  /** Three timed runs, after a warm one, of events/s of the events table
+    * through the full decode pipeline (`stream_payload_pipeline`); −1 for a
+    * failed run. A reported figure: it moves with the streaming code, so
+    * no gate reads it.
+    */
+  def streamRuns(spark: SparkSession, dir: String): Seq[Double] = {
+    val pipeline = SparkEntry.allDefs.find(_.name == "stream_payload_pipeline").get
+    val nEvents = try Tables.events(spark, dir).count() catch { case _: Throwable => -1L }
+    if (nEvents < 0) Seq.fill(3)(-1.0)
+    else eventRates(nEvents)(pipeline.run(spark, dir).write.mode("overwrite").format("noop").save())
+  }
+
+  /** Events/s of `drain` over `nEvents`, three timed runs after a warm one;
+    * −1 for a run that throws.
+    */
+  def eventRates(nEvents: Long)(drain: => Unit): Seq[Double] = warmRuns(3) {
+    try {
+      val t0 = System.nanoTime()
+      drain
+      nEvents / ((System.nanoTime() - t0) / 1e9)
+    } catch { case _: Throwable => -1.0 }
   }
 
   private val mapper = JsonMapper.builder().addModule(DefaultScalaModule)
@@ -118,14 +179,21 @@ object Measure {
   /** The parsed JSON file at `path` under the repo root. */
   def readJson(path: String): JsonNode = mapper.readTree(Graft.repoFile(path).toFile)
 
-  /** The `queries` figures and `stream_events_per_sec` of a bench reference
-    * file (`bench_ref.json`, `bench_ref_origin.json`); None when the file is
-    * missing or unparseable.
+  /** A reference's host (`nproc`, its host-loop `calib_ms`), its sweep
+    * (fixture `sf`, session `cores`) and its per-query seconds.
     */
-  def readRef(path: String): Option[(Map[String, Double], Double)] = try {
-    val root = readJson(path)
+  final case class Reference(nproc: Int, calibMs: Double, sf: String, cores: Int,
+      queries: Map[String, Double])
+
+  /** The committed [[Reference]]; None when [[RefFile]] is missing,
+    * unparseable or carries no host figures.
+    */
+  def readReference(): Option[Reference] = try {
+    val root = readJson(RefFile)
     val queries = root.path("queries").properties.asScala
       .map(e => e.getKey -> e.getValue.asDouble).toMap
-    Some((queries, root.path("stream_events_per_sec").asDouble(-1.0)))
+    Some(Reference(root.path("nproc").asInt(-1), root.path("calib_ms").asDouble(-1.0),
+      root.path("sf").asText(""), root.path("cores").asInt(-1), queries))
+      .filter(r => r.nproc > 0 && r.calibMs > 0)
   } catch { case _: Throwable => None }
 }

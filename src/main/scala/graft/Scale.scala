@@ -220,7 +220,7 @@ object BenchScale {
 
   /** A measured sweep and the session it ran in. */
   final case class Sweep(spark: SparkSession, base: String, scaled: String, reps: Int,
-      bound: Double, streamRate: Double, adj: Adjudication)
+      bound: Double, window: String, streamRate: Double, adj: Adjudication)
 
   /** Times `queries` on the SPARK_GRAFT_SF_DIR fixture and on the
     * `reps`-times corpus (args: scaled dir, reps; generated when missing),
@@ -232,11 +232,14 @@ object BenchScale {
     val base = Graft.fixtureDir("/root/testdata/sf0.1")
     val scaled = if (args.length > 0) args(0) else s"target/scale$defaultReps"
     val reps = if (args.length > 1) args(1).toInt else defaultReps
+    // graded like Bench's window: the host loop, before the session exists
+    val window = Measure.grade(Measure.windowRatio(Measure.readReference(),
+      Measure.median(Measure.calibRuns(Measure.nproc))))
     val spark = Measure.session(appName, 32)
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(scaled, "lineitem.parquet")))
       ScaleGen.generate(spark, base, scaled, reps)
     for (dir <- Seq(base, scaled)) Measure.prepare(spark, dir, stage)
-    val streamRate = Measure.median(Measure.canaryRuns(spark, base))
+    val streamRate = Measure.median(Measure.streamRuns(spark, base))
     // base first (its cold-codegen cost mirrors the per-round sweep), then
     // scaled — the second run reuses the compiled plans, so the factor
     // isolates DATA growth, not compilation
@@ -257,7 +260,7 @@ object BenchScale {
       System.err.println(s"[benchscale] WARNING: worst-factor adjudication " +
         s"EXHAUSTED its ${adj.extra}-requery cap without settling — the headline " +
         "worst factor may be an unconfirmed first-pass measurement")
-    Sweep(spark, base, scaled, reps, bound(reps), streamRate, adj)
+    Sweep(spark, base, scaled, reps, bound(reps), window, streamRate, adj)
   }
 
   /** Writes `fields` to the repo-rooted `artifact` and prints its head. */
@@ -268,7 +271,7 @@ object BenchScale {
   }
 
   def main(args: Array[String]): Unit = {
-    val Sweep(spark, base, scaled, reps, _, streamRate, adj) =
+    val Sweep(spark, base, scaled, reps, _, window, streamRate, adj) =
       sweep("graft-benchscale", args, 10, SparkEntry.allDefs, _ => FactorBound, Derived.stageAll)
     val rows = adj.rows
     def timeOne(n: String, dir: String): Double =
@@ -389,7 +392,7 @@ object BenchScale {
       "worst_factor" -> fixed(worst.fold(-1.0)(_.factor), 2),
       "worst_adjudication_settled" -> adj.settled, "worst_adjudication_requeries" -> adj.extra,
       "stream_events_per_sec" -> fixed(streamRate, 0),
-      "throttled" -> (streamRate > 0 && streamRate < 0.5 * Measure.CanaryRefEventsPerSec),
+      "window" -> window,
       "pair_census" -> census,
       "queries" -> obj(rows.map(r => r.name -> factorRow(r, "scaled_sec")): _*))
     spark.stop()

@@ -36,13 +36,13 @@ object JoinQueries extends QueryModule {
       .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
       .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
       .groupBy("n_name")
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
+      .agg(SharedExprs.sumCents("l_extendedprice * (1 - l_discount)").as("revenue"),
         count(lit(1)).as("n_items"))
       .orderBy("n_name")
   }
 
   private val revenueByNationSql =
-    """SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+    s"""SELECT n_name, ${SharedExprs.dSumCentsSql("l_extendedprice * (1 - l_discount)")} AS revenue,
       |  CAST(count(*) AS BIGINT) AS n_items
       |FROM lineitem
       |JOIN orders ON l_orderkey = o_orderkey
@@ -389,12 +389,12 @@ object JoinQueries extends QueryModule {
       .select("window_id", "o_orderkey", "o_totalprice").distinct()
       .groupBy("window_id")
       .agg(count(lit(1)).as("n_orders"),
-        round(sum("o_totalprice"), 2).as("total_price"))
+        SharedExprs.sumCents("o_totalprice").as("total_price"))
       .orderBy("window_id")
   }
 
   private val intervalOverlapSql =
-    """WITH windows AS (
+    s"""WITH windows AS (
       |  SELECT k AS window_id, 8760 + k*30 AS w_start, 8760 + k*30 + 14 AS w_end
       |  FROM (SELECT unnest(range(0, 60)) AS k)),
       |o AS (
@@ -403,7 +403,7 @@ object JoinQueries extends QueryModule {
       |    CAST(floor(epoch(o_orderdate)/86400) AS BIGINT) + o_orderkey % 7 + 1 AS o_end
       |  FROM orders)
       |SELECT window_id, CAST(count(*) AS BIGINT) AS n_orders,
-      |  round(sum(o_totalprice), 2) AS total_price
+      |  ${SharedExprs.dSumCentsSql("o_totalprice")} AS total_price
       |FROM windows w JOIN o ON o.o_start < w.w_end AND w.w_start < o.o_end
       |GROUP BY window_id ORDER BY window_id""".stripMargin
 
@@ -442,7 +442,7 @@ object JoinQueries extends QueryModule {
       org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(200000L, 0.01)
     s.sql(
       s"""SELECT l_returnflag, count(1) AS n_items,
-         |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+         |  ${SharedExprs.sumCentsSql("l_extendedprice * (1 - l_discount)")} AS revenue
          |FROM graft_bloom_lineitem
          |WHERE bloom_might_contain(
          |    (SELECT bloom_agg(o_orderkey, 200000L, ${numBits}L)
@@ -456,8 +456,8 @@ object JoinQueries extends QueryModule {
     bloomPrefilterPlan(s, dir)
 
   private val bloomPrefilterJoinSql =
-    """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_items,
-      |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+    s"""SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_items,
+      |  ${SharedExprs.dSumCentsSql("l_extendedprice * (1 - l_discount)")} AS revenue
       |FROM lineitem
       |WHERE l_orderkey IN (
       |  SELECT o_orderkey FROM orders JOIN customer ON o_custkey = c_custkey
@@ -484,12 +484,12 @@ object JoinQueries extends QueryModule {
       .groupBy(col("status").as("status_asof"))
       .agg(count(lit(1)).as("n_orders"),
         sum(col("version")).as("version_mass"),
-        round(sum("o_totalprice"), 2).as("total_price"))
+        SharedExprs.sumCents("o_totalprice").as("total_price"))
       .orderBy("status_asof")
   }
 
   private val pointInTimeJoinSql =
-    """WITH daily AS (
+    s"""WITH daily AS (
       |  SELECT o_custkey AS custkey, CAST(o_orderdate AS DATE) AS day,
       |    arg_max(o_orderstatus, o_orderkey) AS status
       |  FROM orders GROUP BY 1, 2
@@ -507,7 +507,7 @@ object JoinQueries extends QueryModule {
       |  FROM changes WINDOW w AS (PARTITION BY custkey ORDER BY day))
       |SELECT status AS status_asof, CAST(count(*) AS BIGINT) AS n_orders,
       |  CAST(sum(version) AS BIGINT) AS version_mass,
-      |  round(sum(o_totalprice), 2) AS total_price
+      |  ${SharedExprs.dSumCentsSql("o_totalprice")} AS total_price
       |FROM orders o JOIN hist h
       |  ON o.o_custkey = h.custkey
       | AND CAST(o.o_orderdate AS DATE) >= h.valid_from
@@ -533,19 +533,19 @@ object JoinQueries extends QueryModule {
     o.join(c, col("bucket_o") <=> col("bucket_c"))
       .groupBy(col("bucket_o").as("bucket"))
       .agg(count(lit(1)).as("n_orders"), max("n_cust").as("n_cust"),
-        round(sum("o_totalprice"), 2).as("total_price"))
+        SharedExprs.sumCents("o_totalprice").as("total_price"))
       .orderBy(col("bucket").asc_nulls_first)
   }
 
   private val nullSafeJoinSql =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT nullif(o_custkey % 50, 7) AS bucket_o, o_totalprice FROM orders),
       |c AS (
       |  SELECT nullif(c_custkey % 50, 7) AS bucket_c,
       |    CAST(count(*) AS BIGINT) AS n_cust
       |  FROM customer GROUP BY 1)
       |SELECT bucket_o AS bucket, CAST(count(*) AS BIGINT) AS n_orders,
-      |  max(n_cust) AS n_cust, round(sum(o_totalprice), 2) AS total_price
+      |  max(n_cust) AS n_cust, ${SharedExprs.dSumCentsSql("o_totalprice")} AS total_price
       |FROM o JOIN c ON bucket_o IS NOT DISTINCT FROM bucket_c
       |GROUP BY 1 ORDER BY 1 NULLS FIRST""".stripMargin
 
@@ -839,12 +839,12 @@ object JoinQueries extends QueryModule {
       .groupBy(col("cur_status"))
       .agg(count(lit(1)).as("n_orders"),
         sum("n_versions").as("version_mass"),
-        round(sum("o_totalprice"), 2).as("total_price"))
+        SharedExprs.sumCents("o_totalprice").as("total_price"))
       .orderBy("cur_status")
   }
 
   private val dimSnapshotLatestSql =
-    """WITH daily AS (
+    s"""WITH daily AS (
       |  SELECT o_custkey AS custkey, CAST(o_orderdate AS DATE) AS day,
       |    arg_max(o_orderstatus, o_orderkey) AS status
       |  FROM orders GROUP BY 1, 2
@@ -864,7 +864,7 @@ object JoinQueries extends QueryModule {
       |  FROM hist GROUP BY custkey)
       |SELECT cur_status, CAST(count(*) AS BIGINT) AS n_orders,
       |  CAST(sum(n_versions) AS BIGINT) AS version_mass,
-      |  round(sum(o_totalprice), 2) AS total_price
+      |  ${SharedExprs.dSumCentsSql("o_totalprice")} AS total_price
       |FROM orders JOIN latest ON o_custkey = custkey
       |GROUP BY 1 ORDER BY 1""".stripMargin
 

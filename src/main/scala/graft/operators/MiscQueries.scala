@@ -171,13 +171,13 @@ object MiscQueries extends QueryModule {
         col("l_orderkey") === col("o_orderkey") && fact("salt") === dim("salt"))
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_lines"),
-        round(sum("l_extendedprice"), 2).as("total_price"))
+        SharedExprs.sumCents("l_extendedprice").as("total_price"))
       .orderBy("o_orderpriority")
   }
 
   private val saltedJoinSql =
-    """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_lines,
-      |  round(sum(l_extendedprice), 2) AS total_price
+    s"""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_lines,
+      |  ${SharedExprs.dSumCentsSql("l_extendedprice")} AS total_price
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
 
@@ -295,12 +295,12 @@ object MiscQueries extends QueryModule {
         coalesce(col("u_price"), col("price")).as("price"),
         col("action"))
       .groupBy("status", "action")
-      .agg(count(lit(1)).as("n"), round(sum("price"), 2).as("total_price"))
+      .agg(count(lit(1)).as("n"), SharedExprs.sumCents("price").as("total_price"))
       .orderBy("status", "action")
   }
 
   private val mergeUpsertSql =
-    """WITH base AS (
+    s"""WITH base AS (
       |  SELECT o_orderkey, o_orderstatus AS status, o_totalprice AS price
       |  FROM orders WHERE o_orderkey % 10 <> 3
       |), updates AS (
@@ -313,7 +313,7 @@ object MiscQueries extends QueryModule {
       |         WHEN status IS NULL THEN 'insert' ELSE 'keep' END AS action
       |  FROM base FULL OUTER JOIN updates USING (o_orderkey))
       |SELECT status, action, CAST(count(*) AS BIGINT) AS n,
-      |  round(sum(price), 2) AS total_price
+      |  ${SharedExprs.dSumCentsSql("price")} AS total_price
       |FROM merged GROUP BY 1, 2 ORDER BY status, action""".stripMargin
 
   /** URL function family (`parse_url`): HOST / PATH / QUERY / named query
@@ -580,7 +580,7 @@ object MiscQueries extends QueryModule {
       .observe(obs,
         count(lit(1)).as("n_rows"),
         sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("n_returned"),
-        round(sum("l_extendedprice"), 2).as("price_mass"),
+        SharedExprs.sumCents("l_extendedprice").as("price_mass"),
         min("ship_day").as("first_ship_day"),
         max("ship_day").as("last_ship_day"))
       .write.format("noop").mode("overwrite").save()
@@ -594,9 +594,9 @@ object MiscQueries extends QueryModule {
   }
 
   private val observeMetricsSql =
-    """SELECT CAST(count(*) AS BIGINT) AS n_rows,
+    s"""SELECT CAST(count(*) AS BIGINT) AS n_rows,
       |  CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS n_returned,
-      |  round(sum(l_extendedprice), 2) AS price_mass,
+      |  ${SharedExprs.dSumCentsSql("l_extendedprice")} AS price_mass,
       |  min(strftime(l_shipdate, '%Y-%m-%d')) AS first_ship_day,
       |  max(strftime(l_shipdate, '%Y-%m-%d')) AS last_ship_day
       |FROM lineitem""".stripMargin

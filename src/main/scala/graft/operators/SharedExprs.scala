@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{expr, round}
+import org.apache.spark.sql.functions.{expr, round, sum}
 
 /** Cross-engine parity expressions shared by the operator modules. Each
   * Spark expression has a DuckDB twin whose value is bit-identical on the
@@ -26,6 +26,17 @@ object SharedExprs {
     * `round(x * 100) / 100` computes the oracle's value.
     */
   def roundCents(x: Column): Column = roundDigits(x, 2)
+
+  /** Cents of the exact integer-micros sum of the per-row double `e`: the
+    * oracle's [[dSumCentsSql]] in Spark.
+    */
+  def sumCents(e: String): Column = roundCents(sum(expr(microsSql(e))) / 1e6)
+
+  /** [[sumCents]] as Spark SQL text. */
+  def sumCentsSql(e: String): String = s"round(sum(${microsSql(e)}) / 1e6 * 100) / 100"
+
+  /** The DuckDB twin of [[sumCents]]. */
+  def dSumCentsSql(e: String): String = s"round(sum(${microsSql(e)}) / 1e6, 2)"
 
   /** DuckDB's round(DOUBLE, d), `std::round(x * 10^d) / 10^d`, in Spark;
     * see [[roundCents]].

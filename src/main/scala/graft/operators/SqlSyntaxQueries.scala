@@ -26,16 +26,16 @@ object SqlSyntaxQueries extends QueryModule {
     */
   private def pipeSyntax(s: SparkSession, dir: String): DataFrame =
     sql(s, dir,
-      """FROM lineitem
+      s"""FROM lineitem
         ||> WHERE l_shipdate >= TIMESTAMP'1995-01-01 00:00:00'
         ||> EXTEND l_extendedprice * (1 - l_discount) AS net
-        ||> AGGREGATE count(*) AS n_items, round(sum(net), 2) AS revenue
+        ||> AGGREGATE count(*) AS n_items, ${SharedExprs.sumCentsSql("net")} AS revenue
         |   GROUP BY l_returnflag
         ||> ORDER BY l_returnflag""".stripMargin)
 
   private val pipeSyntaxSql =
-    """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_items,
-      |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+    s"""SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_items,
+      |  ${SharedExprs.dSumCentsSql("l_extendedprice * (1 - l_discount)")} AS revenue
       |FROM lineitem WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
       |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
 

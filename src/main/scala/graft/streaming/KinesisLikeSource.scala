@@ -112,6 +112,35 @@ object KinesisLikeSource {
     }
   }
 
+  /** 0, then the byte offset just past each newline of `f`: the start of
+    * every newline-terminated line plus the end of the last one. The file
+    * is scanned in 64 KB chunks into a primitive array.
+    */
+  def lineIndex(f: java.io.File): Array[Long] = {
+    val in = new java.io.FileInputStream(f)
+    val buf = new Array[Byte](1 << 16)
+    var offs = new Array[Long](1024)
+    var n = 1
+    var base = 0L
+    try {
+      var len = in.read(buf)
+      while (len != -1) {
+        var i = 0
+        while (i < len) {
+          if (buf(i) == '\n') {
+            if (n == offs.length) offs = java.util.Arrays.copyOf(offs, n * 2)
+            offs(n) = base + i + 1
+            n += 1
+          }
+          i += 1
+        }
+        base += len
+        len = in.read(buf)
+      }
+    } finally in.close()
+    java.util.Arrays.copyOf(offs, n)
+  }
+
   def shardIdOf(fileName: String): String =
     "shardId-" + fileName.stripPrefix("shard-").stripSuffix(".txt").reverse
       .padTo(12, '0').reverse
@@ -175,20 +204,8 @@ class KinesisLikeMicroBatch(path: String, maxPerBatch: Long, streamName: String)
     * fixture's scale the full index fits trivially; a production reader
     * would index every Nth sequence number and scan the tail.)
     */
-  private lazy val shardIndex: Map[String, Array[Long]] = files.map { f =>
-    val in = new java.io.BufferedInputStream(new java.io.FileInputStream(f), 1 << 16)
-    val offs = scala.collection.mutable.ArrayBuffer(0L)
-    try {
-      var pos = 0L
-      var b = in.read()
-      while (b != -1) {
-        pos += 1
-        if (b == '\n') offs += pos
-        b = in.read()
-      }
-    } finally in.close()
-    KinesisLikeSource.shardIdOf(f.getName) -> offs.toArray
-  }.toMap
+  private lazy val shardIndex: Map[String, Array[Long]] =
+    files.map(f => KinesisLikeSource.shardIdOf(f.getName) -> KinesisLikeSource.lineIndex(f)).toMap
 
   /** Total records per shard (the shard's end sequence number). */
   private lazy val shardEnds: Map[String, Long] =

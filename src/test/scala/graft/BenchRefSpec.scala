@@ -2,50 +2,51 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards on the committed bench-reference artifacts (VERDICT r14
-  * "what's missing" #3): the cumulative-drift channel is only as good as
-  * the origin file's coverage, so every query priced in the current
-  * reference must carry an origin entry — a refresh appends first-seen
-  * origins for new queries (Bench.scala, `originAppended`) and this spec
-  * fails if that append is ever skipped or the origin file regresses to a
-  * subset.
+/** The bench's one regression channel, as pure functions of sweep figures,
+  * a reference and a solo re-measure callback, and the committed same-host
+  * reference it reads.
   */
 class BenchRefSpec extends AnyFunSuite {
 
-  private def queriesOf(path: String): Map[String, Double] = {
-    val p = java.nio.file.Paths.get(path)
-    assert(java.nio.file.Files.exists(p), s"$path missing")
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(p.toFile)
-    val q = root.path("queries")
-    assert(q.isObject, s"$path has no queries object")
-    val it = q.fields()
-    val out = scala.collection.mutable.Map[String, Double]()
-    while (it.hasNext) { val e = it.next(); out(e.getKey) = e.getValue.asDouble() }
-    out.toMap
+  test("a flag needs a ratio over 1.5 AND more than 0.3 s of growth") {
+    assert(Bench.flag(1.6, 1.0, 1.0).contains(1.6))
+    assert(Bench.flag(1.4, 1.0, 1.0).isEmpty, "ratio 1.4")
+    assert(Bench.flag(0.4, 0.2, 1.0).isEmpty, "ratio 2 but only 0.2 s slower")
+    assert(Bench.flag(0.6, 0.2, 1.0).isDefined)
+    assert(Bench.flag(-1.0, 1.0, 1.0).isEmpty, "a failed run is not a regression")
+    assert(Bench.flag(2.0, -1.0, 1.0).isEmpty, "no reference figure")
   }
 
-  test("bench_ref_origin covers every query in bench_ref (drift channel not blind)") {
-    val ref = queriesOf("bench_ref.json")
-    val origin = queriesOf("bench_ref_origin.json")
-    val blind = ref.keySet -- origin.keySet
-    assert(blind.isEmpty,
-      s"queries in bench_ref.json with no origin entry (cumulative drift blind): " +
-        blind.toSeq.sorted.mkString(", "))
+  test("the window ratio scales the expectation down, clamped at 1.0") {
+    // a window at 0.5× host speed halves the ratio: 2.0 s vs 1.0 s reads 1.0
+    assert(Bench.flag(2.0, 1.0, 0.5).isEmpty)
+    assert(Bench.flag(4.0, 1.0, 0.5).contains(2.0))
+    // a faster window never masks a regression
+    assert(Bench.flag(1.6, 1.0, 2.0).contains(1.6))
+    // no same-host reference (ratio −1): unnormalized
+    assert(Bench.flag(1.6, 1.0, -1.0).contains(1.6))
   }
 
-  test("origin entries are positive and parseable by Bench's regex reader") {
-    // Bench appends first-seen origins by splicing them into the text of
-    // the queries object, found with a flat regex: a nested object or
-    // non-numeric value inside it would make the splice land mid-object.
-    // Pin the shape the splice assumes.
-    val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("bench_ref_origin.json")), "UTF-8")
-    val qObj = """"queries":\{([^}]*)\}""".r
-      .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-    val parsed = """"([^"]+)":(-?[0-9.]+)""".r.findAllMatchIn(qObj).size
-    val jackson = queriesOf("bench_ref_origin.json")
-    assert(parsed == jackson.size,
-      s"regex reader sees $parsed entries, Jackson sees ${jackson.size}")
-    assert(jackson.values.forall(_ > 0), "non-positive origin figure")
+  test("a flagged query is re-measured solo, twice only when the first solo confirms") {
+    val ref = Map("slow" -> 1.0, "noise" -> 1.0, "fine" -> 1.0)
+    val sweep = Seq("slow" -> 3.0, "noise" -> 2.5, "fine" -> 1.1, "new" -> 9.0)
+    val solos = Map("slow" -> Iterator(2.8, 2.6), "noise" -> Iterator(1.05))
+    val calls = Seq.newBuilder[String]
+    val (rechecked, confirmed) = Bench.regressions(sweep, ref, 1.0, { n =>
+      calls += n
+      solos(n).next()
+    })
+    assert(calls.result() == Seq("slow", "slow", "noise"), "worst first; noise once")
+    assert(rechecked == Seq(Bench.Recheck("slow", 1.0, 3.0, 2.6),
+      Bench.Recheck("noise", 1.0, 2.5, 1.05)))
+    assert(confirmed == Seq(("slow", 1.0, 2.6, 2.6)))
+  }
+
+  test("the committed reference carries its host and only successful query times") {
+    val ref = Measure.readReference().getOrElse(fail(s"${Measure.RefFile} has no host figures"))
+    assert(ref.nproc > 0 && ref.calibMs > 0 && ref.cores > 0 && ref.sf.nonEmpty)
+    assert(ref.queries.size == SparkEntry.allDefs.size)
+    val failed = ref.queries.filter(_._2 <= 0).keys
+    assert(failed.isEmpty, s"non-positive reference figures: ${failed.mkString(", ")}")
   }
 }

@@ -5,9 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import BenchScale.Row
 import Measure.{fixed, obj}
 
-/** The shared measurement core without Spark: the run statistics, the JSON
-  * writer's escaping and number format, and the scale sweeps' adjudication
-  * as a pure function of first-pass rows and a re-measure callback.
+/** The shared measurement core without Spark: the run statistics, the
+  * host loop and window grade, the JSON writer's escaping and number
+  * format, and the scale sweeps' adjudication as a pure function of
+  * first-pass rows and a re-measure callback.
   */
 class MeasureSpec extends AnyFunSuite {
 
@@ -26,6 +27,25 @@ class MeasureSpec extends AnyFunSuite {
     assert(text.endsWith(""""sec":2.000,"rate":95000,"ratio":1.001,"runs":[-1.000]}"""))
     val back = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
     assert(back.path(key).asText() == value)
+  }
+
+  test("the host loop and the stream figure each discard their warm run") {
+    val passes = new java.util.concurrent.atomic.AtomicInteger
+    val calib = Measure.calibRuns(2, _ => passes.incrementAndGet())
+    assert(calib.size == 9 && calib.forall(_ > 0))
+    assert(passes.get == 2 * 10, "two threads, one warm and nine timed runs")
+    var drains = 0
+    val rates = Measure.eventRates(1000L) { drains += 1; if (drains == 1) sys.error("warm") }
+    assert(drains == 4 && rates.size == 3 && rates.forall(_ > 0))
+  }
+
+  test("the window grade: throttled below 0.5, degraded below 0.85, unrated without a reference") {
+    assert(Seq(0.3, 0.5, 0.84, 0.85, 1.2, -1.0).map(Measure.grade) ==
+      Seq("throttled", "degraded", "degraded", "ok", "ok", "unrated"))
+    val ref = Measure.Reference(Measure.nproc, 100.0, "sf", 4, Map.empty)
+    assert(Measure.windowRatio(Some(ref), 200.0) == 0.5)
+    assert(Measure.windowRatio(Some(ref.copy(nproc = Measure.nproc + 1)), 200.0) == -1.0)
+    assert(Measure.windowRatio(None, 200.0) == -1.0)
   }
 
   private val Bound = 12.0

@@ -228,6 +228,25 @@ class NativeSourceSpec extends SparkSuite {
     assert(got == want, s"got=$got want=$want")
   }
 
+  test("the chunked seek index equals a byte-by-byte index") {
+    // the reference: an offset after every newline byte, scanned one by one
+    def byteIndex(f: java.io.File): Seq[Long] = {
+      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+      0L +: bytes.indices.filter(bytes(_) == '\n').map(_ + 1L)
+    }
+    val stage = java.nio.file.Files.createTempDirectory("graft_kin_index_")
+    val rec = (i: Int) => s"${1000000000L + i}\tpk$i\tpayload-$i-ünï€😀\n"
+    val big = (0 until 5000).map(rec).mkString // spans several 64 KB chunks
+    val cases = Seq("empty" -> "", "terminated" -> (rec(0) + rec(1)),
+      "unterminated" -> (rec(0) + rec(1).take(9)), "utf8" -> big, "utf8_tail" -> (big + "ü€"))
+    for ((name, text) <- cases) {
+      val f = stage.resolve(s"$name.txt")
+      java.nio.file.Files.write(f, text.getBytes("UTF-8"))
+      assert(streaming.source.KinesisLikeSource.lineIndex(f.toFile).toSeq == byteIndex(f.toFile),
+        name)
+    }
+  }
+
   test("an unterminated final line is not a record until its newline lands") {
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     import streaming.source.{KinesisLikeMicroBatch, KinesisShardReaderFactory}
