@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.hadoop.mapred.JobConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.graft.GraftDatasetBridge
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import scala.jdk.CollectionConverters._
 
 /** Session factory for the engine.
   *
@@ -14,7 +17,9 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * total cores and AQE left on to coalesce / skew-split at runtime. The
   * `file` scheme is bound to [[LocalFs]] for both Hadoop APIs, so local
   * checkpoint, state-store and sink writes start no `chmod`/`readlink`
-  * process.
+  * process. On a `local` master the session's Hadoop configuration also
+  * drops Hadoop's bundled defaults ([[trimBundledDefaults]]), so tasks stop
+  * shipping them.
   */
 object Graft {
   /** RAM-backed local scratch (optimization r17, guide §6 I/O layout):
@@ -91,8 +96,57 @@ object Graft {
     fastLocalDir().foreach(d => builder.config("spark.local.dir", d))
     val spark = builder.getOrCreate()
     LocalFs.evictStale(spark.sessionState.newHadoopConf())
+    if (master == "local" || master.startsWith("local[")) trimBundledDefaults(spark)
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  private val BundledDefaults = Set("core-default.xml", "mapred-default.xml", "yarn-default.xml")
+  private val SchemeBinding = """fs\.(?:AbstractFileSystem\.)?[^.]+\.impl""".r
+  /** The one bundled default a local path reads whose compiled-in
+    * fallback differs: with output compression on and no codec set,
+    * Spark's text writers fall back to gzip where `mapred-default.xml`
+    * says `DefaultCodec`.
+    */
+  private val KeptDefault = "mapreduce.output.fileoutputformat.compress.codec"
+
+  /** Drop every Hadoop configuration entry whose only sources are Hadoop's
+    * bundled `core-`, `mapred-` and `yarn-default.xml`, from both the
+    * context's configuration and the shared state's copy that
+    * `newHadoopConf()` starts from. Those are 1,070 of a `local[4]`
+    * session's 1,097 entries (112 KB serialized), and Spark ships the
+    * configuration several times per micro-batch: the file sink's job
+    * description and its stats tracker each carry one into every sink
+    * task, and the state store broadcasts one per batch. Each copy
+    * deserializes every entry's source list through its own
+    * `GZIPInputStream`. Trimmed, `newHadoopConf()` holds 50 entries
+    * (6.9 KB), which deserialize in about 0.8 ms instead of 11 ms.
+    *
+    * A dropped key reads its compiled-in default instead. For the keys
+    * the local paths read (the local `FileSystem` and `FileContext`,
+    * `FileOutputCommitter`, Parquet, the codec factory) the two agree,
+    * except [[KeptDefault]]. The scheme bindings stay
+    * (`fs.<scheme>.impl`, `fs.AbstractFileSystem.<scheme>.impl`):
+    * `FileContext` has no compiled-in fallback for them. Entries set by
+    * Spark, `spark.hadoop.*`, SQL confs, [[LocalFs.confs]] or a
+    * `*-site.xml` all stay.
+    *
+    * `JobConf`'s static initializer adds the `mapred` and `yarn` defaults
+    * and reloads every default-loading configuration, which would bring the
+    * dropped entries back, so it runs first. Non-local masters are left as
+    * they are.
+    */
+  private def trimBundledDefaults(spark: SparkSession): Unit = {
+    new JobConf(false)
+    Seq(spark.sparkContext.hadoopConfiguration, GraftDatasetBridge.sharedHadoopConf(spark)).foreach {
+      conf =>
+        val drop = conf.asScala.map(_.getKey).filter { k =>
+          val sources = conf.getPropertySources(k)
+          sources != null && sources.forall(BundledDefaults) &&
+            !SchemeBinding.matches(k) && k != KeptDefault
+        }
+        drop.foreach(conf.unset)
+    }
   }
 
   /** The fixture directory a main runs on: `SPARK_GRAFT_SF_DIR`, else `default`. */

@@ -96,7 +96,8 @@ object Measure {
     * `pass` over its own 8 MB array, nine timed runs after a warm one. It
     * runs no program code, so it moves only with the host: its clock and
     * the cores other tenants leave free. perfbench's `calibrate()` times
-    * the same loop.
+    * the same loop with a quarter of the passes; four times as long here
+    * (about 120 ms a run on 4 cores), one scheduler stall moves a run less.
     */
   def calibRuns(threads: Int, pass: Array[Long] => Unit = spin): Seq[Double] = {
     val arrays = Seq.fill(threads)(new Array[Long](1 << 20))
@@ -109,11 +110,11 @@ object Measure {
     }
   }
 
-  /** 16 passes of a dependent multiply-add over `a`. */
+  /** 64 passes of a dependent multiply-add over `a`. */
   private def spin(a: Array[Long]): Unit = {
     var x = 1L
     var pass = 0
-    while (pass < 16) {
+    while (pass < 64) {
       var i = 0
       while (i < a.length) {
         x = x * 6364136223846793005L + a(i)

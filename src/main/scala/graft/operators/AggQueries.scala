@@ -91,13 +91,13 @@ object AggQueries extends QueryModule {
   def rollupOrders(s: SparkSession, dir: String): DataFrame =
     Tables.orders(s, dir)
       .rollup("o_orderstatus", "o_orderpriority")
-      .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"),
+      .agg(count(lit(1)).as("n"), SharedExprs.sumCents("o_totalprice").as("total"),
         grouping_id().as("gid"))
       .orderBy(asc_nulls_first("o_orderstatus"), asc_nulls_first("o_orderpriority"))
 
   private val rollupOrdersSql =
-    """SELECT o_orderstatus, o_orderpriority, CAST(count(*) AS BIGINT) AS n,
-      |  round(sum(o_totalprice), 2) AS total,
+    s"""SELECT o_orderstatus, o_orderpriority, CAST(count(*) AS BIGINT) AS n,
+      |  ${SharedExprs.dSumCentsSql("o_totalprice")} AS total,
       |  CAST(grouping_id(o_orderstatus, o_orderpriority) AS BIGINT) AS gid
       |FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
       |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin
@@ -987,7 +987,7 @@ object AggQueries extends QueryModule {
       .withColumn("rk", row_number().over(w))
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n_customers"),
-        round(sum("spend"), 2).as("total_spend"),
+        SharedExprs.sumCents("spend").as("total_spend"),
         round(lit(2.0) * sum(col("rk") * col("spend"))
             / (count(lit(1)) * sum("spend"))
           - (count(lit(1)) + 1).cast("double") / count(lit(1)), 4).as("gini"))
@@ -995,7 +995,7 @@ object AggQueries extends QueryModule {
   }
 
   private val giniSpendSql =
-    """WITH spend AS (
+    s"""WITH spend AS (
       |  SELECT o_custkey, sum(o_totalprice) AS spend
       |  FROM orders GROUP BY 1
       |), ranked AS (
@@ -1004,7 +1004,7 @@ object AggQueries extends QueryModule {
       |      ORDER BY spend ASC, o_custkey ASC) AS rk
       |  FROM spend JOIN customer ON o_custkey = c_custkey)
       |SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_customers,
-      |  round(sum(spend), 2) AS total_spend,
+      |  ${SharedExprs.dSumCentsSql("spend")} AS total_spend,
       |  round(2.0 * sum(rk * spend) / (count(*) * sum(spend))
       |    - CAST(count(*) + 1 AS DOUBLE) / count(*), 4) AS gini
       |FROM ranked GROUP BY 1 ORDER BY c_mktsegment""".stripMargin

@@ -156,12 +156,12 @@ object SetOpQueries extends QueryModule {
     val b = Tables.orders(s, dir).filter(col("o_orderstatus") === "P")
       .select(round(col("o_totalprice"), 2).as("spend"), col("o_custkey").as("custkey"))
     a.unionByName(b).groupBy("custkey")
-      .agg(round(sum("spend"), 2).as("total_spend"), count(lit(1)).as("n"))
+      .agg(SharedExprs.sumCents("spend").as("total_spend"), count(lit(1)).as("n"))
       .orderBy("custkey")
   }
 
   private val unionByNameSpendSql =
-    """SELECT custkey, round(sum(spend), 2) AS total_spend, CAST(count(*) AS BIGINT) AS n
+    s"""SELECT custkey, ${SharedExprs.dSumCentsSql("spend")} AS total_spend, CAST(count(*) AS BIGINT) AS n
       |FROM (
       |  SELECT o_custkey AS custkey, round(o_totalprice, 2) AS spend FROM orders
       |  WHERE o_orderstatus = 'F'

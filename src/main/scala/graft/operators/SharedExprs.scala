@@ -32,11 +32,15 @@ object SharedExprs {
     */
   def sumCents(e: String): Column = roundCents(sum(expr(microsSql(e))) / 1e6)
 
-  /** [[sumCents]] as Spark SQL text. */
-  def sumCentsSql(e: String): String = s"round(sum(${microsSql(e)}) / 1e6 * 100) / 100"
+  /** [[sumCents]] as Spark SQL text; `over` (` OVER (...)`, with its
+    * leading space) makes it a window sum.
+    */
+  def sumCentsSql(e: String, over: String = ""): String =
+    s"round(sum(${microsSql(e)})$over / 1e6 * 100) / 100"
 
-  /** The DuckDB twin of [[sumCents]]. */
-  def dSumCentsSql(e: String): String = s"round(sum(${microsSql(e)}) / 1e6, 2)"
+  /** The DuckDB twin of [[sumCentsSql]]. */
+  def dSumCentsSql(e: String, over: String = ""): String =
+    s"round(sum(${microsSql(e)})$over / 1e6, 2)"
 
   /** DuckDB's round(DOUBLE, d), `std::round(x * 10^d) / 10^d`, in Spark;
     * see [[roundCents]].

@@ -116,18 +116,18 @@ object SqlSyntaxQueries extends QueryModule {
             |RETURNS TABLE(c_custkey BIGINT, c_acctbal DOUBLE)
             |RETURN SELECT c_custkey, c_acctbal FROM customer
             |       WHERE c_nationkey = nk""".stripMargin)
-    s.sql("""SELECT acct_tier(c_acctbal) AS tier,
+    s.sql(s"""SELECT acct_tier(c_acctbal) AS tier,
             |  CAST(count(*) AS BIGINT) AS n_customers,
-            |  round(sum(c_acctbal), 2) AS tier_balance
+            |  ${SharedExprs.sumCentsSql("c_acctbal")} AS tier_balance
             |FROM nation_customers(7)
             |GROUP BY tier ORDER BY tier""".stripMargin)
   }
 
   private val sqlFunctionsSql =
-    """SELECT CASE WHEN c_acctbal < 0 THEN 'debt'
+    s"""SELECT CASE WHEN c_acctbal < 0 THEN 'debt'
       |            WHEN c_acctbal < 5000 THEN 'mid' ELSE 'prime' END AS tier,
       |  CAST(count(*) AS BIGINT) AS n_customers,
-      |  round(sum(c_acctbal), 2) AS tier_balance
+      |  ${SharedExprs.dSumCentsSql("c_acctbal")} AS tier_balance
       |FROM customer WHERE c_nationkey = 7
       |GROUP BY tier ORDER BY tier""".stripMargin
 
@@ -142,16 +142,16 @@ object SqlSyntaxQueries extends QueryModule {
     s.sql("DECLARE OR REPLACE VARIABLE status_of_interest STRING")
     s.sql("SET VARIABLE min_price = 150000.0")
     s.sql("SET VARIABLE status_of_interest = 'O'")
-    s.sql("""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
-            |  round(sum(o_totalprice), 2) AS total_price
+    s.sql(s"""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
+            |  ${SharedExprs.sumCentsSql("o_totalprice")} AS total_price
             |FROM orders
             |WHERE o_totalprice >= min_price AND o_orderstatus = status_of_interest
             |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
   }
 
   private val sessionVariablesSql =
-    """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
-      |  round(sum(o_totalprice), 2) AS total_price
+    s"""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
+      |  ${SharedExprs.dSumCentsSql("o_totalprice")} AS total_price
       |FROM orders
       |WHERE o_totalprice >= 150000.0 AND o_orderstatus = 'O'
       |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
@@ -169,16 +169,16 @@ object SqlSyntaxQueries extends QueryModule {
     s.sql("DECLARE OR REPLACE VARIABLE tpl_key STRING DEFAULT 'o_orderstatus'")
     s.sql("DECLARE OR REPLACE VARIABLE tpl_measure STRING DEFAULT 'o_totalprice'")
     s.sql(
-      """SELECT IDENTIFIER(tpl_key) AS grp,
+      s"""SELECT IDENTIFIER(tpl_key) AS grp,
         |  CAST(count(*) AS BIGINT) AS n,
-        |  round(sum(IDENTIFIER(tpl_measure)), 2) AS total
+        |  ${SharedExprs.sumCentsSql("IDENTIFIER(tpl_measure)")} AS total
         |FROM IDENTIFIER(tpl_table)
         |GROUP BY ALL ORDER BY ALL""".stripMargin)
   }
 
   private val identifierTemplatingSql =
-    """SELECT o_orderstatus AS grp, CAST(count(*) AS BIGINT) AS n,
-      |  round(sum(o_totalprice), 2) AS total
+    s"""SELECT o_orderstatus AS grp, CAST(count(*) AS BIGINT) AS n,
+      |  ${SharedExprs.dSumCentsSql("o_totalprice")} AS total
       |FROM orders GROUP BY 1 ORDER BY 1, 2, 3""".stripMargin
 
   /** GROUP BY ALL (Spark 3.4+ / DuckDB): the grouping key is inferred as
@@ -263,8 +263,8 @@ object SqlSyntaxQueries extends QueryModule {
   private def parameterMarkers(s: SparkSession, dir: String): DataFrame = {
     Tables.registerViews(s, dir)
     s.sql(
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
-        |  round(sum(o_totalprice), 2) AS total
+      s"""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
+        |  ${SharedExprs.sumCentsSql("o_totalprice")} AS total
         |FROM orders
         |WHERE o_orderdate >= CAST(:lo AS TIMESTAMP)
         |  AND o_orderdate < CAST(:hi AS TIMESTAMP)
@@ -274,8 +274,8 @@ object SqlSyntaxQueries extends QueryModule {
   }
 
   private val parameterMarkersSql =
-    """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
-      |  round(sum(o_totalprice), 2) AS total
+    s"""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
+      |  ${SharedExprs.dSumCentsSql("o_totalprice")} AS total
       |FROM orders
       |WHERE o_orderdate >= CAST('1995-01-01' AS TIMESTAMP)
       |  AND o_orderdate < CAST('1996-01-01' AS TIMESTAMP)
@@ -294,17 +294,17 @@ object SqlSyntaxQueries extends QueryModule {
     s.sql("DECLARE OR REPLACE VARIABLE seg STRING")
     s.sql("SET VAR seg = 'BUILDING'")
     s.sql(
-      """EXECUTE IMMEDIATE
+      s"""EXECUTE IMMEDIATE
         |  'SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n_customers,
-        |     round(sum(c_acctbal), 2) AS total_balance
+        |     ${SharedExprs.sumCentsSql("c_acctbal")} AS total_balance
         |   FROM customer WHERE c_mktsegment = ?
         |   GROUP BY c_nationkey ORDER BY c_nationkey'
         |  USING seg""".stripMargin)
   }
 
   private val execImmediateSql =
-    """SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n_customers,
-      |  round(sum(c_acctbal), 2) AS total_balance
+    s"""SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n_customers,
+      |  ${SharedExprs.dSumCentsSql("c_acctbal")} AS total_balance
       |FROM customer WHERE c_mktsegment = 'BUILDING'
       |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin
 

@@ -18,25 +18,28 @@ case class SpendStats(n: Long, cents: Long, min_cents: Long, max_cents: Long)
   */
 object TypedQueries extends QueryModule {
 
-  /** filter → map → groupByKey → reduceGroups, fully typed. */
+  /** filter → map → groupByKey → reduceGroups, fully typed. The total is
+    * summed as integer micros ([[SharedExprs.microsSql]]'s rounding, on
+    * the JVM), so it does not depend on the order of the reduction.
+    */
   def typedPipeline(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.orders(s, dir)
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
       .as[OrderRow]
       .filter(_.o_totalprice > 100000)
-      .map(o => (o.o_orderstatus, o.o_totalprice * 0.9, 1L))
+      .map(o => (o.o_orderstatus, math.round(o.o_totalprice * 0.9 * 1e6), 1L))
       .groupByKey(_._1)
       .reduceGroups((a, b) => (a._1, a._2 + b._2, a._3 + b._3))
       .map { case (status, (_, total, n)) => (status, total, n) }
-      .toDF("status", "discounted_total", "n")
-      .select(col("status"), round(col("discounted_total"), 2).as("discounted_total"), col("n"))
+      .toDF("status", "micros", "n")
+      .select(col("status"), SharedExprs.roundCents(col("micros") / 1e6).as("discounted_total"), col("n"))
       .orderBy("status")
   }
 
   private val typedPipelineSql =
-    """SELECT o_orderstatus AS status,
-      |  round(sum(o_totalprice * 0.9), 2) AS discounted_total,
+    s"""SELECT o_orderstatus AS status,
+      |  ${SharedExprs.dSumCentsSql("o_totalprice * 0.9")} AS discounted_total,
       |  CAST(count(*) AS BIGINT) AS n
       |FROM orders WHERE o_totalprice > 100000
       |GROUP BY o_orderstatus ORDER BY status""".stripMargin

@@ -103,19 +103,20 @@ object WindowQueries extends QueryModule {
     */
   def rangeTrailingSpend(s: SparkSession, dir: String): DataFrame = {
     Tables.orders(s, dir).createOrReplaceTempView("orders_w")
-    s.sql("""SELECT o_custkey, o_orderkey,
+    s.sql(s"""SELECT o_custkey, o_orderkey,
         |  date_format(o_orderdate, 'yyyy-MM-dd') AS order_date,
-        |  round(sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate
-        |    RANGE BETWEEN INTERVAL 90 DAYS PRECEDING AND CURRENT ROW), 2) AS trailing_90d_spend
+        |  ${SharedExprs.sumCentsSql("o_totalprice", trailing90d)} AS trailing_90d_spend
         |FROM orders_w""".stripMargin)
       .orderBy("o_custkey", "o_orderkey")
   }
 
+  private val trailing90d = """ OVER (PARTITION BY o_custkey ORDER BY o_orderdate
+      |    RANGE BETWEEN INTERVAL 90 DAYS PRECEDING AND CURRENT ROW)""".stripMargin
+
   private val rangeTrailingSpendSql =
-    """SELECT o_custkey, o_orderkey,
+    s"""SELECT o_custkey, o_orderkey,
       |  strftime(o_orderdate, '%Y-%m-%d') AS order_date,
-      |  round(sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate
-      |    RANGE BETWEEN INTERVAL 90 DAYS PRECEDING AND CURRENT ROW), 2) AS trailing_90d_spend
+      |  ${SharedExprs.dSumCentsSql("o_totalprice", trailing90d)} AS trailing_90d_spend
       |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin
 
   /** Same top-3-per-customer as win_rank_top_orders, but through the native
@@ -726,7 +727,7 @@ object WindowQueries extends QueryModule {
     val weekly = Tables.orders(s, dir)
       .groupBy(expr("CAST(extract(YEAROFWEEK FROM o_orderdate) AS INT)").as("iso_year"),
         expr("CAST(extract(WEEK FROM o_orderdate) AS INT)").as("iso_week"))
-      .agg(round(sum("o_totalprice"), 2).as("revenue"),
+      .agg(SharedExprs.sumCents("o_totalprice").as("revenue"),
         count(lit(1)).as("n_orders"))
     val w = Window.orderBy("iso_year", "iso_week")
     weekly
@@ -741,10 +742,10 @@ object WindowQueries extends QueryModule {
   }
 
   private val periodOverPeriodSql =
-    """WITH weekly AS (
+    s"""WITH weekly AS (
       |  SELECT CAST(extract(ISOYEAR FROM o_orderdate) AS INT) AS iso_year,
       |    CAST(extract(WEEK FROM o_orderdate) AS INT) AS iso_week,
-      |    round(sum(o_totalprice), 2) AS revenue,
+      |    ${SharedExprs.dSumCentsSql("o_totalprice")} AS revenue,
       |    CAST(count(*) AS BIGINT) AS n_orders
       |  FROM orders GROUP BY 1, 2)
       |SELECT iso_year, iso_week, revenue, n_orders,

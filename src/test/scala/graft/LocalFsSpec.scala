@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths, Path => JPath}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.mapred.JobConf
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, when}
 import org.apache.spark.sql.streaming.Trigger
@@ -15,6 +16,9 @@ import scala.jdk.CollectionConverters._
   * status as Hadoop's own local filesystem, no child process, served to
   * both Hadoop APIs by [[Graft.session]], and a checkpointed stream that
   * lays out and resumes its checkpoint exactly as under the default binding.
+  * The local session's Hadoop configuration holds none of Hadoop's bundled
+  * defaults beyond the scheme bindings, before and after a stream and a
+  * batch write, and the checkpoint and sink come out as with the defaults.
   */
 class LocalFsSpec extends SparkSuite {
 
@@ -92,6 +96,51 @@ class LocalFsSpec extends SparkSuite {
     assert(FileContext.getLocalFSFileContext(conf).getDefaultFileSystem.isInstanceOf[LocalFs.Fs])
   }
 
+  private val Bundled = Set("core-default.xml", "mapred-default.xml", "yarn-default.xml")
+  private def bundledOnly(c: Configuration, k: String): Boolean =
+    Option(c.getPropertySources(k)).exists(_.forall(Bundled))
+  private def entries(c: Configuration): Map[String, String] =
+    c.asScala.map(e => e.getKey -> e.getValue).toMap
+  /** Every entry a default-loading configuration takes from the bundled files. */
+  private lazy val BundledEntries: Map[String, String] = {
+    val c = new JobConf()
+    entries(c).filter { case (k, _) => bundledOnly(c, k) }
+  }
+  /** The bundled defaults a trimmed configuration keeps: the scheme
+    * bindings and the output codec, whose compiled-in fallback differs.
+    */
+  private def keptDefault(k: String): Boolean =
+    """fs\.(AbstractFileSystem\.)?[^.]+\.impl""".r.matches(k) ||
+      k == "mapreduce.output.fileoutputformat.compress.codec"
+
+  private def assertTrimmed(conf: Configuration): Unit = {
+    val left = entries(conf).keySet.filter(bundledOnly(conf, _))
+    assert(left.forall(keptDefault), s"bundled defaults left: ${left.filterNot(keptDefault).take(5)}")
+    val missing = BundledEntries.keySet.filter(keptDefault).filter(conf.getRaw(_) == null)
+    assert(missing.isEmpty, s"kept defaults dropped: $missing")
+    assert(conf.size < 100, s"${conf.size} entries")
+  }
+
+  test("a local session's Hadoop configuration drops the bundled defaults and keeps every other entry") {
+    assert(BundledEntries.size > 1000)
+    val conf = Graft.session("local[4]", "graft-test").sessionState.newHadoopConf()
+    assertTrimmed(conf)
+    assertTrimmed(spark.sparkContext.hadoopConfiguration)
+    // Whatever Spark, spark.hadoop.*, SQL confs and LocalFs set, replayed over the
+    // full defaults: every resulting entry not only from the bundled files is
+    // present with its value. `unset` also drops a key's deprecated aliases, so
+    // this holds only if no dropped key is an alias of a kept one.
+    val expected = new JobConf()
+    val set = entries(conf) ++ spark.conf.getAll ++ spark.conf.getAll.collect {
+      case (k, v) if k.startsWith("spark.hadoop.") => k.stripPrefix("spark.hadoop.") -> v
+    }
+    set.foreach { case (k, v) => expected.set(k, v) }
+    val kept = entries(expected).filter { case (k, _) => !bundledOnly(expected, k) }
+    val lost = kept.filter { case (k, v) => conf.getRaw(k) != v }
+    assert(lost.isEmpty, s"lost or changed: ${lost.take(5)}")
+    assert(kept.size > 20 && LocalFs.confs.forall { case (k, v) => conf.get(k.stripPrefix("spark.hadoop.")) == v })
+  }
+
   /** The consumer shape: source → decode → dedup within a watermark →
     * checkpointed parquet sink with both channels.
     */
@@ -140,16 +189,26 @@ class LocalFsSpec extends SparkSuite {
       renames(FileSystem.get(URI.create("file:///"), default), "default_"))
   }
 
+  /** Drain with `confs` set as session confs, which every `newHadoopConf()` carries. */
+  private def drainWith(confs: Iterable[(String, String)], root: JPath): Unit = {
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try drain(root, Trigger.AvailableNow())
+    finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   test("a checkpointed consumer resumes exactly and lays out its checkpoint as under the default binding") {
     val stock = Files.createTempDirectory("graft_ckpt_hadoop_")
-    DefaultBinding.foreach { case (k, v) => spark.conf.set(k, v) }
-    try drain(stock, Trigger.AvailableNow())
-    finally DefaultBinding.foreach { case (k, _) => spark.conf.unset(k) }
+    drainWith(DefaultBinding, stock)
+    // the bundled defaults back in place, under this session's binding
+    val defaults = Files.createTempDirectory("graft_ckpt_defaults_")
+    drainWith(BundledEntries.filter { case (k, _) => !keptDefault(k) }, defaults)
 
     val straight = Files.createTempDirectory("graft_ckpt_ours_")
     drain(straight, Trigger.AvailableNow())
-    val (got, want) = (layout(straight), layout(stock))
-    assert(got == want, s"differs: ${(got.toSet diff want.toSet).take(5)} vs ${(want.toSet diff got.toSet).take(5)}")
+    assertTrimmed(spark.sessionState.newHadoopConf())
+    val got = layout(straight)
+    for (want <- Seq(layout(stock), layout(defaults)))
+      assert(got == want, s"differs: ${(got.toSet diff want.toSet).take(5)} vs ${(want.toSet diff got.toSet).take(5)}")
     assert(got.keys.exists(_.endsWith(".delta.crc")) && got.keys.exists(_.endsWith(".crc.crc")))
 
     // one rate-limited batch, stop, restart from the checkpoint
@@ -163,5 +222,10 @@ class LocalFsSpec extends SparkSuite {
     assert(first > 0 && first < all.length, s"first batch $first of ${all.length}")
     assert(rows(resumed) == all)
     assert(rows(stock) == all)
+    assert(rows(defaults) == all)
+
+    spark.range(100).write.parquet(straight.resolve("batch").toString)
+    assertTrimmed(spark.sessionState.newHadoopConf())
+    assertTrimmed(spark.sparkContext.hadoopConfiguration)
   }
 }

@@ -267,8 +267,8 @@ class PlanSpec extends SparkSuite {
     // plan is indistinguishable from the literal query's
     val tpl = SparkEntry.queries("sql_identifier_templating")(spark, Sf)
     val lit = spark.sql(
-      """SELECT o_orderstatus AS grp, CAST(count(*) AS BIGINT) AS n,
-        |  round(sum(o_totalprice), 2) AS total
+      s"""SELECT o_orderstatus AS grp, CAST(count(*) AS BIGINT) AS n,
+        |  ${graft.operators.SharedExprs.sumCentsSql("o_totalprice")} AS total
         |FROM orders GROUP BY o_orderstatus ORDER BY 1, 2, 3""".stripMargin)
     assert(tpl.queryExecution.optimizedPlan.sameResult(lit.queryExecution.optimizedPlan))
   }
