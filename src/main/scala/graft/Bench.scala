@@ -56,6 +56,16 @@ object Bench {
     (rechecked, confirmed)
   }
 
+  /** Why `--refresh` must leave the reference as it is in a window graded
+    * `window` at `ratio`, or None when it may rewrite it: only an `ok` or
+    * `unrated` window measures the host at its usual speed, and a sweep
+    * taken slower would grade every later sweep against a slow host.
+    */
+  def refreshRefusal(window: String, ratio: Double): Option[String] =
+    if (window == "ok" || window == "unrated") None
+    else Some(f"the window graded $window (window_ratio $ratio%.2f); ${Measure.RefFile} is " +
+      "left as it is: refresh again when the host is quieter")
+
   def main(args: Array[String]): Unit = {
     val refresh = args.contains("--refresh")
     // Optional args: bench only the named queries (a local iteration aid;
@@ -72,14 +82,18 @@ object Bench {
     val ref = Measure.readReference()
     val windowRatio = Measure.windowRatio(ref, calibMs)
     val window = Measure.grade(windowRatio)
+    if (refresh) refreshRefusal(window, windowRatio).foreach { why =>
+      System.err.println(s"[bench] --refresh refused: $why")
+      sys.exit(2)
+    }
     val spark = Measure.session("graft-bench", 32)
     val cores = spark.sparkContext.defaultParallelism
     // Staging is not silently absorbed: it is reported as `staging_sec`.
     val stagingSec = Measure.prepare(spark, sfDir, Derived.stageAll)
     // Streaming throughput vs the reference's 2 rec/s producer ceiling
     // (BASELINE.md), measured before the sweep perturbs the JVM.
-    val streamRuns = Measure.streamRuns(spark, sfDir)
-    val streamRate = Measure.median(streamRuns)
+    val stream = Measure.streamRuns(spark, sfDir)
+    val streamRate = Measure.median(stream.rates)
 
     val benched = SparkEntry.allDefs.filter(d => only.isEmpty || only(d.name))
     val byName = benched.map(d => d.name -> d).toMap
@@ -127,7 +141,8 @@ object Bench {
       "window_ratio" -> fixed(windowRatio, 3), "window" -> window, "full_rerun" -> fullRerun,
       "staging_sec" -> fixed(stagingSec, 3),
       "stream_events_per_sec" -> fixed(streamRate, 0),
-      "stream_runs" -> streamRuns.map(fixed(_, 0)),
+      "stream_runs" -> stream.rates.map(fixed(_, 0)),
+      "stream_compiles_per_batch" -> fixed(stream.compilesPerBatch, 2),
       "queries" -> figures(results, 3), "queries_raw" -> figures(raw, 3),
       "regressions" -> confirmed.map { case (n, prev, now, r) =>
         obj("query" -> n, "prev" -> fixed(prev, 3), "best_sec" -> fixed(now, 3),

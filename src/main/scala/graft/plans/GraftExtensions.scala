@@ -28,7 +28,10 @@ object SimplifySelfCosine extends Rule[LogicalPlan] {
 
 /** Session extension wiring (SURVEY.md §4): registers the custom
   * expressions ([[graft.functions.GraftFunctions]]) as session functions and
-  * injects the optimizer rules and planner strategy. Usable two ways:
+  * injects the optimizer rules and planner strategy. [[BatchTimestampAsConstant]]
+  * keeps a stream's batch timestamp out of its generated Java, so a
+  * micro-batch plan compiles once per stream, not once per batch. Usable
+  * two ways:
   *   SparkSession.builder().withExtensions(new GraftExtensions)
   *   --conf spark.sql.extensions=graft.plans.GraftExtensions
   */
@@ -38,6 +41,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => SimplifySelfCosine)
     e.injectOptimizerRule(_ => RewriteWindowTopK)
     e.injectOptimizerRule(_ => RewriteBandJoin)
+    e.injectOptimizerRule(_ => BatchTimestampAsConstant)
     e.injectPlannerStrategy(_ => TopKStrategy)
   }
 }

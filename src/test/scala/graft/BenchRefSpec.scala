@@ -42,6 +42,16 @@ class BenchRefSpec extends AnyFunSuite {
     assert(confirmed == Seq(("slow", 1.0, 2.6, 2.6)))
   }
 
+  test("--refresh rewrites the reference only in an ok or unrated window") {
+    assert(Bench.refreshRefusal("ok", 1.02).isEmpty)
+    assert(Bench.refreshRefusal("unrated", -1.0).isEmpty)
+    for (ratio <- Seq(0.49, 0.7)) {
+      val window = Measure.grade(ratio)
+      val why = Bench.refreshRefusal(window, ratio)
+      assert(why.exists(w => w.contains(window) && w.contains(Measure.RefFile)), s"$ratio: $why")
+    }
+  }
+
   test("the committed reference carries its host and only successful query times") {
     val ref = Measure.readReference().getOrElse(fail(s"${Measure.RefFile} has no host figures"))
     assert(ref.nproc > 0 && ref.calibMs > 0 && ref.cores > 0 && ref.sf.nonEmpty)

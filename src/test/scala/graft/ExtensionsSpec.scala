@@ -1,12 +1,18 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GraftExtensions: injected functions resolve in SQL, and the
+/** GraftExtensions: injected functions resolve in SQL, the
   * SimplifySelfCosine optimizer rule rewrites self-similarity without
-  * changing results.
+  * changing results, and a stream's batch timestamp stays out of its
+  * generated code.
   */
 class ExtensionsSpec extends AnyFunSuite {
 
@@ -88,5 +94,92 @@ class ExtensionsSpec extends AnyFunSuite {
       val p = q.queryExecution.executedPlan.toString
       assert(!p.contains("graft_band_bin"), s"rule fired despite equi key:\n$p")
     } finally spark.conf.unset(plans.RewriteBandJoin.ConfKey)
+  }
+
+  private val PerBatch = 10L
+
+  /** A sink row: the rate source's value, then its `current_timestamp()`
+    * in µs, `current_date()` and `localtimestamp()`.
+    */
+  private type Stamped = (Long, Long, java.time.LocalDate, java.time.LocalDateTime)
+
+  /** `rate-micro-batch` → (value, current_timestamp(), current_date(),
+    * localtimestamp()) → memory sink, run until at least five micro-batches
+    * have finished. Returns the codegen compiles made after the first batch
+    * finished, the sink's rows, and each batch's timestamp in µs as the
+    * offset log records it.
+    */
+  private def stampedStream(name: String): (Long, Seq[Stamped], Map[Long, Long]) = {
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ext_ts_")
+    val q = spark.readStream.format("rate-micro-batch")
+      .option("rowsPerBatch", PerBatch).option("numPartitions", 2).load()
+      .select(col("value"), current_timestamp(), current_date(), localtimestamp())
+      .writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", ckpt.toString)
+      .trigger(Trigger.ProcessingTime("100 milliseconds"))
+      .start()
+    def awaitBatch(id: Long): Unit = {
+      val deadline = System.nanoTime() + 60e9.toLong
+      while (Option(q.lastProgress).forall(_.batchId < id)) {
+        assert(q.isActive && System.nanoTime() < deadline, s"$name stalled before batch $id")
+        Thread.sleep(20)
+      }
+    }
+    val compiles = try {
+      awaitBatch(0)
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      awaitBatch(4)
+      q.stop()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    } finally q.stop()
+    val rows = spark.table(name).collect().map { r =>
+      (r.getLong(0), DateTimeUtils.instantToMicros(r.getTimestamp(1).toInstant),
+        r.getDate(2).toLocalDate, r.getAs[java.time.LocalDateTime](3))
+    }.toSeq
+    val BatchTs = """"batchTimestampMs":(\d+)""".r
+    val stamps = ckpt.resolve("offsets").toFile.listFiles().filter(_.getName.forall(_.isDigit))
+      .map { f =>
+        val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        f.getName.toLong -> BatchTs.findFirstMatchIn(text).get.group(1).toLong * 1000L
+      }.toMap
+    (compiles, rows, stamps)
+  }
+
+  /** Every row carries the timestamp its batch's offset-log entry records,
+    * and that timestamp's date and local time in the session zone (UTC).
+    */
+  private def assertStampedByBatch(rows: Seq[Stamped], stamps: Map[Long, Long]): Unit = {
+    val batches = rows.groupBy(_._1 / PerBatch)
+    assert(batches.size >= 5, s"only ${batches.size} batches reached the sink")
+    batches.foreach { case (b, rs) =>
+      val local = DateTimeUtils.microsToLocalDateTime(stamps(b))
+      assert(rs.size == PerBatch, s"batch $b has ${rs.size} rows")
+      assert(rs.forall(r => r._2 == stamps(b) && r._3 == local.toLocalDate && r._4 == local),
+        s"batch $b rows $rs, offset log ${stamps(b)}")
+    }
+  }
+
+  test("a stream's batch timestamp adds no compiles after its first batch") {
+    val (compiles, rows, stamps) = stampedStream("ext_batch_ts")
+    assert(compiles == 0, s"$compiles classes compiled after the first batch")
+    assertStampedByBatch(rows, stamps)
+    // with the rule left out each batch's sink stage spells its timestamp
+    // as a literal and compiles again; the stamps are the same
+    val rule = plans.BatchTimestampAsConstant.ruleName
+    spark.conf.set("spark.sql.optimizer.excludedRules", rule)
+    val (literalCompiles, literalRows, literalStamps) = try stampedStream("ext_batch_ts_literal")
+      finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+    assert(literalCompiles >= 3, s"$literalCompiles compiles without $rule")
+    assertStampedByBatch(literalRows, literalStamps)
+  }
+
+  test("a batch query's current_timestamp() stays a literal") {
+    val plan = spark.range(1).select(current_timestamp().as("ts")).queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions).flatMap(_.collect { case e => e })
+    assert(exprs.exists {
+      case Literal(_, TimestampType) => true
+      case _ => false
+    }, plan.toString)
+    assert(!exprs.exists(_.isInstanceOf[plans.BatchConstant]), plan.toString)
   }
 }

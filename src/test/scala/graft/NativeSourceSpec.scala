@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.RecordStream
 
@@ -76,6 +78,56 @@ class NativeSourceSpec extends SparkSuite {
     assert(out.count() == n, s"expected $n rows after restart, got ${out.count()}")
     // (shard, seq) pairs are unique: nothing reprocessed, nothing lost
     assert(out.distinct().count() == n)
+  }
+
+  test("a restart with another per-shard cap resumes each shard at its checkpointed sequence [REF A10]") {
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_kin_recap_")
+    val arrivals = scala.collection.mutable.ArrayBuffer[(Long, String, Long)]()
+    def run(cap: Long, trigger: Trigger): Unit = {
+      val q = RecordStream.kinesisSource(spark, Sf, maxRecordsPerShardPerBatch = cap)
+        .writeStream.option("checkpointLocation", ckpt.toString)
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+          arrivals.synchronized {
+            arrivals ++= batch.select("shardId", "sequenceNumber").collect()
+              .map(r => (id, r.getString(0), r.getLong(1)))
+          }
+          ()
+        }
+        .trigger(trigger).start()
+      assert(q.awaitTermination(120000), s"cap $cap run did not finish")
+    }
+    // two single-batch runs at 70 per shard, then stop mid-stream
+    run(70, Trigger.Once())
+    run(70, Trigger.Once())
+    // the last offset-log entry's final line is the source's per-shard offsets
+    val lastEntry = ckpt.resolve("offsets").resolve("1")
+    val checkpointed = streaming.source.ShardOffsets.fromJson(
+      java.nio.file.Files.readAllLines(lastEntry).asScala.last).offsets
+    assert(checkpointed.values.forall(_ == 140L), s"checkpointed offsets $checkpointed")
+    val firstRun = arrivals.toList
+    assert(firstRun.map(_._1).toSet == Set(0L, 1L))
+    // restart with a smaller cap: the rest drains in batches of at most 25
+    run(25, Trigger.AvailableNow())
+    val restarted = arrivals.toList.drop(firstRun.size)
+    assert(restarted.nonEmpty && restarted.forall(_._1 >= 2L), "restart re-ran a committed batch")
+    restarted.groupBy(a => (a._1, a._2)).foreach { case (key, rs) =>
+      assert(rs.size <= 25, s"batch/shard $key read ${rs.size} records at cap 25")
+    }
+    val want = Tables.events(spark, Sf)
+      .selectExpr(s"concat('shardId-', lpad(CAST(user_id % ${RecordStream.NumShards} AS STRING), 12, '0')) AS shardId")
+      .groupBy("shardId").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(checkpointed.keySet == want.keySet)
+    want.foreach { case (shard, n) =>
+      // resumed at the checkpointed sequence number, not before or after it
+      assert(restarted.filter(_._2 == shard).map(_._3).headOption.contains(checkpointed(shard)),
+        s"$shard resumed at ${restarted.find(_._2 == shard)}, checkpointed ${checkpointed(shard)}")
+      // in batch order the shard's records are 0..n-1 once each: no loss,
+      // no duplicate and no reordering across the restart
+      val seqs = arrivals.filter(_._2 == shard).sortBy(_._1).map(_._3).toList
+      assert(seqs == (0L until n).toList,
+        s"$shard sequence across the restart: ${seqs.take(5)}..${seqs.takeRight(5)} of $n")
+    }
   }
 
   test("mid-log slice seeks to its start byte and reads exactly [fromSeq, untilSeq)") {
@@ -226,6 +278,13 @@ class NativeSourceSpec extends SparkSuite {
         org.apache.spark.sql.functions.expr("CAST(sum(1 - good) AS BIGINT)").as("n_dead_letter"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == want, s"got=$got want=$want")
+  }
+
+  test("the bench's stream figure counts the micro-batches of its timed runs") {
+    val figures = Measure.streamRuns(spark, Sf)
+    assert(figures.rates.size == 3 && figures.rates.forall(_ > 0), figures.toString)
+    // −1 would mean no progress event with a batch reached the listener
+    assert(figures.compilesPerBatch >= 0.0, figures.toString)
   }
 
   test("the chunked seek index equals a byte-by-byte index") {
