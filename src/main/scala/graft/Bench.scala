@@ -64,7 +64,9 @@ object Bench {
   def refreshRefusal(window: String, ratio: Double): Option[String] =
     if (window == "ok" || window == "unrated") None
     else Some(f"the window graded $window (window_ratio $ratio%.2f); ${Measure.RefFile} is " +
-      "left as it is: refresh again when the host is quieter")
+      "left as it is: refresh again when the host is quieter, or, to re-base the reference " +
+      s"on a new host or after a host-loop change, delete ${Measure.RefFile} first so the " +
+      "refresh runs unrated")
 
   def main(args: Array[String]): Unit = {
     val refresh = args.contains("--refresh")
@@ -92,8 +94,8 @@ object Bench {
     val stagingSec = Measure.prepare(spark, sfDir, Derived.stageAll)
     // Streaming throughput vs the reference's 2 rec/s producer ceiling
     // (BASELINE.md), measured before the sweep perturbs the JVM.
-    val stream = Measure.streamRuns(spark, sfDir)
-    val streamRate = Measure.median(stream.rates)
+    val streamRuns = Measure.streamRuns(spark, sfDir)
+    val streamRate = Measure.median(streamRuns)
 
     val benched = SparkEntry.allDefs.filter(d => only.isEmpty || only(d.name))
     val byName = benched.map(d => d.name -> d).toMap
@@ -141,8 +143,7 @@ object Bench {
       "window_ratio" -> fixed(windowRatio, 3), "window" -> window, "full_rerun" -> fullRerun,
       "staging_sec" -> fixed(stagingSec, 3),
       "stream_events_per_sec" -> fixed(streamRate, 0),
-      "stream_runs" -> stream.rates.map(fixed(_, 0)),
-      "stream_compiles_per_batch" -> fixed(stream.compilesPerBatch, 2),
+      "stream_runs" -> streamRuns.map(fixed(_, 0)),
       "queries" -> figures(results, 3), "queries_raw" -> figures(raw, 3),
       "regressions" -> confirmed.map { case (n, prev, now, r) =>
         obj("query" -> n, "prev" -> fixed(prev, 3), "best_sec" -> fixed(now, 3),

@@ -9,10 +9,7 @@ import com.fasterxml.jackson.core.StreamWriteFeature
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graft.GraftDatasetBridge
-import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** The measurement core that [[Bench]], [[BenchScale]] and [[BenchScale100]]
   * share: one session set-up, one warm-and-stage step, one timer with its
@@ -91,13 +88,9 @@ object Measure {
   def best(runs: Double*): Double = runs.filter(_ > 0).minOption.getOrElse(-1.0)
 
   /** `n` runs of `run` after one untimed warm run (JIT, page cache), which
-    * is discarded; `afterWarm` runs between them.
+    * is discarded.
     */
-  private def warmRuns(n: Int, afterWarm: () => Unit = () => ())(run: => Double): Seq[Double] = {
-    run
-    afterWarm()
-    Seq.fill(n)(run)
-  }
+  private def warmRuns(n: Int)(run: => Double): Seq[Double] = { run; Seq.fill(n)(run) }
 
   /** The host loop: milliseconds for `threads` threads at once to each run
     * `pass` over its own 8 MB array, nine timed runs after a warm one. It
@@ -148,56 +141,28 @@ object Measure {
     if (ratio < 0) "unrated" else if (ratio < 0.5) "throttled"
     else if (ratio < 0.85) "degraded" else "ok"
 
-  /** The stream figure: events/s of three timed runs, and the generated
-    * classes compiled per micro-batch over those runs (−1 when none ran a
-    * batch). A stream whose plan compiles once reads 0 compiles per batch;
-    * a plan that spells a per-batch value into its code reads 1 or more.
-    */
-  final case class StreamFigures(rates: Seq[Double], compilesPerBatch: Double)
-
-  /** Three timed runs, after a warm one, of the events table through the
-    * full decode pipeline (`stream_payload_pipeline`); a failed run reads
-    * −1 events/s. A reported figure: it moves with the streaming code, so
+  /** Three timed runs, after a warm one, of events/s of the events table
+    * through the full decode pipeline (`stream_payload_pipeline`); −1 for a
+    * failed run. A reported figure: it moves with the streaming code, so
     * no gate reads it.
     */
-  def streamRuns(spark: SparkSession, dir: String): StreamFigures = {
+  def streamRuns(spark: SparkSession, dir: String): Seq[Double] = {
     val pipeline = SparkEntry.allDefs.find(_.name == "stream_payload_pipeline").get
     val nEvents = try Tables.events(spark, dir).count() catch { case _: Throwable => -1L }
-    if (nEvents < 0) return StreamFigures(Seq.fill(3)(-1.0), -1.0)
-    val batches = new java.util.concurrent.atomic.AtomicLong
-    val counter = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.durationMs.containsKey("addBatch")) batches.incrementAndGet()
-    }
-    // compiles and batches so far, once the listener has seen every event
-    def counts(): (Long, Long) = {
-      GraftDatasetBridge.awaitListeners(spark)
-      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, batches.get)
-    }
-    spark.streams.addListener(counter)
-    try {
-      var (c0, b0) = (0L, 0L)
-      val rates = eventRates(nEvents, () => { val (c, b) = counts(); c0 = c; b0 = b }) {
-        pipeline.run(spark, dir).write.mode("overwrite").format("noop").save()
-      }
-      val (c1, b1) = counts()
-      StreamFigures(rates, if (b1 > b0) (c1 - c0).toDouble / (b1 - b0) else -1.0)
-    } finally spark.streams.removeListener(counter)
+    if (nEvents < 0) Seq.fill(3)(-1.0)
+    else eventRates(nEvents)(pipeline.run(spark, dir).write.mode("overwrite").format("noop").save())
   }
 
-  /** Events/s of `drain` over `nEvents`, three timed runs after a warm one
-    * (`afterWarm` runs between them); −1 for a run that throws.
+  /** Events/s of `drain` over `nEvents`, three timed runs after a warm one;
+    * −1 for a run that throws.
     */
-  def eventRates(nEvents: Long, afterWarm: () => Unit = () => ())(drain: => Unit): Seq[Double] =
-    warmRuns(3, afterWarm) {
-      try {
-        val t0 = System.nanoTime()
-        drain
-        nEvents / ((System.nanoTime() - t0) / 1e9)
-      } catch { case _: Throwable => -1.0 }
-    }
+  def eventRates(nEvents: Long)(drain: => Unit): Seq[Double] = warmRuns(3) {
+    try {
+      val t0 = System.nanoTime()
+      drain
+      nEvents / ((System.nanoTime() - t0) / 1e9)
+    } catch { case _: Throwable => -1.0 }
+  }
 
   private val mapper = JsonMapper.builder().addModule(DefaultScalaModule)
     .enable(StreamWriteFeature.WRITE_BIGDECIMAL_AS_PLAIN).build()

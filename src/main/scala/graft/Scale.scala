@@ -239,7 +239,7 @@ object BenchScale {
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(scaled, "lineitem.parquet")))
       ScaleGen.generate(spark, base, scaled, reps)
     for (dir <- Seq(base, scaled)) Measure.prepare(spark, dir, stage)
-    val streamRate = Measure.median(Measure.streamRuns(spark, base).rates)
+    val streamRate = Measure.median(Measure.streamRuns(spark, base))
     // base first (its cold-codegen cost mirrors the per-round sweep), then
     // scaled — the second run reuses the compiled plans, so the factor
     // isolates DATA growth, not compilation

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{CurrentBatchTimestamp, LeafExpression}
+import org.apache.spark.sql.catalyst.expressions.{CurrentBatchTimestamp, LeafExpression, Nondeterministic}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, EmptyBlock,
   ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -13,13 +13,16 @@ import org.apache.spark.sql.types.DataType
   * batch timestamp. It evaluates like a literal, but its generated code
   * reads the value from the class's reference array instead of spelling it
   * in the Java source, so every batch of a stream generates the same source
-  * and compiles it once. Not foldable, so no rule turns it back into a
-  * literal.
+  * and compiles it once. Nondeterministic, like the `CurrentBatchTimestamp`
+  * it replaces: not foldable, and no deterministic-only rewrite moves it,
+  * so a filter on it stays above a stateful aggregate or a stream-stream
+  * join and is applied again in every batch.
   */
-case class BatchConstant(value: Any, dataType: DataType) extends LeafExpression {
+case class BatchConstant(value: Any, dataType: DataType) extends LeafExpression
+    with Nondeterministic {
   override def nullable: Boolean = false
-  override def foldable: Boolean = false
-  override def eval(input: InternalRow): Any = value
+  override protected def initializeInternal(partitionIndex: Int): Unit = ()
+  override protected def evalInternal(input: InternalRow): Any = value
   override def prettyName: String = "batch_constant"
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {

@@ -1,9 +1,9 @@
 /* Bridge into private[sql] APIs (Dataset.ofRows, the Column→Expression
- * view, the shared Hadoop configuration and the listener bus). This file
- * deliberately lives in the org.apache.spark.sql namespace — the standard
- * technique for third-party Catalyst extensions that build DataFrames from
- * custom LogicalPlans. Nothing here is copied from Spark; it only forwards
- * four calls.
+ * view and the shared Hadoop configuration). This file deliberately lives
+ * in the org.apache.spark.sql namespace — the standard technique for
+ * third-party Catalyst extensions that build DataFrames from custom
+ * LogicalPlans. Nothing here is copied from Spark; it only forwards three
+ * calls.
  */
 package org.apache.spark.sql.graft
 
@@ -26,9 +26,4 @@ object GraftDatasetBridge {
     */
   def sharedHadoopConf(spark: SparkSession): Configuration =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.hadoopConf
-
-  /** Returns once the listener bus has delivered every event posted so far
-    * (the streaming listeners' progress events included).
-    */
-  def awaitListeners(spark: SparkSession): Unit = spark.sparkContext.listenerBus.waitUntilEmpty()
 }

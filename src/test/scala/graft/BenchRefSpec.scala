@@ -52,6 +52,19 @@ class BenchRefSpec extends AnyFunSuite {
     }
   }
 
+  test("deleting the reference re-bases it: the next --refresh runs unrated") {
+    // a reference whose host loop ran 4x faster (a host-loop change, or a
+    // slower host with the same core count) grades every window throttled
+    val stale = Measure.Reference(Measure.nproc, 30.0, "sf0.1", 4, Map("q" -> 1.0))
+    val ratio = Measure.windowRatio(Some(stale), 120.0)
+    val why = Bench.refreshRefusal(Measure.grade(ratio), ratio)
+    assert(why.exists(_.contains(s"delete ${Measure.RefFile}")), s"$ratio: $why")
+    // with the file deleted there is no reference, so the window is unrated
+    val rebased = Measure.windowRatio(None, 120.0)
+    assert(Measure.grade(rebased) == "unrated")
+    assert(Bench.refreshRefusal(Measure.grade(rebased), rebased).isEmpty)
+  }
+
   test("the committed reference carries its host and only successful query times") {
     val ref = Measure.readReference().getOrElse(fail(s"${Measure.RefFile} has no host figures"))
     assert(ref.nproc > 0 && ref.calibMs > 0 && ref.cores > 0 && ref.sf.nonEmpty)

@@ -3,9 +3,11 @@ package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -98,6 +100,15 @@ class ExtensionsSpec extends AnyFunSuite {
 
   private val PerBatch = 10L
 
+  /** Waits until `q` has finished micro-batch `id`. */
+  private def awaitBatch(q: StreamingQuery, id: Long): Unit = {
+    val deadline = System.nanoTime() + 60e9.toLong
+    while (Option(q.lastProgress).forall(_.batchId < id)) {
+      assert(q.isActive && System.nanoTime() < deadline, s"${q.name} stalled before batch $id")
+      Thread.sleep(20)
+    }
+  }
+
   /** A sink row: the rate source's value, then its `current_timestamp()`
     * in µs, `current_date()` and `localtimestamp()`.
     */
@@ -118,17 +129,10 @@ class ExtensionsSpec extends AnyFunSuite {
       .option("checkpointLocation", ckpt.toString)
       .trigger(Trigger.ProcessingTime("100 milliseconds"))
       .start()
-    def awaitBatch(id: Long): Unit = {
-      val deadline = System.nanoTime() + 60e9.toLong
-      while (Option(q.lastProgress).forall(_.batchId < id)) {
-        assert(q.isActive && System.nanoTime() < deadline, s"$name stalled before batch $id")
-        Thread.sleep(20)
-      }
-    }
     val compiles = try {
-      awaitBatch(0)
+      awaitBatch(q, 0)
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      awaitBatch(4)
+      awaitBatch(q, 4)
       q.stop()
       CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
     } finally q.stop()
@@ -171,6 +175,30 @@ class ExtensionsSpec extends AnyFunSuite {
       finally spark.conf.unset("spark.sql.optimizer.excludedRules")
     assert(literalCompiles >= 3, s"$literalCompiles compiles without $rule")
     assertStampedByBatch(literalRows, literalStamps)
+  }
+
+  test("a filter on the batch timestamp stays above a stream's stateful aggregate") {
+    // pushed below the aggregate, the filter would drop rows before they
+    // update state, and windows that ended in an earlier batch would stay
+    // in the complete-mode output
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ext_ts_agg_")
+    val q = spark.readStream.format("rate-micro-batch").option("rowsPerBatch", PerBatch).load()
+      .groupBy(window(col("timestamp"), "1 minute")).count()
+      .where(col("window.end") > current_timestamp())
+      .writeStream.format("memory").queryName("ext_batch_ts_agg").outputMode("complete")
+      .option("checkpointLocation", ckpt.toString)
+      .trigger(Trigger.ProcessingTime("100 milliseconds"))
+      .start()
+    val plan = try {
+      awaitBatch(q, 1)
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.optimizedPlan
+    } finally q.stop()
+    val onStamp = plan.collect {
+      case f: Filter if f.condition.exists(_.isInstanceOf[plans.BatchConstant]) => f
+    }
+    assert(onStamp.nonEmpty, s"no filter on the batch timestamp:\n$plan")
+    assert(onStamp.forall(_.child.exists(_.isInstanceOf[Aggregate])),
+      s"the batch-timestamp filter moved below the aggregate:\n$plan")
   }
 
   test("a batch query's current_timestamp() stays a literal") {

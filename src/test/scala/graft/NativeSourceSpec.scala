@@ -280,13 +280,6 @@ class NativeSourceSpec extends SparkSuite {
     assert(got == want, s"got=$got want=$want")
   }
 
-  test("the bench's stream figure counts the micro-batches of its timed runs") {
-    val figures = Measure.streamRuns(spark, Sf)
-    assert(figures.rates.size == 3 && figures.rates.forall(_ > 0), figures.toString)
-    // −1 would mean no progress event with a batch reached the listener
-    assert(figures.compilesPerBatch >= 0.0, figures.toString)
-  }
-
   test("the chunked seek index equals a byte-by-byte index") {
     // the reference: an offset after every newline byte, scanned one by one
     def byteIndex(f: java.io.File): Seq[Long] = {
