@@ -4,7 +4,7 @@ import scala.collection.immutable.ListMap
 
 import Measure.{fixed, obj}
 
-/** Per-round benchmark main (driver contract): runs every declared query on
+/** The measurement main: runs every declared query (or the named ones) on
   * SPARK_GRAFT_SF_DIR at local[32] (SPARK_GRAFT_CPUS overrides), each timed
   * by [[Measure.timeOne]], and prints one JSON line with per-query seconds.
   * Tables are warmed and the derived corpus tables staged first
@@ -15,6 +15,10 @@ import Measure.{fixed, obj}
   * [[Measure.RefFile]], which only `runMain graft.Bench --refresh` rewrites;
   * other sweeps write `target/bench.json` (`target/bench_partial.json` when
   * given query names) and never a committed file.
+  *
+  * `--scale N` times each query on the fixture and, back to back, on its
+  * N× [[ScaleGen]] corpus ([[Scale.corpus]]), and writes the factors that
+  * [[Scale.judge]] adjudicates to `target/bench_scale.json` instead.
   */
 object Bench {
   /** A regression flag: the normalized ratio of `now` over the reference
@@ -68,13 +72,56 @@ object Bench {
       s"on a new host or after a host-loop change, delete ${Measure.RefFile} first so the " +
       "refresh runs unrated")
 
+  /** A run's options: `--refresh`, `--scale N`, and the query names. */
+  final case class Args(refresh: Boolean, scale: Option[Int], only: Set[String])
+
+  def parseArgs(args: Seq[String]): Args = {
+    def go(rest: List[String], a: Args): Args = rest match {
+      case Nil => a
+      case "--refresh" :: tail => go(tail, a.copy(refresh = true))
+      case "--scale" :: tail =>
+        val n = tail.headOption.flatMap(_.toIntOption).filter(_ > 0)
+        require(n.isDefined, "--scale takes a positive integer data factor")
+        go(tail.tail, a.copy(scale = n))
+      case name :: tail => go(tail, a.copy(only = a.only + name))
+    }
+    val a = go(args.toList, Args(refresh = false, scale = None, only = Set.empty))
+    require(!a.refresh || (a.scale.isEmpty && a.only.isEmpty), "--refresh rewrites the " +
+      "reference from a full sweep of the fixture and takes neither --scale nor query names")
+    a
+  }
+
+  /** One figure of a sweep: `name` on the corpus `dir`, with its first-pass
+    * figure in `raw` when it was re-run.
+    */
+  final case class Timed(name: String, dir: String, sec: Double, raw: Option[Double])
+
+  /** Times each of `names` on each of `dirs` through `time`, a query's
+    * corpora back to back: its later corpora then reuse the classes its
+    * first run compiled, where Spark's generated-class cache (100 entries)
+    * would have evicted them by the end of a whole pass, so a factor
+    * isolates data growth, not compilation. With `fullRerun` (a degraded
+    * window) the whole pass runs once more and each figure keeps its best.
+    * Then a gross outlier (over 5 s AND over 5× the median of its corpus)
+    * is re-run once and keeps its best.
+    */
+  def sweep(names: Seq[String], dirs: Seq[String], fullRerun: Boolean,
+      time: (String, String) => Double): Seq[Timed] = {
+    val onePass = for (n <- names; d <- dirs) yield Timed(n, d, time(n, d), None)
+    val firstPass =
+      if (!fullRerun) onePass
+      else onePass.map(t => t.copy(sec = Measure.best(t.sec, time(t.name, t.dir)), raw = Some(t.sec)))
+    val median = firstPass.groupBy(_.dir).map { case (d, ts) => d -> Measure.median(ts.map(_.sec)) }
+    firstPass.map { t =>
+      val m = median(t.dir)
+      if (t.sec > 5.0 && m > 0 && t.sec > 5.0 * m)
+        Timed(t.name, t.dir, Measure.best(t.sec, time(t.name, t.dir)), t.raw.orElse(Some(t.sec)))
+      else t
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    val refresh = args.contains("--refresh")
-    // Optional args: bench only the named queries (a local iteration aid;
-    // with none, every declared query is benched).
-    val only = args.filterNot(_ == "--refresh").toSet
-    require(!refresh || only.isEmpty, "--refresh rewrites the reference from a full sweep " +
-      "and takes no query names")
+    val Args(refresh, scale, only) = parseArgs(args.toSeq)
     val sfDir = Graft.fixtureDir("/root/testdata/sf0.1")
     // The host loop runs before the session exists, so it times the host
     // alone. This VM has multi-minute throttle windows with 2-100×
@@ -88,10 +135,12 @@ object Bench {
       System.err.println(s"[bench] --refresh refused: $why")
       sys.exit(2)
     }
-    val spark = Measure.session("graft-bench", 32)
+    val spark = Graft.session(Graft.localMaster(32), "graft-bench")
     val cores = spark.sparkContext.defaultParallelism
+    val scaled = scale.map(n => (n, Scale.corpus(spark, sfDir, n)))
+    val corpora = sfDir +: scaled.map(_._2).toSeq
     // Staging is not silently absorbed: it is reported as `staging_sec`.
-    val stagingSec = Measure.prepare(spark, sfDir, Derived.stageAll)
+    val stagingSec = corpora.map(Measure.prepare(spark, _, Derived.stageAll)).sum
     // Streaming throughput vs the reference's 2 rec/s producer ceiling
     // (BASELINE.md), measured before the sweep perturbs the JVM.
     val streamRuns = Measure.streamRuns(spark, sfDir)
@@ -99,28 +148,35 @@ object Bench {
 
     val benched = SparkEntry.allDefs.filter(d => only.isEmpty || only(d.name))
     val byName = benched.map(d => d.name -> d).toMap
-    def timeOne(name: String): Double = Measure.timeOne(spark, byName(name), sfDir)
+    def timeOn(name: String, dir: String): Double = Measure.timeOne(spark, byName(name), dir)
     // Degraded-window policy: run the sweep, then ONE full re-run, and
     // report the per-query best. The first pass's figures go to
     // queries_raw so both passes stay in the artifact.
-    val raw = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val onePass = benched.map(d => d.name -> timeOne(d.name))
     val fullRerun = window == "degraded" || window == "throttled"
-    val firstPass =
-      if (!fullRerun) onePass
-      else onePass.map { case (name, sec1) =>
-        raw(name) = sec1
-        name -> Measure.best(sec1, timeOne(name))
-      }
-    // Re-measure gross outliers (over 5 s AND over 5× the sweep median)
-    // once and report the best; the first-pass figure stays in queries_raw.
-    val median = Measure.median(firstPass.map(_._2))
-    val results = firstPass.map { case (name, sec) =>
-      if (sec > 5.0 && median > 0 && sec > 5.0 * median) {
-        if (!raw.contains(name)) raw(name) = sec
-        name -> Measure.best(sec, timeOne(name))
-      } else name -> sec
+    val timed = sweep(benched.map(_.name), corpora, fullRerun, timeOn)
+    def rawOn(dir: String) = timed.filter(_.dir == dir).flatMap(t => t.raw.map(t.name -> _))
+    val host = obj("cores" -> cores, "nproc" -> Measure.nproc, "calib_ms" -> fixed(calibMs, 3),
+      "calib_runs" -> calibRuns.map(fixed(_, 3)), "window_ratio" -> fixed(windowRatio, 3),
+      "window" -> window, "full_rerun" -> fullRerun, "staging_sec" -> fixed(stagingSec, 3),
+      "stream_events_per_sec" -> fixed(streamRate, 0),
+      "stream_runs" -> streamRuns.map(fixed(_, 0)))
+
+    scaled match {
+      case Some((n, dir)) =>
+        val secs = timed.map(t => (t.name, t.dir) -> t.sec).toMap
+        val first = benched.map(d => Scale.Row(d.name, secs((d.name, sfDir)), secs((d.name, dir))))
+        val detail = Measure.json(Scale.judge(spark, sfDir, dir, n, first, timeOn) ++ host ++
+          obj("queries_raw" -> obj("base" -> figures(rawOn(sfDir), 3),
+            "scaled" -> figures(rawOn(dir), 3))))
+        write("target/bench_scale.json", detail)
+        println(detail.take(1800))
+        spark.stop()
+        return
+      case None =>
     }
+
+    val results = timed.map(t => t.name -> t.sec)
+    val raw = rawOn(sfDir)
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val (worstName, worstSec) =
       if (results.isEmpty) ("", 0.0) else results.maxBy(_._2)
@@ -130,20 +186,14 @@ object Bench {
     val comparable = ref.filter(r =>
       windowRatio > 0 && r.sf == sfDir && r.cores == cores).map(_.queries)
     val (rechecked, confirmed) =
-      regressions(results, comparable.getOrElse(Map.empty), windowRatio, timeOne)
+      regressions(results, comparable.getOrElse(Map.empty), windowRatio, timeOn(_, sfDir))
 
     // Full per-query detail is too big for the driver's log tail (it keeps
     // only the last ~2000 chars of stdout), so it goes to files.
     val artifact = if (only.nonEmpty) "target/bench_partial.json" else "target/bench.json"
     val detail = Measure.json(obj(
       "metric" -> "total", "value" -> fixed(total, 3), "unit" -> "sec", "sf" -> sfDir,
-      "cores" -> cores, "nproc" -> Measure.nproc, "calib_ms" -> fixed(calibMs, 3),
-      "calib_runs" -> calibRuns.map(fixed(_, 3)),
-      "reference" -> (if (comparable.isDefined) Measure.RefFile else ""),
-      "window_ratio" -> fixed(windowRatio, 3), "window" -> window, "full_rerun" -> fullRerun,
-      "staging_sec" -> fixed(stagingSec, 3),
-      "stream_events_per_sec" -> fixed(streamRate, 0),
-      "stream_runs" -> streamRuns.map(fixed(_, 0)),
+      "reference" -> (if (comparable.isDefined) Measure.RefFile else "")) ++ host ++ obj(
       "queries" -> figures(results, 3), "queries_raw" -> figures(raw, 3),
       "regressions" -> confirmed.map { case (n, prev, now, r) =>
         obj("query" -> n, "prev" -> fixed(prev, 3), "best_sec" -> fixed(now, 3),
@@ -154,11 +204,7 @@ object Bench {
           "solo_sec" -> fixed(r.solo, 3),
           "solo_ratio" -> fixed(if (r.ref > 0 && r.solo > 0) r.solo / r.ref else -1.0, 2))
       }))
-    for (p <- artifact +: (if (refresh) Seq(Measure.RefFile) else Seq.empty)) {
-      val path = Graft.repoFile(p)
-      java.nio.file.Files.createDirectories(path.toAbsolutePath.getParent)
-      java.nio.file.Files.write(path, detail.getBytes("UTF-8"))
-    }
+    for (p <- artifact +: (if (refresh) Seq(Measure.RefFile) else Seq.empty)) write(p, detail)
 
     // The stdout contract line itself must fit the tail budget, so it
     // carries the totals plus a representative headline subset, trimmed
@@ -192,6 +238,13 @@ object Bench {
       .getOrElse(compactLine(0))
     println(line)
     spark.stop()
+  }
+
+  /** Writes `text` to the repo-rooted `path`. */
+  private def write(path: String, text: String): Unit = {
+    val file = Graft.repoFile(path)
+    java.nio.file.Files.createDirectories(file.toAbsolutePath.getParent)
+    java.nio.file.Files.write(file, text.getBytes("UTF-8"))
   }
 
   /** Per-query seconds as an ordered JSON object of `dp`-decimal figures. */

@@ -92,6 +92,9 @@ object Graft {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // events.ts ships as TIMESTAMP(NANOS) in some fixture vintages, which
+      // the vectorized reader accepts only as raw long nanos
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     LocalFs.confs.foreach { case (k, v) => builder.config(k, v) }
     fastLocalDir().foreach(d => builder.config("spark.local.dir", d))
     val spark = builder.getOrCreate()
@@ -222,8 +225,9 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
   /** `events.ts` has shipped as two different parquet types across fixture
     * generations: TIMESTAMP(NANOS) — which Spark's vectorized reader only
-    * accepts as long nanos via the legacy conf, truncated here to µs with
-    * exact integer division (the same truncation DuckDB applies) — and
+    * accepts as long nanos via the legacy conf that [[Graft.session]] sets,
+    * truncated here to µs with exact integer division (the same truncation
+    * DuckDB applies) — and
     * plain µs TIMESTAMP without UTC adjustment, which Spark reads as
     * TIMESTAMP_NTZ. Both are normalized to a session-zone TIMESTAMP at µs
     * precision (the session zone is pinned to UTC engine-wide), matching
@@ -231,7 +235,6 @@ object Tables {
     * fixture vintage.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

@@ -11,12 +11,11 @@ import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.SparkSession
 
-/** The measurement core that [[Bench]], [[BenchScale]] and [[BenchScale100]]
-  * share: one session set-up, one warm-and-stage step, one timer with its
-  * post-timing hygiene, one host loop and window grade, one stream-rate
-  * figure, one median and one JSON reader and writer. Every figure these
-  * mains report is measured the same way, so a change to the protocol is
-  * made here once.
+/** The measurement core of [[Bench]], plain or `--scale`: one
+  * warm-and-stage step, one timer with its post-timing hygiene, one host
+  * loop and window grade, one stream-rate figure, one median and one JSON
+  * reader and writer. Every figure a run reports is measured the same way,
+  * so a change to the protocol is made here once.
   */
 object Measure {
   /** The committed same-host reference: a full sweep's artifact, written
@@ -26,16 +25,6 @@ object Measure {
 
   /** The host's core count, the thread count of the host loop. */
   val nproc: Int = Runtime.getRuntime.availableProcessors
-
-  /** A session on `SPARK_GRAFT_CPUS` cores (`defaultCores` when unset) that
-    * reads `events.ts` (TIMESTAMP(NANOS)) as raw longs, which the warm-up
-    * scan of every table needs.
-    */
-  def session(appName: String, defaultCores: Int): SparkSession = {
-    val spark = Graft.session(Graft.localMaster(defaultCores), appName)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark
-  }
 
   /** Warms `dir` (parquet footers, buffer cache, scan codegen: a `count()`
     * of every fixture table), then runs `stage` on it and returns the

@@ -29,7 +29,8 @@ object Scratch {
     p.toString
   }
 
-  private def deleteRecursively(root: Path): Unit =
+  /** Removes `root` and everything under it, if it exists; best effort. */
+  def deleteRecursively(root: Path): Unit =
     try {
       if (Files.exists(root)) {
         val walk = Files.walk(root)

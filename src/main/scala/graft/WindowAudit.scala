@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Sweep-level guard logic for unpartitioned windows (shared by the
-  * WindowGuard test and the one-off audit main below).
+/** Sweep-level guard logic for unpartitioned windows, run over every
+  * declared query by OperatorSmokeSpec's window guards.
   *
   * An unpartitioned `Window` moves ALL its input to one partition — fine
   * on a frame whose size is bounded by the calendar or a value domain
@@ -115,25 +115,5 @@ object WindowAudit {
         _: Deduplicate | _: RepartitionOperation =>
       collapsed(p.children.head)
     case _ => false
-  }
-
-  /** Audit main: prints `name  n_unpartitioned  all_collapsed` for every
-    * declared query that has at least one unpartitioned window.
-    */
-  def main(args: Array[String]): Unit = {
-    val sfDir = Graft.fixtureDir("/root/testdata/sf0.001")
-    val spark = Graft.session(Graft.localMaster(8), "graft-window-audit")
-    SparkEntry.allDefs.foreach { d =>
-      try {
-        val plan = d.run(spark, sfDir).queryExecution.optimizedPlan
-        val ws = unpartitioned(plan)
-        if (ws.nonEmpty)
-          println(s"[windowaudit] ${d.name} ${ws.size} ${ws.forall(collapsedBelow)}")
-      } catch {
-        case e: Throwable =>
-          println(s"[windowaudit] ${d.name} ERROR ${e.getMessage}")
-      }
-    }
-    spark.stop()
   }
 }

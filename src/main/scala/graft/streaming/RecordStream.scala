@@ -97,13 +97,13 @@ object RecordStream {
     */
   private def eventsFile(dir: String): Seq[String] = Seq(s"$dir/events.parquet")
 
-  /** On-disk type of the fixture's ts column under the legacy-nanos conf:
-    * LongType for TIMESTAMP(NANOS) vintages, TIMESTAMP_NTZ for µs ones.
+  /** On-disk type of the fixture's ts column under the session's
+    * legacy-nanos conf: LongType for TIMESTAMP(NANOS) vintages,
+    * TIMESTAMP_NTZ for µs ones.
     * One parquet-footer read per fixture, memoized.
     */
   private def tsDiskType(spark: SparkSession, dir: String): DataType =
     graft.Derived.get(spark, "stream.tsDiskType", eventsFile(dir)) {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
     }
 
@@ -114,7 +114,6 @@ object RecordStream {
   }
 
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType = tsDiskType(spark, dir)
     normalizeTs(
       spark.readStream
@@ -136,7 +135,6 @@ object RecordStream {
     */
   def eventsStreamWithSentinels(spark: SparkSession, dir: String,
       filesPerTrigger: Int = 1): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType = tsDiskType(spark, dir)
     // staging costs three small Spark write jobs, so it runs once per
     // fixture and session — bench timings then measure the stream, not

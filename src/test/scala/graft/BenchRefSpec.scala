@@ -2,9 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench's one regression channel, as pure functions of sweep figures,
-  * a reference and a solo re-measure callback, and the committed same-host
-  * reference it reads.
+/** The one measurement main: its arguments, its sweep loop and its
+  * regression channel, as pure functions of sweep figures, a reference and
+  * a re-measure callback, and the committed same-host reference it reads.
   */
 class BenchRefSpec extends AnyFunSuite {
 
@@ -71,5 +71,41 @@ class BenchRefSpec extends AnyFunSuite {
     assert(ref.queries.size == SparkEntry.allDefs.size)
     val failed = ref.queries.filter(_._2 <= 0).keys
     assert(failed.isEmpty, s"non-positive reference figures: ${failed.mkString(", ")}")
+  }
+
+  test("arguments: --refresh stands alone, --scale takes a positive integer") {
+    assert(Bench.parseArgs(Nil) == Bench.Args(refresh = false, scale = None, only = Set.empty))
+    assert(Bench.parseArgs(Seq("--refresh")).refresh)
+    assert(Bench.parseArgs(Seq("--scale", "100", "q1", "q2")) ==
+      Bench.Args(refresh = false, scale = Some(100), only = Set("q1", "q2")))
+    assert(Bench.parseArgs(Seq("q1", "--scale", "10")).scale.contains(10))
+    for (bad <- Seq(Seq("--refresh", "--scale", "10"), Seq("--scale", "10", "--refresh"),
+        Seq("--refresh", "q1"), Seq("--scale"), Seq("--scale", "0"), Seq("--scale", "-2"),
+        Seq("--scale", "ten"), Seq("--scale", "q1")))
+      intercept[IllegalArgumentException](Bench.parseArgs(bad))
+  }
+
+  test("the sweep times a query's corpora back to back and judges outliers per corpus") {
+    val calls = Seq.newBuilder[(String, String)]
+    val secs = Map(("a", "x") -> 0.2, ("a", "y") -> 6.0, ("b", "x") -> 0.2, ("b", "y") -> 6.5,
+      ("c", "x") -> 6.0, ("c", "y") -> 6.0)
+    val timed = Bench.sweep(Seq("a", "b", "c"), Seq("x", "y"), fullRerun = false, { (n, d) =>
+      calls += ((n, d))
+      secs((n, d))
+    })
+    // c on x is 30x its corpus's median; every figure on y is within 5x of y's
+    assert(calls.result() == Seq(("a", "x"), ("a", "y"), ("b", "x"), ("b", "y"), ("c", "x"),
+      ("c", "y"), ("c", "x")))
+    assert(timed.map(t => (t.name, t.dir, t.raw)) == Seq(("a", "x", None), ("a", "y", None),
+      ("b", "x", None), ("b", "y", None), ("c", "x", Some(6.0)), ("c", "y", None)))
+    val twice = Bench.sweep(Seq("a"), Seq("x", "y"), fullRerun = true, (_, _) => 1.0)
+    assert(twice.forall(_.raw.contains(1.0)))
+  }
+
+  test("src/main has one measurement main, besides the correctness and plan mains") {
+    SourceSweep.guard("""def main\(""".r, owner = "", Map(
+      ("graft/Bench.scala", "def main(args: Array[String]): Unit = {") -> "the measurement main",
+      ("graft/Verify.scala", "def main(args: Array[String]): Unit = {") -> "the oracle dump",
+      ("graft/Explain.scala", "def main(args: Array[String]): Unit = {") -> "the plan audit"))
   }
 }

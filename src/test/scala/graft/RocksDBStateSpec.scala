@@ -37,6 +37,27 @@ class RocksDBStateSpec extends AnyFunSuite {
     assert(provider.toLowerCase.contains("rocksdb"), s"metrics: $provider")
   }
 
+  test("a drained declared stream's collected progress reaches its last committed batch") {
+    // a session-wide checkpoint root keeps the memory sink's checkpoint
+    // (named after the query) after the query stops, so its commit log
+    // can be read back
+    val root = Scratch.dir("graft_rocks_progress_")
+    val key = "spark.sql.streaming.checkpointLocation"
+    val d = SparkEntry.allDefs.find(_.name == "stream_stateful_user_stats").get
+    spark.conf.set(key, root)
+    val (sec, progress) =
+      try Scale.progressOf(spark)(Measure.timeOne(spark, d, "/root/testdata/sf0.001"))
+      finally spark.conf.unset(key)
+    assert(sec > 0)
+    val got = progress.getOrElse(fail("no termination event within the timeout"))
+    val commits = new java.io.File(s"$root/stream_stateful_sink/commits").list()
+      .filter(_.forall(_.isDigit)).map(_.toLong)
+    assert(commits.nonEmpty)
+    assert(got.map(_.batchId).max == commits.max)
+    assert(got.exists(_.stateOperators.exists(
+      _.customMetrics.toString.toLowerCase.contains("rocksdb"))), got.map(_.json).mkString("\n"))
+  }
+
   test("state-v2 TTL purges expired keys from the checkpoint (statestore probe)") {
     // transformWithState in ProcessingTime mode self-triggers micro-batches,
     // so a deterministic "two batches, N epochs" TTL probe is impossible
